@@ -1958,8 +1958,8 @@ def colocated_aggregate_join(
     aggregates finalize locally — ``bucketed_aggregate``'s argument)
     and the result hash-joins the right table's same bucket group in
     the same task (``colocated_bucket_join``'s argument). The
-    orders-rollup-joins-headers shape of the candy pipeline
-    (``plans/candy_pipeline.py::build_orders_with_profit``, reference
+    orders-rollup-joins-headers shape of the candy pipeline's
+    table-log stages (``plans/candy_colocated.py``, reference
     `data_processor.py:310-326`) with ZERO exchange of line items,
     rollups, or headers: composing the two existing operators would
     still exchange the intermediate rollup (or re-write it as a third

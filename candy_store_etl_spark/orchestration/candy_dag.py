@@ -158,7 +158,6 @@ def run_stage(name: str, ctx: StageContext) -> None:
             li = line_items_with_profit_term(li)
         _write(li, "line_items", bucket_key="order_id" if tablelog else None)
     elif name == "build_orders":
-        txns = _read("txns")
         if tablelog:
             # the fused storage-partitioned rollup+join: headers land
             # as their own bucketed stage table, then each bucket task
@@ -167,7 +166,7 @@ def run_stage(name: str, ctx: StageContext) -> None:
             # bodies shared with plans/candy_colocated.py so the two
             # golden-parity forms cannot drift apart)
             write_bucketed(
-                dedup_headers(txns),
+                dedup_headers(_read("txns")),
                 ctx.stage("headers"),
                 key_col="order_id",
                 n_buckets=ctx.n_buckets,
@@ -180,8 +179,8 @@ def run_stage(name: str, ctx: StageContext) -> None:
             )
             _write(fused_orders_select(rolled), "orders")
         else:
-            line_items = _read("line_items")
-            _write(build_orders_with_profit(line_items, txns), "orders")
+            # the line items carry the order headers: one grouped pass
+            _write(build_orders_with_profit(_read("line_items")), "orders")
     elif name == "build_daily_summary":
         orders_full = _read("orders")
         _write(build_daily_summary(orders_full), "daily_summary")

@@ -9,8 +9,7 @@ resumable boundary, but each stage re-shuffles what the next one
 joins, and stage outputs have no history. This variant writes each
 stage bucketed on its join key through the table log, so:
 
-- the per-order rollup + headers join of
-  ``build_orders_with_profit`` (reference's SECOND full scan,
+- the per-order rollup + headers join (reference's SECOND full scan,
   `data_processor.py:310-326`) runs as ONE task wave over aligned
   bucket groups (``colocated_aggregate_join``) — at 100 TB that
   stage shuffles no table data at all (the routing relation arrives
@@ -339,9 +338,7 @@ def ingest_days(
     if tag in _meta_tags(li_dir, "day"):
         return False
 
-    txns = load_daily_transactions(spark, day_paths).transform(
-        tracked_cache
-    )
+    txns = load_daily_transactions(spark, day_paths)
     # remaining stock = catalog stock minus MERGED usage: the one
     # carried state the sequential greedy allocation needs (per
     # product — dimension-sized, never the line-item history)
@@ -359,9 +356,9 @@ def ingest_days(
         )
     else:
         day_products = products
-    li_day = line_items_with_profit_term(
-        build_line_items(txns, day_products)
-    ).join(F.broadcast(dedup_headers(txns)), "order_id")
+    # the line items carry their order headers (order_datetime,
+    # customer_id), which the insert-only orders view folds
+    li_day = line_items_with_profit_term(build_line_items(txns, day_products))
     write_bucketed(
         li_day,
         li_dir,

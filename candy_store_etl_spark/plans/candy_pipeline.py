@@ -9,14 +9,22 @@ passes + join) → Prophet forecast on collected arrays.
 
 This pipeline produces byte-compatible outputs with one scan of the
 transactions, zero ``collect()`` of fact data, and the allocation
-running distributed (operators/allocation.py):
+running distributed (operators/allocation.py). The transactions are
+consumed once: each line item carries its order's header
+(``order_datetime``, ``customer_id``) through the allocation, so the
+orders rollup needs no second branch over the transactions:
 
-    transactions ──┬─ headers (dedup) ────────────┐
-                   └─ posexplode items → filter → ⋈ products(price,cost)
-                        → allocate_greedy (groupBy product)
-                        → line_items ─ rollup per order ─ ⋈ headers → orders
-                                     └ final_stock → products_updated
-                        orders ⋈ order profit → daily_summary → forecast
+    transactions → posexplode items (+ header) → filter
+        → ⋈ products(price,cost) → allocate_greedy (groupBy product)
+        → line_items ─┬─ groupBy order (header of first occurrence)
+                      │     → orders (with profit) → daily_summary
+                      │                                 → forecast
+                      └─ used stock per product → products_updated
+
+The report outputs each end in one sorted partition
+(``repartition(1).sortWithinPartitions``): ``save_single_csv`` writes
+them through one task anyway, so a global ``orderBy``'s range exchange
+and its sampling job buy nothing.
 
 Ordering policy: the reference's scan order is *file order* (SURVEY
 §2.3 — its README claims chronological, but simulation proves file
@@ -82,16 +90,23 @@ def build_line_items(
     transactions: DataFrame, products: DataFrame
 ) -> DataFrame:
     """order_line_items with allocation applied (reference
-    `data_processor.py:136-287`, minus the driver round-trip)."""
+    `data_processor.py:136-287`, minus the driver round-trip). Each
+    line carries its order's header (``order_datetime``,
+    ``customer_id``) through the allocation, so the orders rollup reads
+    only the line items."""
     items = (
         transactions.select(
             F.col("transaction_id").alias("order_id"),
+            F.col("timestamp").alias("order_datetime"),
+            "customer_id",
             "day_idx",
             "row_in_file",
             F.posexplode("items").alias("item_idx", "item"),
         )
         .select(
             "order_id",
+            "order_datetime",
+            "customer_id",
             "day_idx",
             "row_in_file",
             "item_idx",
@@ -128,9 +143,18 @@ def build_line_items(
         "unit_price",
         _ROUND2(F.col("allocated_qty") * F.col("unit_price")).alias("line_total"),
         F.col("cost_to_make"),
+        "order_datetime",
+        "customer_id",
         "day_idx",
         "row_in_file",
     )
+
+
+def _single_sorted(df: DataFrame, *cols: str) -> DataFrame:
+    """``df`` in one partition sorted by ``cols``: the shape of a
+    report bound for ``save_single_csv``, whose ``coalesce(1)`` writes
+    through one task anyway, without a global sort's sampling job."""
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def build_products_updated(
@@ -140,82 +164,59 @@ def build_products_updated(
     used = line_items.groupBy("product_id").agg(
         F.sum("quantity").alias("__used")
     )
-    return (
-        products.join(used, "product_id", "left")
-        .select(
+    return _single_sorted(
+        products.join(used, "product_id", "left").select(
             "product_id",
             "product_name",
             (F.col("stock") - F.coalesce("__used", F.lit(0)))
             .cast("int")
             .alias("current_stock"),
-        )
-        .orderBy("product_id")
+        ),
+        "product_id",
     )
 
 
-def build_orders_with_profit(
-    line_items: DataFrame, transactions: DataFrame
-) -> DataFrame:
-    """Per-order rollup ⋈ headers — ONE transactions scan (the
-    reference re-reads every day's collection a second time,
-    `data_processor.py:310-326`) and ONE shuffle on ``order_id``:
-    amount, item count, AND profit come out of the same grouped pass.
-    (Previously the daily summary ran a second groupBy("order_id") over
-    the same relation just for profit — same key, same rows, an entire
-    extra shuffle.) The golden ``orders`` output is this minus the
-    ``order_profit`` column."""
-    rollup = line_items.groupBy("order_id").agg(
+def build_orders_with_profit(line_items: DataFrame) -> DataFrame:
+    """Per-order rollup in ONE grouped pass over the line items (the
+    reference re-reads every day's collection a second time for the
+    headers, `data_processor.py:310-326`): amount, item count, profit
+    AND the header come out of the same shuffle on ``order_id``. The
+    header is the one of the order's first occurrence in file order
+    (``day_idx``, ``row_in_file``), so a transaction id repeated across
+    day files yields one order with totals over all its items; a
+    transaction whose items are all null has no line items and no
+    order. Unordered — the report sink sorts. The golden ``orders``
+    output is this minus the ``order_profit`` column."""
+    first = F.min_by(
+        F.struct("order_datetime", "customer_id"),
+        F.struct("day_idx", "row_in_file"),
+    )
+    return line_items.groupBy("order_id").agg(
+        first.order_datetime.alias("order_datetime"),
+        first.customer_id.alias("customer_id"),
         _ROUND2(F.sum("line_total")).alias("total_amount"),
         F.count(F.lit(1)).alias("num_items"),  # counts cancelled rows too
         F.sum(
             F.col("line_total") - F.col("quantity") * F.col("cost_to_make")
         ).alias("order_profit"),
     )
-    headers = transactions.select(
-        F.col("transaction_id").alias("order_id"),
-        F.col("timestamp").alias("order_datetime"),
-        "customer_id",
-    ).dropDuplicates(["order_id"])
-    return (
-        rollup.join(headers, "order_id")
-        .select(
-            "order_id",
-            "order_datetime",
-            "customer_id",
-            "total_amount",
-            "num_items",
-            "order_profit",
-        )
-        .orderBy("order_id")
-    )
-
-
-def build_orders(
-    line_items: DataFrame, transactions: DataFrame
-) -> DataFrame:
-    """Reference-shaped orders output (golden orders.csv schema)."""
-    return build_orders_with_profit(line_items, transactions).drop(
-        "order_profit"
-    )
 
 
 def build_daily_summary(orders_with_profit: DataFrame) -> DataFrame:
     """Per-day orders/sales/profit in ONE grouped pass over the
     profit-carrying orders relation (reference runs two grouped passes
-    + join; op 22-25)."""
-    return (
-        orders_with_profit.groupBy(
-            F.to_date("order_datetime").alias("date")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("num_orders"),
-            _ROUND2(F.sum("total_amount")).alias("total_sales"),
-            _ROUND2(F.sum("order_profit")).alias("total_profit"),
-        )
-        .orderBy("date")
-        # golden answers use padded months; the reference's yyyy-M-dd
-        # is a bug (SURVEY §2.2 op-15)
-        .withColumn("date", F.date_format("date", "yyyy-MM-dd"))
+    + join; op 22-25), in one partition sorted by date."""
+    daily = orders_with_profit.groupBy(
+        F.to_date("order_datetime").alias("date")
+    ).agg(
+        F.count(F.lit(1)).alias("num_orders"),
+        _ROUND2(F.sum("total_amount")).alias("total_sales"),
+        _ROUND2(F.sum("order_profit")).alias("total_profit"),
+    )
+    # golden answers use padded months; the reference's yyyy-M-dd is a
+    # bug (SURVEY §2.2 op-15)
+    return _single_sorted(daily, "date").withColumn(
+        "date", F.date_format("date", "yyyy-MM-dd")
     )
 
 
@@ -257,16 +258,30 @@ def run_pipeline_staged(
     stage2 = os.path.join(workdir, "orders")
     # the staged relation carries order_profit so the next stage never
     # re-aggregates line_items; the golden orders output drops it
-    write_partitioned(build_orders_with_profit(line_items, txns), stage2)
+    write_partitioned(build_orders_with_profit(line_items), stage2)
 
     orders_full = spark.read.parquet(stage2)
     daily = build_daily_summary(orders_full)
+    return _outputs(line_items, products, orders_full, daily)
+
+
+def _outputs(
+    line_items: DataFrame,
+    products: DataFrame,
+    orders_full: DataFrame,
+    daily: DataFrame,
+) -> dict[str, DataFrame]:
+    """The five reference outputs, each ready for ``save_single_csv``."""
     return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
+        "order_line_items": _single_sorted(
+            line_items.select(
+                "order_id", "product_id", "quantity", "unit_price", "line_total"
+            ),
+            "order_id",
+            "product_id",
+        ),
         "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit").orderBy("order_id"),
+        "orders": _single_sorted(orders_full.drop("order_profit"), "order_id"),
         "daily_summary": daily,
         "sales_profit_forecast": build_forecast(daily),
     }
@@ -365,25 +380,16 @@ def run_pipeline(
     products: DataFrame,
 ) -> dict[str, DataFrame]:
     """All five reference outputs from one transactions scan."""
-    # txns is consumed twice (line items + order headers) — cached, the
-    # multiLine JSON parse happens once instead of per-consumer
-    txns = load_daily_transactions(spark, transaction_paths).transform(tracked_cache)
-    line_items = build_line_items(txns, products)
-    # line_items feeds four downstream outputs → cache the (small
-    # relative to source) derived relation instead of re-deriving
-    line_items = line_items.transform(tracked_cache)
+    # the transactions are consumed once (line items carry the order
+    # headers); line_items feeds three downstream relations → cache the
+    # (small relative to source) derived relation instead of re-deriving
+    line_items = build_line_items(
+        load_daily_transactions(spark, transaction_paths), products
+    ).transform(tracked_cache)
     # the profit-carrying orders relation and the daily summary are
     # each consumed twice more (orders output + daily ← orders_full;
     # forecast ← daily); caching them cuts the re-derivation chain back
-    # to the JSON scan on every output
-    orders_full = build_orders_with_profit(line_items, txns).transform(tracked_cache)
+    # to the line items on every output
+    orders_full = build_orders_with_profit(line_items).transform(tracked_cache)
     daily = build_daily_summary(orders_full).transform(tracked_cache)
-    return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
-    }
+    return _outputs(line_items, products, orders_full, daily)

@@ -130,6 +130,9 @@ _F_WIN = 32  # tokens per training chunk
 _F_BUDGET = 512  # tokens per packed bin
 _F_SHARD = 16  # bins per output shard
 _F_MAX_CHUNKS = 4096  # per-doc chunk cap, shared with the oracle
+# the gap-free max(bin)+1 bin count in the funnel depends on it
+if not _F_WIN < _F_BUDGET:
+    raise ValueError(f"_F_WIN ({_F_WIN}) must be below _F_BUDGET ({_F_BUDGET})")
 
 
 @register(

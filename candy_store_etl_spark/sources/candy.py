@@ -15,6 +15,8 @@ The transactions relation is the one genuinely nested input: an
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -79,6 +81,9 @@ CUSTOMERS_SCHEMA = StructType(
 )
 
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
 def read_transactions(
     spark: SparkSession, path: str | list[str]
 ) -> DataFrame:
@@ -88,8 +93,39 @@ def read_transactions(
     files date-partitioned (``.../date=YYYYMMDD/``) so a ``WHERE date
     BETWEEN`` prunes partitions instead of a per-day driver loop
     (reference anti-pattern, `data_processor.py:172`).
+
+    A list naming more than the session's listing threshold (32 by
+    default) of existing local files is read without Spark's parallel
+    file-listing job: the paths are already known leaf files, and that
+    job only re-stats them. The threshold is raised for this one eager
+    ``.json()`` call and restored afterwards; globs, directories and
+    short lists keep Spark's default listing.
     """
-    return spark.read.schema(TRANSACTIONS_SCHEMA).option("multiLine", "true").json(path)
+    reader = spark.read.schema(TRANSACTIONS_SCHEMA).option("multiLine", "true")
+    old = spark.conf.get(_LISTING_THRESHOLD, None)
+    if not _known_local_files(path, int(old or 32)):
+        return reader.json(path)
+    spark.conf.set(_LISTING_THRESHOLD, str(len(path)))
+    try:
+        return reader.json(path)
+    finally:
+        if old is None:
+            spark.conf.unset(_LISTING_THRESHOLD)
+        else:
+            spark.conf.set(_LISTING_THRESHOLD, old)
+
+
+def _known_local_files(path: str | list[str], threshold: int) -> bool:
+    """True when ``path`` lists more than ``threshold`` plain local
+    paths (no glob characters), each an existing file."""
+    return (
+        not isinstance(path, str)
+        and len(path) > threshold
+        and all(
+            not any(c in p for c in "*?[]{}\\") and os.path.isfile(p)
+            for p in path
+        )
+    )
 
 
 def read_products(spark: SparkSession, path: str) -> DataFrame:

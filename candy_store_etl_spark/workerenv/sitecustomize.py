@@ -17,8 +17,8 @@ This module is imported automatically by ``site`` at worker startup
 (the engine's session builder appends its directory to
 ``spark.executorEnv.PYTHONPATH``). It prunes the spark zips from
 ``sys.path`` ONLY when pyspark and py4j still resolve without them
-AND the unpacked pyspark carries the exact same version string —
-otherwise the path is left untouched. Disable with
+AND each unpacked package carries the exact same version string as its
+zip — otherwise the path is left untouched. Disable with
 ``SPARK_GRAFT_KEEP_ZIP_IMPORTS=1``. No pyspark code is modified; this
 is environment hygiene, valid on any deployment where workers carry
 both a zip and an unpacked install of the same pyspark.
@@ -33,12 +33,12 @@ _VERSION_RE = re.compile(
 )
 
 
-def _zip_version(zip_path: str):
+def _zip_version(zip_path: str, package: str = "pyspark"):
     import zipfile
 
     try:
         with zipfile.ZipFile(zip_path) as z:
-            src = z.read("pyspark/version.py").decode("utf-8")
+            src = z.read(f"{package}/version.py").decode("utf-8")
     except Exception:
         return None
     m = _VERSION_RE.search(src)
@@ -54,6 +54,11 @@ def _dir_version(spec_origin: str):
         return None
     m = _VERSION_RE.search(src)
     return m.group(1) if m else None
+
+
+def _same_version(zip_path: str, package: str, spec_origin: str) -> bool:
+    zv = _zip_version(zip_path, package)
+    return zv is not None and zv == _dir_version(spec_origin)
 
 
 def _prune_spark_zip_paths() -> None:
@@ -72,6 +77,7 @@ def _prune_spark_zip_paths() -> None:
     # prune them alongside the zips
     jars = [p for p in sys.path if p.endswith(".jar")]
     pyspark_zips = [p for p in zips if "pyspark" in os.path.basename(p)]
+    py4j_zips = [p for p in zips if "py4j" in os.path.basename(p)]
     if not zips or not pyspark_zips:
         return
     pruned = set(zips) | set(jars)
@@ -83,12 +89,12 @@ def _prune_spark_zip_paths() -> None:
 
         ps = importlib.util.find_spec("pyspark")
         p4 = importlib.util.find_spec("py4j")
-        if ps is None or p4 is None or ps.origin is None:
+        if ps is None or p4 is None or ps.origin is None or p4.origin is None:
             sys.path[:] = old
             return
-        zv = _zip_version(pyspark_zips[0])
-        dv = _dir_version(ps.origin)
-        if zv is None or dv is None or zv != dv:
+        checks = [(pyspark_zips[0], "pyspark", ps.origin)]
+        checks += [(z, "py4j", p4.origin) for z in py4j_zips]
+        if not all(_same_version(*c) for c in checks):
             sys.path[:] = old
             return
         # keep the pruned path — and evict the archive importers that

@@ -8,7 +8,29 @@ directory parsing (measured r13; 60% of worker main)."""
 
 from __future__ import annotations
 
+import importlib.util
+from pathlib import Path
+
 from pyspark.sql.types import StructField, StringType, StructType
+
+_SITECUSTOMIZE = (
+    Path(__file__).resolve().parents[1]
+    / "candy_store_etl_spark"
+    / "workerenv"
+    / "sitecustomize.py"
+)
+
+
+def _load_sitecustomize():
+    """The worker module as a fresh module object. Importing it RUNS the
+    prune against this process's path — harmless (no spark zips here),
+    and gives us the functions."""
+    spec = importlib.util.spec_from_file_location(
+        "wkr_sitecustomize", _SITECUSTOMIZE
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 def test_workers_resolve_pyspark_unpacked_with_no_archive_importers(spark):
@@ -54,17 +76,9 @@ def test_workers_resolve_pyspark_unpacked_with_no_archive_importers(spark):
 def test_prune_guards(tmp_path, monkeypatch):
     """The prune must refuse when versions differ or resolution without
     the zips fails — sys.path is restored untouched."""
-    import importlib.util
     import sys
 
-    spec = importlib.util.spec_from_file_location(
-        "wkr_sitecustomize",
-        "/root/repo/candy_store_etl_spark/workerenv/sitecustomize.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    # importing the module RUNS the prune against this process's path —
-    # harmless (no spark zips here), and gives us the functions
-    spec.loader.exec_module(mod)
+    mod = _load_sitecustomize()
 
     # version reader: zip + dir forms, single- and double-quoted
     import zipfile
@@ -84,3 +98,42 @@ def test_prune_guards(tmp_path, monkeypatch):
     before = sys.path[:]
     mod._prune_spark_zip_paths()
     assert sys.path == before
+
+
+def test_prune_keeps_zips_when_py4j_version_differs(tmp_path, monkeypatch):
+    """A pyspark zip matching the unpacked install is not enough: a py4j
+    zip whose version differs from the unpacked py4j keeps every zip on
+    the path. With matching py4j versions the same path is pruned."""
+    import sys
+    import zipfile
+
+    import py4j.version
+    import pyspark
+
+    mod = _load_sitecustomize()
+    monkeypatch.delenv("SPARK_GRAFT_KEEP_ZIP_IMPORTS", raising=False)
+
+    ps_zip = tmp_path / "pyspark.zip"
+    with zipfile.ZipFile(ps_zip, "w") as f:
+        f.writestr(
+            "pyspark/version.py", f"__version__ = '{pyspark.__version__}'\n"
+        )
+
+    def path_with_py4j_zip(version: str) -> list[str]:
+        z = tmp_path / f"py4j-{version}-src.zip"
+        with zipfile.ZipFile(z, "w") as f:
+            f.writestr("py4j/version.py", f"__version__ = '{version}'\n")
+        return [p for p in sys.path if not p.endswith((".zip", ".jar"))] + [
+            str(ps_zip),
+            str(z),
+        ]
+
+    mismatched = path_with_py4j_zip("0.0.1")
+    monkeypatch.setattr(sys, "path", mismatched[:])
+    mod._prune_spark_zip_paths()
+    assert sys.path == mismatched
+
+    matched = path_with_py4j_zip(py4j.version.__version__)
+    monkeypatch.setattr(sys, "path", matched[:])
+    mod._prune_spark_zip_paths()
+    assert sys.path == matched[:-2]
