@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import table_log as tl
+from ..sources.footer_stats import file_stats, keep_file
 from ..streaming.cdc import (
     _group_of_name,
     _stage_groups_into_table,
@@ -147,11 +148,7 @@ def write_bucketed(
         f"w{0 if latest is None else latest + 1}"
         f"p{os.getpid()}u{uuid.uuid4().hex[:6]}",
     )
-    stats = (
-        tl._file_stats(table_dir, names, list(stats_cols))
-        if stats_cols
-        else None
-    )
+    stats = file_stats(table_dir, names, stats_cols) if stats_cols else None
     # extra_meta rides the same commit (e.g. an ingest ledger tag a
     # caller uses for append idempotence); layout-authoritative keys
     # are reserved — "bucket" always wins on collision, and
@@ -1314,11 +1311,7 @@ def serve_range_batch(
         per_probe_sum = 0
         for _, lo, hi in range_rows:
             for p in files:
-                entry = stats.get(os.path.basename(p), {})
-                if entry.get("rows") == 0:
-                    continue
-                st = entry.get("cols", {}).get(column)
-                if st is None or (st["min"] <= hi and st["max"] >= lo):
+                if keep_file(stats, p, column, lo, hi):
                     union[p] = None
                     per_probe_sum += 1
         info["route"] = "stats-pruned"
@@ -1668,20 +1661,6 @@ def _split_skewed_groups(
     return out
 
 
-def _prune_files_by_stats(
-    stats: dict, files: list[str], column: str, lo, hi
-) -> list[str]:
-    kept = []
-    for p in files:
-        entry = stats.get(os.path.basename(p), {})
-        if entry.get("rows") == 0:
-            continue
-        st = entry.get("cols", {}).get(column)
-        if st is None or (st["min"] <= hi and st["max"] >= lo):
-            kept.append(p)
-    return kept
-
-
 def prune_tasks_by_left_stats(
     tasks: list[tuple[int, list[str], list[str]]],
     left_dir: str,
@@ -1713,7 +1692,7 @@ def prune_tasks_by_left_stats(
     out: list[tuple[int, list[str], list[str]]] = []
     kept_n = total = 0
     for g, lf, rf in tasks:
-        kept = _prune_files_by_stats(stats, lf, column, lo, hi)
+        kept = [p for p in lf if keep_file(stats, p, column, lo, hi)]
         total += len(lf)
         kept_n += len(kept)
         if kept or keep_empty_left:
@@ -1745,7 +1724,7 @@ def prune_tasks_by_right_stats(
     out: list[tuple[int, list[str], list[str]]] = []
     kept_n = total = 0
     for g, lf, rf in tasks:
-        kept = _prune_files_by_stats(stats, rf, column, lo, hi)
+        kept = [p for p in rf if keep_file(stats, p, column, lo, hi)]
         total += len(rf)
         kept_n += len(kept)
         if kept or keep_empty_right:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import tracked_cache
+from ..sources.footer_stats import keep_file
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -1144,11 +1145,7 @@ def ivf_append_to_index_log(
     spark = emb_new.sparkSession
     files = tl.snapshot_files(table_dir, version=v)
     stats = tl.snapshot_file_stats(table_dir, version=v)
-    cent_files = [
-        p
-        for p in files
-        if (r := _log_stat_range(stats, p, "is_cent")) is None or r[1] >= 1
-    ]
+    cent_files = [p for p in files if keep_file(stats, p, "is_cent", 1, 1)]
     cents = (
         spark.read.parquet(*cent_files)
         .filter(F.col("is_cent") == 1)
@@ -1170,14 +1167,6 @@ def ivf_append_to_index_log(
         .sortWithinPartitions("list_id")
     )
     return tl.append(vectors, table_dir, stats_cols=["list_id", "is_cent"])
-
-
-def _log_stat_range(stats: dict, path: str, col: str):
-    import os
-
-    entry = stats.get(os.path.basename(path), {})
-    st = entry.get("cols", {}).get(col)
-    return None if st is None else (st["min"], st["max"])
 
 
 def ivf_query_index_log(
@@ -1211,11 +1200,7 @@ def ivf_query_index_log(
     def _reader():
         return spark.read.schema(schema) if schema is not None else spark.read
 
-    def may_contain(path: str, col: str, val: int) -> bool:
-        rng = _log_stat_range(stats, path, col)
-        return rng is None or (rng[0] <= val <= rng[1])
-
-    cent_files = [p for p in files if may_contain(p, "is_cent", 1)]
+    cent_files = [p for p in files if keep_file(stats, p, "is_cent", 1, 1)]
     cents = (
         _reader().parquet(*cent_files)
         .filter(F.col("is_cent") == 1)
@@ -1237,8 +1222,8 @@ def ivf_query_index_log(
     kept = [
         p
         for p in files
-        if may_contain(p, "is_cent", 0)
-        and any(may_contain(p, "list_id", lid) for lid in probes)
+        if keep_file(stats, p, "is_cent", 0, 0)
+        and any(keep_file(stats, p, "list_id", lid, lid) for lid in probes)
     ]
     qlit = F.array(*[F.lit(x).cast("long") for x in q])
     if not kept:
@@ -1291,11 +1276,7 @@ def ivf_query_index_log_batch(
     def _reader():
         return spark.read.schema(schema) if schema is not None else spark.read
 
-    def may_contain(path: str, col: str, val: int) -> bool:
-        rng = _log_stat_range(stats, path, col)
-        return rng is None or (rng[0] <= val <= rng[1])
-
-    cent_files = [p for p in files if may_contain(p, "is_cent", 1)]
+    cent_files = [p for p in files if keep_file(stats, p, "is_cent", 1, 1)]
     cents = (
         _reader().parquet(*cent_files)
         .filter(F.col("is_cent") == 1)
@@ -1321,8 +1302,8 @@ def ivf_query_index_log_batch(
     kept = [
         p
         for p in files
-        if may_contain(p, "is_cent", 0)
-        and any(may_contain(p, "list_id", lid) for lid in union_probes)
+        if keep_file(stats, p, "is_cent", 0, 0)
+        and any(keep_file(stats, p, "list_id", lid, lid) for lid in union_probes)
     ]
     probes_df = spark.createDataFrame(
         probe_rows, "qid int, list_id long"

@@ -39,6 +39,7 @@ from .candy_pipeline import (
     build_forecast,
     build_line_items,
     build_products_updated,
+    first_header,
     load_daily_transactions,
 )
 
@@ -65,12 +66,20 @@ def line_items_with_profit_term(li: DataFrame) -> DataFrame:
 
 
 def dedup_headers(txns: DataFrame) -> DataFrame:
-    """One header row per order (reference's dropDuplicates)."""
-    return txns.select(
-        F.col("transaction_id").alias("order_id"),
-        F.col("timestamp").alias("order_datetime"),
-        "customer_id",
-    ).dropDuplicates(["order_id"])
+    """One header row per order, taken from its first occurrence in
+    file order (``first_header``; the reference's dropDuplicates keeps
+    an arbitrary one)."""
+    return (
+        txns.select(
+            F.col("transaction_id").alias("order_id"),
+            F.col("timestamp").alias("order_datetime"),
+            "customer_id",
+            "day_idx",
+            "row_in_file",
+        )
+        .groupBy("order_id")
+        .agg(*first_header())
+    )
 
 
 def fused_orders_select(rolled: DataFrame) -> DataFrame:
@@ -257,8 +266,7 @@ def ingest_days(
             F.sum("line_total").alias("amount_raw"),
             F.count(F.lit(1)).alias("num_items"),
             F.sum("profit_term").alias("order_profit"),
-            F.max("order_datetime").alias("order_datetime"),
-            F.max("customer_id").alias("customer_id"),
+            *first_header(),
         )
         write_bucketed(
             rows,

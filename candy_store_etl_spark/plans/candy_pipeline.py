@@ -176,24 +176,35 @@ def build_products_updated(
     )
 
 
+def first_header() -> list:
+    """``order_datetime`` and ``customer_id`` of an order's first
+    occurrence in file order (``day_idx``, ``row_in_file``), as
+    aggregate columns over rows carrying those four columns — the ONE
+    header rule of every candy form, so a transaction id repeated
+    across day files gets the same header whichever form built it."""
+    first = F.min_by(
+        F.struct("order_datetime", "customer_id"),
+        F.struct("day_idx", "row_in_file"),
+    )
+    return [
+        first.order_datetime.alias("order_datetime"),
+        first.customer_id.alias("customer_id"),
+    ]
+
+
 def build_orders_with_profit(line_items: DataFrame) -> DataFrame:
     """Per-order rollup in ONE grouped pass over the line items (the
     reference re-reads every day's collection a second time for the
     headers, `data_processor.py:310-326`): amount, item count, profit
     AND the header come out of the same shuffle on ``order_id``. The
     header is the one of the order's first occurrence in file order
-    (``day_idx``, ``row_in_file``), so a transaction id repeated across
+    (``first_header``), so a transaction id repeated across
     day files yields one order with totals over all its items; a
     transaction whose items are all null has no line items and no
     order. Unordered — the report sink sorts. The golden ``orders``
     output is this minus the ``order_profit`` column."""
-    first = F.min_by(
-        F.struct("order_datetime", "customer_id"),
-        F.struct("day_idx", "row_in_file"),
-    )
     return line_items.groupBy("order_id").agg(
-        first.order_datetime.alias("order_datetime"),
-        first.customer_id.alias("customer_id"),
+        *first_header(),
         _ROUND2(F.sum("line_total")).alias("total_amount"),
         F.count(F.lit(1)).alias("num_items"),  # counts cancelled rows too
         F.sum(

@@ -602,8 +602,8 @@ def table_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The table format's read path end-to-end: the documents table "
     "is committed into a sources/table_log.py table whose compaction "
     "is range-partitioned on doc_id with per-file [min, max] stats "
-    "embedded in the COMMIT entry (the Iceberg-manifest half, merged "
-    "from file_index's footer probe — one sweep at write time), and "
+    "embedded in the COMMIT entry (the Iceberg-manifest half, folded "
+    "by sources/footer_stats.py — one sweep at write time), and "
     "the range query is answered by read_snapshot_pruned, which plans "
     "the file list FROM THE LOG with zero read-time footer I/O. "
     "Pruning is provably lossless (the oracle is the plain filtered "

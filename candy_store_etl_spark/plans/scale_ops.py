@@ -103,7 +103,8 @@ def _bench_gram_estimate(spark, sf_dir: str, bench_grams) -> int:
     but the fallback stays exact: stats-less layouts (directory
     datasets) fall back to counting the gram relation, which doubles
     as the cache-filling pass the r12 form always ran."""
-    from ..sources.tpch import column_size_stats, table_path
+    from ..sources.footer_stats import column_size_stats
+    from ..sources.tpch import table_path
 
     stats = column_size_stats(table_path(sf_dir, "documents"), "text")
     if stats is None:

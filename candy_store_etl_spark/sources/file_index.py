@@ -17,80 +17,42 @@ per file of metadata — still far cheaper than scheduling a task per
 file — and is driver-side metadata work, the same place Delta reads
 its transaction log.
 
-Only TOP-LEVEL PRIMITIVE columns can be indexed: parquet row-group
-statistics address LEAF columns, and mapping an arrow field position
-onto leaves is wrong the moment a nested column precedes the target —
-``collect_file_stats`` therefore resolves the column by its leaf
-``path_in_schema`` and rejects nested paths outright.
+Footer reading, the per-file [min, max] fold and the lossless
+keep-file rule live in ``footer_stats``; this module owns only the
+manifest format and the pruned read. Only TOP-LEVEL PRIMITIVE columns
+can be indexed (``footer_stats.leaf_index`` rejects nested paths).
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from . import footer_stats
 
 MANIFEST_NAME = "_stats_manifest.json"
 
 
-def _leaf_index(md, column: str) -> int:
-    """Parquet LEAF index of a top-level primitive column, resolved by
-    path_in_schema (never by arrow field position — a struct or list
-    earlier in the schema has multiple/offset leaves)."""
-    hits = [
-        i
-        for i in range(len(md.schema))
-        if md.schema.column(i).path.split(".")[0] == column
-    ]
-    if len(hits) != 1 or md.schema.column(hits[0]).path != column:
-        raise ValueError(
-            f"{column!r} is not a top-level primitive column "
-            f"(leaf paths: {[md.schema.column(i).path for i in hits]})"
-        )
-    return hits[0]
-
-
-def _coerce(v):
-    """Keep stats JSON-native and ORDER-comparable: ints/floats/bools
-    pass through; anything else (Decimal, date, bytes) becomes a
-    string and the file is treated as stats-less rather than risking
-    lexicographic comparison of numerics."""
-    return v if isinstance(v, (int, float, bool, str)) else None
-
-
-def collect_file_stats(path: str, column: str) -> list[dict]:
-    """Footer [min, max] of ``column`` per file (metadata-only)."""
-    stats = []
-    for f in sorted(glob.glob(os.path.join(path, "part-*.parquet"))):
-        md = pq.read_metadata(f)
-        ci = _leaf_index(md, column)
-        mins, maxs = [], []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(ci).statistics
-            if st is None or not st.has_min_max:
-                mins, maxs = [], []
-                break
-            mn, mx = _coerce(st.min), _coerce(st.max)
-            if mn is None or mx is None or isinstance(mn, str) != isinstance(mx, str):
-                mins, maxs = [], []
-                break
-            mins.append(mn)
-            maxs.append(mx)
-        entry = {"file": os.path.basename(f), "rows": md.num_rows}
-        if mins:
-            entry["min"] = min(mins)
-            entry["max"] = max(maxs)
-        stats.append(entry)
-    return stats
+def _part_names(path: str) -> list[str]:
+    """Data file names of the directory dataset — the same listing
+    ``spark.read.parquet(path)`` scans, so pruning never loses a file
+    by its name."""
+    return [os.path.basename(p) for p in footer_stats.dataset_parts(path) or []]
 
 
 def write_manifest(path: str, column: str) -> str:
     """Persist the per-file stats as the table's manifest (the
     commit-time step a real table format performs)."""
-    manifest = {"column": column, "files": collect_file_stats(path, column)}
+    stats = footer_stats.file_stats(path, _part_names(path), [column])
+    manifest = {
+        "column": column,
+        "files": [
+            {"file": n, "rows": e["rows"], **e["cols"].get(column, {})}
+            for n, e in stats.items()
+        ],
+    }
     out = os.path.join(path, MANIFEST_NAME)
     with open(out, "w") as f:
         json.dump(manifest, f, indent=1)
@@ -115,6 +77,8 @@ def read_pruned(
     ``spark.read.parquet(path).filter(...)`` exactly; only the file
     list shrinks.
     """
+    names = _part_names(path)
+    stats: dict = {}
     mpath = os.path.join(path, MANIFEST_NAME)
     if os.path.exists(mpath):
         with open(mpath) as f:
@@ -123,27 +87,25 @@ def read_pruned(
             raise ValueError(
                 f"manifest indexes {manifest['column']!r}, not {column!r}"
             )
-        entries = {e["file"]: e for e in manifest["files"]}
-        # staleness repair: footer-probe any file the manifest missed
-        on_disk = [
-            os.path.basename(f)
-            for f in sorted(glob.glob(os.path.join(path, "part-*.parquet")))
-        ]
-        missing = [f for f in on_disk if f not in entries]
-        if missing:
-            fresh = {
-                e["file"]: e for e in collect_file_stats(path, column)
+        stats = {
+            e["file"]: {
+                "rows": e["rows"],
+                "cols": {column: {"min": e["min"], "max": e["max"]}}
+                if "min" in e
+                else {},
             }
-            for f in missing:
-                entries[f] = fresh.get(f, {"file": f})
-        entries = [entries[f] for f in on_disk]
-    else:
-        entries = collect_file_stats(path, column)
-
+            for e in manifest["files"]
+        }
+    # staleness repair: footer-probe any file the manifest missed
+    stats.update(
+        footer_stats.file_stats(
+            path, [n for n in names if n not in stats], [column]
+        )
+    )
     keep = [
-        os.path.join(path, e["file"])
-        for e in entries
-        if "min" not in e or not (hi < e["min"] or e["max"] < lo)
+        os.path.join(path, n)
+        for n in names
+        if footer_stats.keep_file(stats, n, column, lo, hi)
     ]
     from pyspark.sql import functions as F
 

@@ -46,19 +46,21 @@ exactly the way Delta's protocol describes it publicly:
   null-fill the added columns, which Spark's parquet scan does
   natively given an explicit schema;
 - commits can carry per-file column [min, max] STATS (the
-  Iceberg-manifest half, merged from ``file_index``'s footer probe):
-  ``read_snapshot_pruned`` then plans a range scan from the log
-  alone — no footer I/O for any file whose stats are in its commit
-  entry, and losslessly (stats-less files are kept, the residual
-  filter always applies).
+  Iceberg-manifest half, folded from parquet footers by
+  ``footer_stats.file_stats``): ``read_snapshot_pruned`` then plans a
+  range scan from the log alone — no footer I/O for any file whose
+  stats are in its commit entry, and losslessly
+  (``footer_stats.keep_file``: stats-less files are kept, the
+  residual filter always applies).
 
 At 100 TB the log is metadata-sized (one small JSON per commit; file
 paths, not data, move through it) and the data plane is plain
 parquet — every query in this repo reads snapshots through the same
 ``spark.read.parquet(*files)`` scan planning (column pruning, filter
-pushdown, split generation) it uses everywhere else. Composes with
-``file_index.write_manifest`` for min/max pruning of a snapshot's
-files.
+pushdown, split generation) it uses everywhere else. The commit-entry
+stats have the same shape and keep-file rule as ``file_index``'s
+``_stats_manifest.json`` pruning of plain parquet directories; both
+read footers only through ``footer_stats``.
 """
 
 from __future__ import annotations
@@ -71,6 +73,8 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .footer_stats import file_stats, keep_file
 
 LOG_DIR = "_txn_log"
 LAST_CHECKPOINT = "_last_checkpoint"
@@ -174,43 +178,6 @@ def layout_only(entry: dict) -> bool:
     if "dataChange" in entry:
         return not entry["dataChange"]
     return entry["op"] == "compact" or entry["op"].startswith("cdc-compact-")
-
-
-def _file_stats(table_dir: str, names: list[str], cols: list[str]) -> dict:
-    """Per-file {rows, cols: {col: {min, max}}} for the given data
-    files, from parquet footers — the ONE footer sweep a table format
-    pays at commit time so readers never do. Columns resolve by leaf
-    path (file_index's rule: top-level primitives only); a file whose
-    stats are unusable for a column simply omits that column (pruning
-    stays lossless)."""
-    import pyarrow.parquet as pq
-
-    from .file_index import _coerce, _leaf_index
-
-    out = {}
-    for name in names:
-        md = pq.read_metadata(os.path.join(table_dir, name))
-        entry: dict = {"rows": md.num_rows, "cols": {}}
-        for col in cols:
-            ci = _leaf_index(md, col)
-            mins, maxs = [], []
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    mins, maxs = [], []
-                    break
-                mn, mx = _coerce(st.min), _coerce(st.max)
-                if mn is None or mx is None or (
-                    isinstance(mn, str) != isinstance(mx, str)
-                ):
-                    mins, maxs = [], []
-                    break
-                mins.append(mn)
-                maxs.append(mx)
-            if mins:
-                entry["cols"][col] = {"min": min(mins), "max": max(maxs)}
-        out[name] = entry
-    return out
 
 
 def commit(
@@ -691,7 +658,7 @@ def _merged_file_stats(
     rows==0 prune)."""
     if not (stats_cols or bloom_cols):
         return None
-    stats = _file_stats(table_dir, names, list(stats_cols))
+    stats = file_stats(table_dir, names, stats_cols)
     if bloom_cols:
         blooms = _file_blooms(
             spark, table_dir, names, list(bloom_cols),
@@ -1182,14 +1149,7 @@ def read_snapshot_pruned(
             f"snapshot {version!r} of {table_dir} has no data files"
         )
     reader = spark.read if schema is None else spark.read.schema(schema)
-    kept = []
-    for p in files:
-        entry = stats.get(os.path.basename(p), {})
-        if entry.get("rows") == 0:
-            continue  # a committed-empty file can never contribute rows
-        st = entry.get("cols", {}).get(column)
-        if st is None or (st["min"] <= hi and st["max"] >= lo):
-            kept.append(p)
+    kept = [p for p in files if keep_file(stats, p, column, lo, hi)]
     if not kept:
         # all files pruned: ONE file supplies the rows=0 scan, the
         # always-false filter keeps the result equal to the full scan
@@ -1243,7 +1203,7 @@ def _file_blooms(
 ) -> dict[str, dict]:
     """Per-file bloom bitmaps for ``cols`` over data files — the
     write-time cost of membership pruning, paid once per commit like
-    ``_file_stats``'s footer sweep. ONE distributed column-pruned scan
+    the ``footer_stats.file_stats`` footer sweep. ONE distributed column-pruned scan
     per column: each executor hashes its own file's values
     (``pmod(xxhash64(value, i), m)`` for ``i < k``), the partial
     aggregation dedups positions map-side (at most ``m`` distinct
@@ -1449,9 +1409,9 @@ def add_bloom_index(
     if not all(rows_by_name.values()):
         # files committed without stats have no recorded row counts —
         # take them from the footers (the same one-time sweep
-        # _file_stats pays; an undersized bitmap would quietly raise
+        # a commit pays; an undersized bitmap would quietly raise
         # the false-positive rate, so guessing is not an option)
-        footer = _file_stats(table_dir, names, [])
+        footer = file_stats(table_dir, names, [])
         rows_by_name = {n: footer[n]["rows"] for n in names}
     from pyspark.sql.types import StructType
 

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import footer_stats
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -36,62 +38,18 @@ DIM_TABLES = frozenset({"region", "nation", "supplier", "part"})
 # runs a one-task schema-inference job per call — a fixed ~50-85 ms tax
 # on EVERY load_table call (measured r12; a 6-table star paid it six
 # times per plan build). The footer schema is pure file METADATA, so it
-# caches keyed on the path with the (mtime_ns, size) stamp stored IN
-# the entry — any rewrite of the file replaces the entry in place
-# instead of stranding the old one (r12 advice: the (path, mtime,
-# size)-keyed form accumulated one dead entry per rewrite forever in a
-# resident engine) — and the scan is then planned with the exact
-# schema the footer would have yielded. This is metadata caching (the
-# same class as Spark's own file-index cache), never result caching:
-# every execution still reads the parquet data. A small LRU cap bounds
-# entries for paths that are DELETED rather than rewritten (ephemeral
-# scratch tables): one (stamp, value) tuple per live path, oldest-used
-# evicted past the cap.
-_META_CACHE_CAP = 4096
-
-
-class _FileMetaCache:
-    """path-keyed LRU of ((mtime_ns, size), value): replace-on-rewrite,
-    evict-least-recently-used past ``cap``. Not thread-safe by design —
-    all callers run on the driver's plan-construction thread, and a
-    raced duplicate compute is harmless (same metadata)."""
-
-    def __init__(self, cap: int = _META_CACHE_CAP) -> None:
-        from collections import OrderedDict
-
-        self.cap = cap
-        self._d: "OrderedDict[tuple, tuple]" = OrderedDict()
-
-    def lookup(self, key: tuple, stamp: tuple):
-        """(hit, value): hit False when absent or the stamp changed."""
-        ent = self._d.get(key)
-        if ent is None or ent[0] != stamp:
-            return False, None
-        self._d.move_to_end(key)
-        return True, ent[1]
-
-    def store(self, key: tuple, stamp: tuple, value) -> None:
-        self._d[key] = (stamp, value)
-        self._d.move_to_end(key)
-        while len(self._d) > self.cap:
-            self._d.popitem(last=False)
-
-    def __len__(self) -> int:
-        return len(self._d)
-
-
-_SCHEMA_CACHE = _FileMetaCache()
+# caches on the path, stamped on every part file of the dataset, and
+# the scan is then planned with the exact schema the footer would have
+# yielded. Every execution still reads the parquet data.
+_SCHEMA_CACHE = footer_stats.FileMetaCache()
 
 
 def _parquet_file_schema(spark: SparkSession, path: str) -> T.StructType:
-    st = os.stat(path)
-    key = (os.path.abspath(path),)
-    stamp = (st.st_mtime_ns, st.st_size)
-    hit, sch = _SCHEMA_CACHE.lookup(key, stamp)
-    if not hit:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE.store(key, stamp, sch)
-    return sch
+    return _SCHEMA_CACHE.memo(
+        (os.path.abspath(path),),
+        footer_stats.dataset_stamp(footer_stats.dataset_parts(path)),
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -136,153 +94,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# footer column-stats cache: same metadata class as the schema cache
-# above — parquet row-group min/max are file METADATA read driver-side
-# with zero Spark jobs, keyed on (path, column) with the (mtime_ns,
-# size) stamp stored in the entry so any file rewrite REPLACES the
-# entry. Used to derive deterministic monotone bucket boundaries for
-# the distributed prefix-sum pattern (below) without
-# repartitionByRange's per-execution sampling job.
-_MINMAX_CACHE = _FileMetaCache()
-
-
-def _footer_metadata(path: str):
-    """The parquet file's footer metadata, or None for anything that
-    is not a single readable parquet file — a non-parquet or corrupt
-    file, a missing path. Only the expected error classes are
-    swallowed (r12 advice: the blanket ``except Exception`` silently
-    converted programming errors in the stats walk into 'no stats');
-    genuine bugs now raise."""
-    import pyarrow.lib
-
-    try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(path).metadata
-    except (OSError, pyarrow.lib.ArrowException, ValueError):
-        # missing path / directory / permission -> OSError;
-        # non-parquet or truncated footer -> ArrowInvalid (an
-        # ArrowException); empty-path edge cases -> ValueError
-        return None
-
-
-def _dataset_parts(path: str) -> list[str] | None:
-    """The parquet part files of ``path``: [path] for a single file,
-    the sorted ``*.parquet`` members for a DIRECTORY dataset (the
-    at-scale layout — r13: footer stats previously degraded to the
-    sampled fallback on exactly the layout scale runs use), or None
-    when the path is missing/empty. Driver-side listing only — the
-    same metadata class as Spark's own file index."""
-    if os.path.isdir(path):
-        try:
-            parts = sorted(
-                os.path.join(path, n)
-                for n in os.listdir(path)
-                if n.endswith(".parquet") and not n.startswith(("_", "."))
-            )
-        except OSError:
-            return None
-        return parts or None
-    return [path] if os.path.exists(path) else None
-
-
-def _dataset_stamp(parts: list[str]) -> tuple | None:
-    """Invalidation stamp over every part file: any rewrite, addition
-    or removal changes it."""
-    out = []
-    for p in parts:
-        try:
-            st = os.stat(p)
-        except OSError:
-            return None
-        out.append((os.path.basename(p), st.st_mtime_ns, st.st_size))
-    return tuple(out)
-
-
-def column_minmax(path: str, column: str) -> tuple | None:
-    """(min, max) of ``column`` across the dataset's row groups —
-    a single parquet file or a directory of part files (the at-scale
-    layout; r13) — from footer statistics only: no Spark job, no data
-    read. Returns None when any row group lacks min/max stats (callers
-    must keep a sampled-range fallback)."""
-    parts = _dataset_parts(path)
-    stamp = _dataset_stamp(parts) if parts else None
-    if stamp is None:
-        # missing path: let the caller's sampled-range fallback decide
-        return None
-    key = (os.path.abspath(path), column)
-    hit, cached = _MINMAX_CACHE.lookup(key, stamp)
-    if hit:
-        return cached
-    lo = hi = None
-    for part in parts:
-        meta = _footer_metadata(part)
-        if meta is None:
-            _MINMAX_CACHE.store(key, stamp, None)
-            return None
-        for rg_i in range(meta.num_row_groups):
-            rg = meta.row_group(rg_i)
-            stats = None
-            for c_i in range(rg.num_columns):
-                col = rg.column(c_i)
-                if col.path_in_schema == column:
-                    stats = col.statistics
-                    break
-            if stats is None or not stats.has_min_max:
-                _MINMAX_CACHE.store(key, stamp, None)
-                return None
-            lo = stats.min if lo is None else min(lo, stats.min)
-            hi = stats.max if hi is None else max(hi, stats.max)
-    out = None if lo is None else (lo, hi)
-    _MINMAX_CACHE.store(key, stamp, out)
-    return out
-
-
-# footer size-stats cache: same class again — num_rows and per-column
-# total_uncompressed_size are footer metadata, free to read driver-side
-_SIZESTATS_CACHE = _FileMetaCache()
-
-
-def column_size_stats(path: str, column: str) -> tuple | None:
-    """(num_rows, total_uncompressed_bytes_of_column) across the
-    dataset's row groups — a single parquet file or a directory of
-    part files (r13) — from footer metadata only: no Spark job, no
-    data read. None when the path is unreadable or the column is
-    absent from any part (callers must keep a counting fallback)."""
-    parts = _dataset_parts(path)
-    stamp = _dataset_stamp(parts) if parts else None
-    if stamp is None:
-        return None
-    key = (os.path.abspath(path), column)
-    hit, cached = _SIZESTATS_CACHE.lookup(key, stamp)
-    if hit:
-        return cached
-    n_rows = 0
-    n_bytes = 0
-    out = (0, 0)
-    for part in parts:
-        meta = _footer_metadata(part)
-        if meta is None:
-            out = None
-            break
-        seen = False
-        for rg_i in range(meta.num_row_groups):
-            rg = meta.row_group(rg_i)
-            for c_i in range(rg.num_columns):
-                col = rg.column(c_i)
-                if col.path_in_schema == column:
-                    n_bytes += col.total_uncompressed_size
-                    seen = True
-                    break
-        if not (seen or meta.num_row_groups == 0):
-            out = None
-            break
-        n_rows += meta.num_rows
-        out = (n_rows, n_bytes)
-    _SIZESTATS_CACHE.store(key, stamp, out)
-    return out
-
-
 def funnel_pid_bounds(
     sf_dir: str, n_part: int, *, min_density: float = 0.5
 ) -> tuple | None:
@@ -295,12 +106,12 @@ def funnel_pid_bounds(
     silently skewing the pack stage). Row counts come from the same
     footer metadata as the min/max — no Spark job either way."""
     path = table_path(sf_dir, "documents")
-    bounds = column_minmax(path, "doc_id")
+    bounds = footer_stats.column_minmax(path, "doc_id")
     if bounds is None:
         return None
     lo, hi = int(bounds[0]), int(bounds[1])
     span = hi - lo + 1
-    stats = column_size_stats(path, "doc_id")
+    stats = footer_stats.column_size_stats(path, "doc_id")
     if stats is not None and span > 0 and stats[0] / span < min_density:
         return None
     return lo, max(1, (hi - lo + n_part) // n_part)
@@ -324,13 +135,13 @@ def prefix_sum_partitions(spark: SparkSession, floor: int = 8) -> int:
 # AND boundary invariant (the p-row offset window corrects any split;
 # pinned by tests/test_partition_invariance.py and
 # test_global_row_number_is_exact_permutation) — so they memoize on
-# the backing file's identity exactly like the footer caches above
+# the backing dataset's stamp exactly like the footer caches
 # (r12 verdict item 6: "equal-height bounds from a cheap one-pass
 # approx histogram, cached like the footer stats"). Every execution
 # still scans and ranks the full data; only the boundary-derivation
 # job is amortized, the same class as repartitionByRange's sampling
 # pass that this replaces.
-_BOUNDS_CACHE = _FileMetaCache()
+_BOUNDS_CACHE = footer_stats.FileMetaCache()
 
 
 def equal_height_bounds(
@@ -346,33 +157,26 @@ def equal_height_bounds(
     pass doubles as the fill of any cache under ``df``). Returns None
     when the relation is empty (callers fall back to the sampled range
     split). ``memo_path`` + ``memo_tag`` memoize the boundaries on the
-    backing file's (mtime_ns, size) stamp; a missing/rewritten file
-    recomputes."""
+    stamp of every part file of the backing dataset; a missing or
+    rewritten part recomputes."""
     from pyspark.sql import functions as F
 
-    key_id = (memo_tag, n_parts)
-    stamp = None
-    if memo_path is not None:
-        try:
-            st = os.stat(memo_path)
-            stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stamp = None
-    if stamp is not None:
-        mkey = (os.path.abspath(memo_path),) + key_id
-        hit, cached = _BOUNDS_CACHE.lookup(mkey, stamp)
-        if hit:
-            return cached
-    fractions = [i / n_parts for i in range(1, n_parts)]
-    row = df.select(
-        F.percentile_approx(
-            key, F.array(*[F.lit(f) for f in fractions])
-        ).alias("b")
-    ).first()
-    bounds = None if row is None or row[0] is None else [float(x) for x in row[0]]
-    if stamp is not None:
-        _BOUNDS_CACHE.store(mkey, stamp, bounds)
-    return bounds
+    def compute():
+        fractions = [i / n_parts for i in range(1, n_parts)]
+        row = df.select(
+            F.percentile_approx(
+                key, F.array(*[F.lit(f) for f in fractions])
+            ).alias("b")
+        ).first()
+        return None if row is None or row[0] is None else [float(x) for x in row[0]]
+
+    if memo_path is None:
+        return compute()
+    return _BOUNDS_CACHE.memo(
+        (os.path.abspath(memo_path), memo_tag, n_parts),
+        footer_stats.dataset_stamp(footer_stats.dataset_parts(memo_path)),
+        compute,
+    )
 
 
 def pid_from_bounds(bounds: list[float], key):
@@ -402,7 +206,7 @@ def monotone_double_key(primary, doc_id, sf_dir: str, *, descending: bool = Fals
     stats (callers fall back to the sampled range split)."""
     from pyspark.sql import functions as F
 
-    bounds = column_minmax(table_path(sf_dir, "documents"), "doc_id")
+    bounds = footer_stats.column_minmax(table_path(sf_dir, "documents"), "doc_id")
     if bounds is None:
         return None
     lo, hi = int(bounds[0]), int(bounds[1])

@@ -192,7 +192,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from candy_store_etl_spark.sources.tpch import (
-        column_minmax,
         funnel_pid_bounds,
         prefix_sum_partitions,
         table_path,

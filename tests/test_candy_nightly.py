@@ -16,7 +16,6 @@ import json
 import os
 import shutil
 from contextlib import contextmanager
-from decimal import Decimal
 
 import pytest
 
@@ -177,7 +176,17 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
     row takes the header of the first occurrence in file order — not
     the earliest timestamp nor the smallest or largest customer — and
     totals over all its items. Transaction 8's items are all null, so
-    it has no order."""
+    it has no order. Every form agrees: the one-session pipeline, the
+    table-log pipeline, the table-log DAG and a two-day incremental
+    batch."""
+    from candy_store_etl_spark.orchestration import StageContext, run_dag
+    from candy_store_etl_spark.plans.candy_colocated import (
+        ingest_days,
+        read_pipeline_outputs,
+        run_pipeline_tablelog,
+    )
+    from candy_store_etl_spark.sources import table_log as tl
+
     day1 = _write_day(
         tmp_path / "transactions_20240201.json",
         [
@@ -192,22 +201,50 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
             _txn(7, 8, "2024-02-03T09:00:00.000000", [(2, 1), (1, None)]),
         ],
     )
-    products = spark.createDataFrame(
-        [
-            (1, "p1", "c", "s", "Bar", Decimal("2.00"), Decimal("1.00"), 100),
-            (2, "p2", "c", "s", "Bar", Decimal("3.00"), Decimal("1.50"), 100),
-        ],
-        candy.PRODUCTS_SCHEMA,
+    days = [day1, day2]
+    products_csv = tmp_path / "products.csv"
+    products_csv.write_text(
+        ",".join(candy.PRODUCTS_SCHEMA.names)
+        + "\n1,p1,c,s,Bar,2.00,1.00,100\n2,p2,c,s,Bar,3.00,1.50,100\n"
     )
-    outs = run_pipeline(spark, [day1, day2], products)
-    try:
-        orders = [tuple(r) for r in outs["orders"].collect()]
-        lines = outs["order_line_items"].count()
-    finally:
-        release_caches()
-    # 2 x 2.00 + 1 x 3.00 + 1 x 2.00 + 1 x 3.00 over the non-null items
-    assert orders == [(7, "2024-02-02T10:00:00.000000", 5, 12.0, 4)]
-    assert lines == 4
+    products = read_products(spark, str(products_csv))
+
+    def dag(workdir):
+        ctx = StageContext(
+            session_factory=lambda: spark,
+            transaction_paths=tuple(days),
+            products_path=str(products_csv),
+            workdir=workdir,
+            stage_format="table_log",
+        )
+        run_dag(ctx)
+        return {
+            "orders": tl.read_snapshot(spark, ctx.stage("orders")).drop("order_profit"),
+            "order_line_items": tl.read_snapshot(spark, ctx.stage("line_items")),
+        }
+
+    def batch(workdir):
+        assert ingest_days(spark, days, products, workdir, tag="days-1-2")
+        return read_pipeline_outputs(spark, workdir, products)
+
+    forms = {
+        "run_pipeline": lambda workdir: run_pipeline(spark, days, products),
+        "run_pipeline_tablelog": lambda workdir: run_pipeline_tablelog(
+            spark, days, products, workdir
+        ),
+        "dag_table_log": dag,
+        "ingest_days_batch": batch,
+    }
+    for name, form in forms.items():
+        outs = form(str(tmp_path / name))
+        try:
+            orders = [tuple(r) for r in outs["orders"].collect()]
+            lines = outs["order_line_items"].count()
+        finally:
+            release_caches()
+        # 2 x 2.00 + 1 x 3.00 + 1 x 2.00 + 1 x 3.00 over the non-null items
+        assert orders == [(7, "2024-02-02T10:00:00.000000", 5, 12.0, 4)], name
+        assert lines == 4, name
 
 
 def test_stage_boundary_variants_match_pipeline(spark, tmp_path):

@@ -163,13 +163,30 @@ def test_manifest_staleness_repair_and_nested_rejection(spark, sf_correctness, t
         "append"
     ).parquet(table)
 
-    got = read_pruned(spark, table, "doc_id", 240, 260)
-    want = spark.read.parquet(table).filter(
-        (F.col("doc_id") >= 240) & (F.col("doc_id") <= 260)
-    )
-    assert sorted(r["doc_id"] for r in got.collect()) == sorted(
-        r["doc_id"] for r in want.collect()
-    )
+    # a part not named part-*: pyarrow's own writers name files
+    # <uuid>-<n>.parquet, and spark.read.parquet(dir) reads every
+    # *.parquet member — pruning must list parts the same way
+    import pyarrow as pa
+
+    mixed = tmp_path / "mixed"
+    mixed.mkdir()
+    pq.write_table(pa.table({"k": list(range(0, 50))}), mixed / "part-00000.parquet")
+    pq.write_table(pa.table({"k": list(range(50, 100))}), mixed / "3f2a-0.parquet")
+
+    for path, col, lo, hi, manifest in [
+        (table, "doc_id", 240, 260, False),  # the stale manifest above
+        (str(mixed), "k", 40, 60, False),
+        (str(mixed), "k", 40, 60, True),
+    ]:
+        if manifest:
+            write_manifest(path, col)
+        got = read_pruned(spark, path, col, lo, hi)
+        want = spark.read.parquet(path).filter(
+            (F.col(col) >= lo) & (F.col(col) <= hi)
+        )
+        assert sorted(r[col] for r in got.collect()) == sorted(
+            r[col] for r in want.collect()
+        ), (path, manifest)
 
     # nested columns: stats are per-leaf; reject instead of misindexing
     emb = load_table(spark, sf_correctness, "embeddings")
@@ -182,9 +199,9 @@ def test_manifest_staleness_repair_and_nested_rejection(spark, sf_correctness, t
     write_manifest(etable, "label")
     f = sorted(__import__("glob").glob(etable + "/part-*.parquet"))[0]
     md = pq.read_metadata(f)
-    from candy_store_etl_spark.sources.file_index import _leaf_index
+    from candy_store_etl_spark.sources.footer_stats import leaf_index
 
-    assert _leaf_index(md, "label") == 2  # vec_id, embedding.element, label
+    assert leaf_index(md, "label") == 2  # vec_id, embedding.element, label
 
 
 def test_content_fingerprint_handles_files_and_directories(tmp_path):

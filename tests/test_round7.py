@@ -73,9 +73,9 @@ def test_funnel_pack_pid_path_equivalence(
     sampled repartitionByRange fallback — any monotone split yields
     the same global cumsum. Forcing the fallback by blanking the
     footer stats must reproduce the funnel byte-for-byte."""
-    from candy_store_etl_spark.sources import tpch
+    from candy_store_etl_spark.sources import footer_stats
 
-    monkeypatch.setattr(tpch, "column_minmax", lambda *a, **k: None)
+    monkeypatch.setattr(footer_stats, "column_minmax", lambda *a, **k: None)
     fallback = [
         tuple(r)
         for r in QUERIES["pretraining_pipeline_funnel"]
@@ -393,7 +393,7 @@ def test_column_minmax_degrades_to_none(tmp_path):
     raise) for a directory dataset — the at-scale layout — or a
     missing/garbage path, so the funnel's sampled-range fallback takes
     over instead of the query erroring."""
-    from candy_store_etl_spark.sources.tpch import column_minmax
+    from candy_store_etl_spark.sources.footer_stats import column_minmax
 
     real = "/root/testdata/sf0.001/documents.parquet"
     lo, hi = column_minmax(real, "doc_id")
@@ -417,11 +417,11 @@ def test_footer_stats_cover_directory_datasets(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from candy_store_etl_spark.sources.tpch import (
+    from candy_store_etl_spark.sources.footer_stats import (
         column_minmax,
         column_size_stats,
-        funnel_pid_bounds,
     )
+    from candy_store_etl_spark.sources.tpch import funnel_pid_bounds
 
     d = tmp_path / "documents.parquet"
     d.mkdir()
@@ -462,20 +462,20 @@ def test_meta_cache_bounded_and_invalidated_on_rewrite(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from candy_store_etl_spark.sources import tpch
+    from candy_store_etl_spark.sources import footer_stats
 
     # replace-on-rewrite: same path, new content -> new value, ONE entry
-    cache = tpch._FileMetaCache(cap=4)
+    cache = footer_stats.FileMetaCache(cap=4)
     p = tmp_path / "t.parquet"
     pq.write_table(pa.table({"doc_id": [1, 2, 3]}), p)
-    before = len(tpch._MINMAX_CACHE)
-    assert tpch.column_minmax(str(p), "doc_id") == (1, 3)
-    assert len(tpch._MINMAX_CACHE) == before + 1
+    before = len(footer_stats._MINMAX_CACHE)
+    assert footer_stats.column_minmax(str(p), "doc_id") == (1, 3)
+    assert len(footer_stats._MINMAX_CACHE) == before + 1
     pq.write_table(pa.table({"doc_id": [10, 20]}), p)
     # ensure the stamp moves even on coarse-mtime filesystems
     os.utime(p, ns=(1, 1))
-    assert tpch.column_minmax(str(p), "doc_id") == (10, 20)
-    assert len(tpch._MINMAX_CACHE) == before + 1
+    assert footer_stats.column_minmax(str(p), "doc_id") == (10, 20)
+    assert len(footer_stats._MINMAX_CACHE) == before + 1
 
     # LRU eviction: cap 4, insert 6 -> oldest two gone, newest kept
     for i in range(6):
@@ -530,7 +530,7 @@ def test_column_size_stats_matches_footer(tmp_path):
     counting fallback)."""
     import pyarrow.parquet as pq
 
-    from candy_store_etl_spark.sources.tpch import column_size_stats
+    from candy_store_etl_spark.sources.footer_stats import column_size_stats
 
     real = "/root/testdata/sf0.001/documents.parquet"
     n_rows, n_bytes = column_size_stats(real, "text")
