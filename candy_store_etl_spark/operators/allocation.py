@@ -70,7 +70,7 @@ def _greedy_kernel(
     end-to-end the grouped-map sort and shuffle keep ~20% of that. The
     semantics are pinned by tests/test_allocation.py's brute-force
     simulation and hypothesis invariants, which exercise this kernel
-    through both the pandas and Arrow entry points.
+    through the grouped-map entry points.
     """
     n = len(qty)
     allocated = np.zeros(n, np.int64)
@@ -248,89 +248,6 @@ def allocate_greedy(
         return joined.groupBy(product_col).applyInPandas(scan, out_schema)
     key = F.pmod(F.hash(F.col(product_col)), F.lit(buckets))
     return joined.groupBy(key.alias("__bucket")).applyInPandas(scan, out_schema)
-
-
-def allocate_greedy_arrow(
-    items: DataFrame,
-    stock: DataFrame,
-    *,
-    product_col: str = "product_id",
-    qty_col: str = "qty",
-    stock_col: str = "stock",
-    order_by: Sequence[str] = ("seq",),
-    buckets: int | None = None,
-) -> DataFrame:
-    """``allocate_greedy`` with the worker half on Arrow instead of
-    pandas: ``groupBy().applyInArrow`` hands each bucket to pyarrow,
-    the multi-key sort runs in Arrow's C++ kernel (``Table.sort_by``),
-    and the scan is the same ``_greedy_kernel`` over numpy views.
-    Same results by construction (one shared kernel; also pinned
-    against the pandas path in tests/test_allocation.py).
-
-    MEASURED NEGATIVE RESULT (round 5): this path does NOT beat the
-    pandas tier for this operator on this PySpark build. The worker
-    compute is strictly cheaper (Arrow C++ sort 0.25s vs pandas
-    mergesort 0.95s on a 940k-row bucket; shared kernel identical),
-    but ``applyInArrow``'s group-input serializer path costs ~4x
-    ``applyInPandas``'s regardless of what the function does — a noop
-    passthrough measured 4.55s vs 1.08s at sf1, and even a 1-row
-    output (isolating the input side) stayed at 4.2s. For a
-    large-passthrough grouped op that framework constant dominates;
-    ``applyInArrow`` still pays where per-group OUTPUT is tiny
-    (label_centroids_arrow). Kept because the semantics and plumbing
-    are real and oracle-checked; use ``allocate_greedy`` in
-    production.
-    """
-    import pyarrow as pa
-
-    for c in (product_col, qty_col, *order_by):
-        if c not in items.columns:
-            raise ValueError(f"items is missing required column {c!r}")
-    if product_col not in stock.columns or stock_col not in stock.columns:
-        raise ValueError(f"stock needs columns {product_col!r}, {stock_col!r}")
-
-    stock_small = stock.select(
-        F.col(product_col),
-        F.col(stock_col).cast("long").alias(_STOCK_COL),
-    )
-    joined = items.join(F.broadcast(stock_small), on=product_col, how="left")
-
-    out_schema = StructType(
-        items.schema.fields
-        + [
-            StructField(ALLOCATED_COL, IntegerType(), False),
-            StructField(CANCELLED_COL, IntegerType(), False),
-        ]
-    )
-    sort_keys = [(product_col, "ascending")] + [
-        (c, "ascending") for c in order_by
-    ]
-    item_cols = list(items.columns)
-
-    def scan_arrow(tbl: "pa.Table") -> "pa.Table":
-        tbl = tbl.sort_by(sort_keys)
-        qty = _qty_to_int64(
-            tbl[qty_col].to_numpy(zero_copy_only=False), qty_col
-        )
-        prod = tbl[product_col].to_numpy(zero_copy_only=False)
-        stock0 = _stock_to_int64(
-            tbl[_STOCK_COL].to_numpy(zero_copy_only=False)
-        )
-        allocated, cancelled = _greedy_kernel(prod, qty, stock0)
-        arrays = [tbl[c] for c in item_cols] + [
-            pa.array(allocated.astype(np.int32)),
-            pa.array(cancelled.astype(np.int32)),
-        ]
-        return pa.Table.from_arrays(
-            arrays, names=item_cols + [ALLOCATED_COL, CANCELLED_COL]
-        )
-
-    if buckets is None:
-        return joined.groupBy(product_col).applyInArrow(scan_arrow, out_schema)
-    key = F.pmod(F.hash(F.col(product_col)), F.lit(buckets))
-    return joined.groupBy(key.alias("__bucket")).applyInArrow(
-        scan_arrow, out_schema
-    )
 
 
 def allocate_greedy_chained(

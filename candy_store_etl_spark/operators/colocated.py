@@ -1936,18 +1936,17 @@ def colocated_aggregate_join(
     (the bucket holds every row of each of its keys, so per-key
     aggregates finalize locally — ``bucketed_aggregate``'s argument)
     and the result hash-joins the right table's same bucket group in
-    the same task (``colocated_bucket_join``'s argument). The
-    orders-rollup-joins-headers shape of the candy pipeline's
-    table-log stages (``plans/candy_colocated.py``, reference
-    `data_processor.py:310-326`) with ZERO exchange of line items,
-    rollups, or headers: composing the two existing operators would
-    still exchange the intermediate rollup (or re-write it as a third
-    bucketed table); fusing them moves nothing but the per-group
-    metadata row.
+    the same task (``colocated_bucket_join``'s argument): a
+    fact-rollup-joins-dimension pass (the registered
+    ``colocated_rollup_join`` query) with ZERO exchange of the fact
+    rows, rollups, or dimension rows: composing the two existing
+    operators would still exchange the intermediate rollup (or
+    re-write it as a third bucketed table); fusing them moves nothing
+    but the per-group metadata row.
 
     ``aggs`` is ``[(left_col, arrow_fn, out_name), ...]`` (Acero's agg
     vocabulary, as in ``bucketed_aggregate``). ``how``: ``inner``
-    (right rows without left keys vanish — the pipeline's semantics)
+    (right rows without left keys vanish)
     or ``left`` (every aggregated left key survives, right columns
     null-filled). Output columns: key, the aggregates, then the right
     table's non-key columns. At 100 TB this is the fact-rollup-join

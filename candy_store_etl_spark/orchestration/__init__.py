@@ -4,6 +4,8 @@ from .candy_dag import (
     build_airflow_dag,
     run_dag,
     run_stage,
+    run_stages,
+    stage_outputs,
     topological_order,
 )
 from .maintenance import (
@@ -21,5 +23,7 @@ __all__ = [
     "maintenance_sweep",
     "run_dag",
     "run_stage",
+    "run_stages",
+    "stage_outputs",
     "topological_order",
 ]

@@ -1,21 +1,26 @@
-"""Airflow DAG artifact for the candy pipeline (SURVEY §3.3).
+"""The staged candy pipeline, and its Airflow DAG artifact (SURVEY §3.3).
 
 The reference ships an Airflow DAG (`candy_store_pipeline_dag.py:284-327`)
 whose tasks exchange intermediates through session temp views — views
 that do not survive the per-task SparkSessions the DAG creates, so the
-orchestrated form is structurally broken. This module publishes the
-WORKING topology: tasks exchange state only through persisted parquet
-stage directories (`plans/candy_pipeline.run_pipeline_staged`), so any
-task can run in its own session, process, or cluster and resume from
-the previous task's files.
+orchestrated form is structurally broken. This module is the ONLY
+staged implementation of the pipeline: its tasks exchange state only
+through persisted stage artifacts under a workdir, so any task can run
+in its own session, process, or cluster and resume from the previous
+task's files. Every stage builds with the one-session pipeline's own
+steps (``plans/candy_pipeline``): orders come from the header-carrying
+line items (``build_orders_with_profit``), and each export task writes
+its report through the shared projection (``candy_pipeline.REPORTS``),
+reading only the artifacts that report needs.
 
 The task graph is declared engine-side as plain data
 (``CANDY_DAG_TASKS``) and the Airflow binding is import-gated: where
 Airflow is installed, ``build_airflow_dag()`` returns a real
 ``airflow.DAG`` wired task-for-task from the same declaration; where
 it is not (this container), the declaration is still importable,
-topologically checkable, and is what the tests pin against the staged
-pipeline's actual write/read order.
+topologically checkable, and runnable in-process: ``run_dag`` runs
+every task, ``run_stages`` only the stage tasks, and ``stage_outputs``
+reads the five reference outputs back from the stage artifacts.
 """
 
 from __future__ import annotations
@@ -25,15 +30,16 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from graphlib import TopologicalSorter
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # task -> (upstream dependencies, produced stage artifact)
 # Artifacts are directory names under the pipeline workdir; "reports/*"
-# are terminal single-file outputs.
+# are terminal single-file outputs, one per ``candy_pipeline.REPORTS``
+# entry, each depending on the tasks that produce the relations it reads.
 CANDY_DAG_TASKS: dict[str, tuple[tuple[str, ...], str]] = {
     "load_transactions": ((), "txns"),
     "build_line_items": (("load_transactions",), "line_items"),
-    "build_orders": (("build_line_items", "load_transactions"), "orders"),
+    "build_orders": (("build_line_items",), "orders"),
     "build_daily_summary": (("build_orders",), "daily_summary"),
     "export_line_items": (("build_line_items",), "reports/order_line_items"),
     "export_products_updated": (("build_line_items",), "reports/products_updated"),
@@ -67,14 +73,13 @@ class StageContext:
     fatal flaw, `candy_store_pipeline_dag.py:147-207`).
 
     ``stage_format`` picks the artifact kind: ``"parquet"`` (plain
-    directories — resumable, but each stage re-shuffles what the next
-    joins and artifacts have no history) or ``"table_log"`` (each
-    stage a VERSIONED table-log table; the fact-sized ones bucketed on
-    ``order_id`` with ``n_buckets``, so the orders-rollup⋈headers task
-    runs as the fused storage-partitioned join with zero fact
-    exchange, a re-run lands as a new atomic version instead of
-    clobbering files, and every stage output time-travels). Same task
-    graph, same outputs — pinned equal in tests/test_orchestration."""
+    directories — resumable, but artifacts have no history) or
+    ``"table_log"`` (each stage a VERSIONED table-log table, the line
+    items bucketed on ``order_id`` with ``n_buckets``: a re-run lands
+    as a new atomic version instead of clobbering files, every stage
+    output time-travels, and the staged line items serve bucketed
+    point reads). Same task graph, same outputs — pinned equal to the
+    one-session pipeline in tests/test_candy_nightly.py."""
 
     session_factory: Callable[[], SparkSession]
     transaction_paths: tuple[str, ...]
@@ -87,137 +92,74 @@ class StageContext:
         return os.path.join(self.workdir, artifact)
 
 
+def _read(spark: SparkSession, ctx: StageContext, relation: str) -> DataFrame:
+    """One relation a task reads: a stage artifact, or the products
+    catalog (``"products"``)."""
+    if relation == "products":
+        from ..sources.candy import read_products
+
+        return read_products(spark, ctx.products_path)
+    if ctx.stage_format == "table_log":
+        from ..sources import table_log as tl
+
+        return tl.read_snapshot(spark, ctx.stage(relation))
+    return spark.read.parquet(ctx.stage(relation))
+
+
+def _write(df: DataFrame, ctx: StageContext, artifact: str) -> None:
+    if ctx.stage_format != "table_log":
+        from ..sources.sinks import write_partitioned
+
+        write_partitioned(df, ctx.stage(artifact))
+    elif artifact == "line_items":
+        # the fact-sized stage buckets on order_id, so the staged line
+        # items serve bucketed point reads and co-located joins
+        from ..operators.colocated import write_bucketed
+
+        write_bucketed(
+            df, ctx.stage(artifact), key_col="order_id", n_buckets=ctx.n_buckets
+        )
+    else:
+        from ..sources import table_log as tl
+
+        tl.overwrite(df, ctx.stage(artifact))
+
+
 def run_stage(name: str, ctx: StageContext) -> None:
     """Execute ONE task of ``CANDY_DAG_TASKS`` end-to-end: read the
     upstream stage artifacts from disk, compute, write this task's
     artifact. Safe to call from any process once upstreams have run."""
-    from ..plans.candy_pipeline import (
-        build_daily_summary,
-        build_forecast,
-        build_line_items,
-        build_orders_with_profit,
-        build_products_updated,
-        load_daily_transactions,
-    )
-    from ..sources.candy import read_products
-    from ..sources.sinks import save_single_csv, write_partitioned
+    from ..plans import candy_pipeline as cp
 
+    if name not in CANDY_DAG_TASKS:
+        raise KeyError(f"unknown stage {name!r}")
     spark = ctx.session_factory()
-    reports = ctx.stage("reports")
-    tablelog = ctx.stage_format == "table_log"
-    if tablelog:
-        from ..operators.colocated import (
-            colocated_aggregate_join,
-            write_bucketed,
+    artifact = CANDY_DAG_TASKS[name][1]
+    if artifact.startswith("reports/"):
+        from ..sources.sinks import save_single_csv
+
+        report = artifact.split("/", 1)[1]
+        reads, project = cp.REPORTS[report]
+        save_single_csv(
+            project(*(_read(spark, ctx, r) for r in reads)),
+            ctx.stage("reports"),
+            f"{report}.csv",
         )
-        from ..plans.candy_colocated import (
-            FUSED_ORDER_AGGS,
-            dedup_headers,
-            fused_orders_select,
-            line_items_with_profit_term,
-        )
-        from ..sources import table_log as tl
-
-    def _read(artifact: str):
-        if tablelog:
-            return tl.read_snapshot(spark, ctx.stage(artifact))
-        return spark.read.parquet(ctx.stage(artifact))
-
-    def _write(df, artifact: str, *, bucket_key: str | None = None):
-        if tablelog:
-            # every stage is a versioned snapshot; fact-sized stages
-            # bucket on the join key so downstream tasks plan SPJs
-            if bucket_key is not None:
-                write_bucketed(
-                    df,
-                    ctx.stage(artifact),
-                    key_col=bucket_key,
-                    n_buckets=ctx.n_buckets,
-                )
-            else:
-                tl.overwrite(df, ctx.stage(artifact))
-        else:
-            write_partitioned(df, ctx.stage(artifact))
-
+        return
     if name == "load_transactions":
         # materializing the scan freezes day_idx/row_in_file, so every
         # downstream task sees one immutable sequence-keyed relation
-        _write(
-            load_daily_transactions(spark, list(ctx.transaction_paths)),
-            "txns",
-        )
+        df = cp.load_daily_transactions(spark, list(ctx.transaction_paths))
     elif name == "build_line_items":
-        txns = _read("txns")
-        products = read_products(spark, ctx.products_path)
-        li = build_line_items(txns, products)
-        if tablelog:
-            # the stored profit_term makes the next task's rollup a
-            # pure stored-column aggregate (candy_colocated's shared
-            # helper — ONE definition with run_pipeline_tablelog);
-            # exports select their 5 columns, so the extra one rides
-            li = line_items_with_profit_term(li)
-        _write(li, "line_items", bucket_key="order_id" if tablelog else None)
+        df = cp.build_line_items(
+            _read(spark, ctx, "txns"), _read(spark, ctx, "products")
+        )
     elif name == "build_orders":
-        if tablelog:
-            # the fused storage-partitioned rollup+join: headers land
-            # as their own bucketed stage table, then each bucket task
-            # aggregates its orders to completion and joins that
-            # bucket's headers locally — zero fact exchange (stage
-            # bodies shared with plans/candy_colocated.py so the two
-            # golden-parity forms cannot drift apart)
-            write_bucketed(
-                dedup_headers(_read("txns")),
-                ctx.stage("headers"),
-                key_col="order_id",
-                n_buckets=ctx.n_buckets,
-            )
-            rolled = colocated_aggregate_join(
-                spark,
-                ctx.stage("line_items"),
-                ctx.stage("headers"),
-                aggs=FUSED_ORDER_AGGS,
-            )
-            _write(fused_orders_select(rolled), "orders")
-        else:
-            # the line items carry the order headers: one grouped pass
-            _write(build_orders_with_profit(_read("line_items")), "orders")
-    elif name == "build_daily_summary":
-        orders_full = _read("orders")
-        _write(build_daily_summary(orders_full), "daily_summary")
-    elif name == "export_line_items":
-        line_items = _read("line_items")
-        save_single_csv(
-            line_items.select(
-                "order_id", "product_id", "quantity", "unit_price", "line_total"
-            ).orderBy("order_id", "product_id"),
-            reports,
-            "order_line_items.csv",
-        )
-    elif name == "export_products_updated":
-        line_items = _read("line_items")
-        products = read_products(spark, ctx.products_path)
-        save_single_csv(
-            build_products_updated(line_items, products),
-            reports,
-            "products_updated.csv",
-        )
-    elif name == "export_orders":
-        orders_full = _read("orders")
-        save_single_csv(
-            orders_full.drop("order_profit").orderBy("order_id"),
-            reports,
-            "orders.csv",
-        )
-    elif name == "export_daily_summary":
-        daily = _read("daily_summary")
-        save_single_csv(daily.orderBy("date"), reports, "daily_summary.csv")
-    elif name == "forecast":
-        daily = _read("daily_summary")
-        save_single_csv(
-            build_forecast(daily), reports, "sales_profit_forecast.csv"
-        )
-    else:
-        raise KeyError(f"unknown stage {name!r}")
+        # the line items carry the order headers: one grouped pass
+        df = cp.build_orders_with_profit(_read(spark, ctx, "line_items"))
+    else:  # build_daily_summary
+        df = cp.build_daily_summary(_read(spark, ctx, "orders"))
+    _write(df, ctx, artifact)
 
 
 def run_dag(ctx: StageContext) -> None:
@@ -227,13 +169,31 @@ def run_dag(ctx: StageContext) -> None:
         run_stage(name, ctx)
 
 
+def run_stages(ctx: StageContext) -> None:
+    """Run the graph's stage tasks (every task but the report exports)
+    in topological order; ``stage_outputs`` then reads the reports."""
+    for name in topological_order():
+        if not CANDY_DAG_TASKS[name][1].startswith("reports/"):
+            run_stage(name, ctx)
+
+
+def stage_outputs(ctx: StageContext) -> dict[str, DataFrame]:
+    """The five reference outputs over the stage artifacts, through the
+    same report projections the export tasks write."""
+    from ..plans.candy_pipeline import REPORTS, report_outputs
+
+    spark = ctx.session_factory()
+    relations = {r for reads, _ in REPORTS.values() for r in reads}
+    return report_outputs({r: _read(spark, ctx, r) for r in relations})
+
+
 def build_airflow_dag(dag_id: str = "candy_store_pipeline", ctx: StageContext | None = None):
     """Construct a real Airflow DAG from ``CANDY_DAG_TASKS``.
 
     Import-gated: raises ``ImportError`` where Airflow is absent. Each
-    task is a PythonOperator invoking the corresponding stage of
-    ``run_pipeline_staged`` with its own SparkSession — legal here
-    because stage boundaries are parquet, not temp views.
+    task is a PythonOperator invoking ``run_stage`` for its task with
+    its own SparkSession — legal here because stage boundaries are
+    persisted artifacts, not temp views.
     """
     from airflow import DAG  # noqa: PLC0415 — env-gated by design
     from airflow.operators.python import PythonOperator

@@ -1,26 +1,16 @@
-"""The candy pipeline composed with the table-log/SPJ surface: stage
-boundaries become hash-bucketed, versioned table-log tables, and the
-orders-rollup-joins-headers pass rides the fused co-located
-aggregate-join — zero exchange of line items, rollups, or headers.
+"""The candy pipeline as incremental view maintenance (IVM) over
+table-log stage tables: ``ingest_days`` appends one increment of day
+files to the line-items table, whose change feed maintains the orders,
+usage and daily-summary views, so a day's cost follows its own size,
+never the history's.
 
-``run_pipeline_staged`` (the reference's Airflow DAG done right,
-`plans/candy_pipeline.py:234`) exchanges stages via plain parquet: a
-resumable boundary, but each stage re-shuffles what the next one
-joins, and stage outputs have no history. This variant writes each
-stage bucketed on its join key through the table log, so:
-
-- the per-order rollup + headers join (reference's SECOND full scan,
-  `data_processor.py:310-326`) runs as ONE task wave over aligned
-  bucket groups (``colocated_aggregate_join``) — at 100 TB that
-  stage shuffles no table data at all (the routing relation arrives
-  pre-sliced one row per task);
-- every stage output is a versioned snapshot: yesterday's line items
-  are one ``version=`` away (time travel), a re-run lands as a new
-  atomic version instead of clobbering parquet in place, and
-  downstream consumers can follow the stage's change feed.
-
-Output parity with ``run_pipeline`` is pinned in
-``tests/test_candy_colocated.py`` over the reference's own dataset.
+The batch forms live elsewhere: ``plans/candy_pipeline.run_pipeline``
+(one session) and ``orchestration/candy_dag`` (the staged form, with
+parquet or table-log stage artifacts). All of them, and this chain's
+``read_pipeline_outputs``, project the five reference outputs through
+the one ``candy_pipeline.REPORTS`` definition. Output parity with
+``run_pipeline`` is pinned in ``tests/test_candy_nightly.py`` and
+``tests/test_candy_colocated.py`` over generated histories.
 """
 
 from __future__ import annotations
@@ -30,133 +20,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import tracked_cache
-from ..operators.colocated import colocated_aggregate_join, write_bucketed
+from ..operators.colocated import write_bucketed
 from ..sources import table_log as tl
 from .candy_pipeline import (
     _ROUND2,
-    build_daily_summary,
-    build_forecast,
     build_line_items,
-    build_products_updated,
     first_header,
     load_daily_transactions,
+    profit_term,
+    report_outputs,
 )
-
-
-# ONE definition of the fused-orders stage, shared with the
-# orchestrated DAG's table_log branch (orchestration/candy_dag.py):
-# both claim golden parity, so the profit-term expression, the header
-# dedup, the agg list, and the rounding point must not be able to
-# drift apart.
-FUSED_ORDER_AGGS = [
-    ("line_total", "sum", "amount_raw"),
-    ("order_id", "count", "num_items"),
-    ("profit_term", "sum", "order_profit"),
-]
-
-
-def line_items_with_profit_term(li: DataFrame) -> DataFrame:
-    """Stage-1 line items plus the precomputed profit term, so the
-    fused rollup is a pure stored-column aggregate."""
-    return li.withColumn(
-        "profit_term",
-        F.col("line_total") - F.col("quantity") * F.col("cost_to_make"),
-    )
-
-
-def dedup_headers(txns: DataFrame) -> DataFrame:
-    """One header row per order, taken from its first occurrence in
-    file order (``first_header``; the reference's dropDuplicates keeps
-    an arbitrary one)."""
-    return (
-        txns.select(
-            F.col("transaction_id").alias("order_id"),
-            F.col("timestamp").alias("order_datetime"),
-            "customer_id",
-            "day_idx",
-            "row_in_file",
-        )
-        .groupBy("order_id")
-        .agg(*first_header())
-    )
-
-
-def fused_orders_select(rolled: DataFrame) -> DataFrame:
-    """The golden orders-with-profit projection over the fused
-    rollup+join output (reference money rounding on the amount)."""
-    return rolled.select(
-        "order_id",
-        "order_datetime",
-        "customer_id",
-        _ROUND2(F.col("amount_raw")).alias("total_amount"),
-        "num_items",
-        "order_profit",
-    )
-
-
-def run_pipeline_tablelog(
-    spark: SparkSession,
-    transaction_paths: list[str],
-    products: DataFrame,
-    workdir: str,
-    *,
-    n_buckets: int = 16,
-) -> dict[str, DataFrame]:
-    """The five reference outputs with table-log stage boundaries.
-
-    Stage 1 writes line items (plus the precomputed ``profit_term``,
-    so the rollup is a pure stored-column aggregate) and the
-    deduplicated headers as two tables bucketed on ``order_id`` with
-    one committed spec. Stage 2 is the fused SPJ: per-order amount /
-    item-count / profit aggregate to completion inside each bucket
-    task and join that bucket's headers locally — orders whose items
-    were all null-qty vanish exactly as in the reference (inner join).
-    Stage 3 appends the orders relation as its own versioned table and
-    derives daily summary + forecast from the committed snapshot."""
-    li_dir = os.path.join(workdir, "line_items_tl")
-    hdr_dir = os.path.join(workdir, "headers_tl")
-    orders_dir = os.path.join(workdir, "orders_tl")
-
-    # two write jobs consume txns (line items + headers): cached, the
-    # multiLine JSON parse happens once — same rule as run_pipeline
-    txns = load_daily_transactions(spark, transaction_paths).transform(
-        tracked_cache
-    )
-    write_bucketed(
-        line_items_with_profit_term(build_line_items(txns, products)),
-        li_dir,
-        key_col="order_id",
-        n_buckets=n_buckets,
-    )
-    write_bucketed(
-        dedup_headers(txns),
-        hdr_dir,
-        key_col="order_id",
-        n_buckets=n_buckets,
-    )
-
-    rolled = colocated_aggregate_join(
-        spark, li_dir, hdr_dir, aggs=FUSED_ORDER_AGGS
-    )
-    # overwrite, not append: a re-run with the same workdir must
-    # REPLACE the orders relation (append would silently double every
-    # order in three outputs) — version 0 stays readable for time
-    # travel either way
-    tl.overwrite(fused_orders_select(rolled), orders_dir)
-
-    orders_full = tl.read_snapshot(spark, orders_dir)
-    line_items = tl.read_snapshot(spark, li_dir)
-    daily = build_daily_summary(orders_full)
-    return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit").orderBy("order_id"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
-    }
 
 
 def _ivm_dirs(workdir: str) -> tuple[str, str, str, str]:
@@ -216,12 +89,15 @@ def ingest_days(
       day-scoped (the reference ingests one collection per day;
       transaction ids never recur), so a batch's order rows are new
       keys and the consumer APPENDS them as new bucketed files —
-      history is never read or rewritten. A keyed MERGE here would be
+      history is never rewritten. A keyed MERGE here would be
       O(history) per day: a saturating day hashes orders into every
       bucket group, so the merge would rewrite the whole accumulated
       rollup (and its change feed would re-fold it downstream). The
       consumer raises on any non-insert change row — a restatement of
-      the line-items stage needs a rebuild, not silent merging.
+      the line-items stage needs a rebuild, not silent merging — and
+      an increment whose transaction id the view already holds raises
+      before anything is committed (``_recurring_order_id``), where an
+      append would silently give that id a second order row.
     - the USAGE and DAILY views are CDC merges, but their state is
       DIMENSION-sized (products; distinct dates), so the merge
       rewrite is bounded by the view's own small size, not by fact
@@ -278,6 +154,9 @@ def ingest_days(
                 if tl.current_version(orders_dir) is not None
                 else "overwrite"
             ),
+            # per-file [min, max] of order_id: the recurring-id probe
+            # reads only the files whose range meets an increment's
+            stats_cols=["order_id"],
             extra_meta={"cdc_batch": batch_id},
         )
 
@@ -347,6 +226,13 @@ def ingest_days(
         return False
 
     txns = load_daily_transactions(spark, day_paths)
+    recurring = _recurring_order_id(spark, orders_dir, txns)
+    if recurring is not None:
+        raise ValueError(
+            f"transaction id {recurring} is already an order in "
+            f"{orders_dir}: the insert-only orders view cannot take a "
+            "recurring id (ingest its days as one batch, or rebuild)"
+        )
     # remaining stock = catalog stock minus MERGED usage: the one
     # carried state the sequential greedy allocation needs (per
     # product — dimension-sized, never the line-item history)
@@ -366,7 +252,9 @@ def ingest_days(
         day_products = products
     # the line items carry their order headers (order_datetime,
     # customer_id), which the insert-only orders view folds
-    li_day = line_items_with_profit_term(build_line_items(txns, day_products))
+    li_day = build_line_items(txns, day_products).withColumn(
+        "profit_term", profit_term()
+    )
     write_bucketed(
         li_day,
         li_dir,
@@ -382,6 +270,29 @@ def ingest_days(
     return True
 
 
+def _recurring_order_id(
+    spark: SparkSession, orders_dir: str, txns: DataFrame
+) -> int | None:
+    """A transaction id of ``txns`` (those with a non-null item) that
+    the orders view already holds, or None. Only orders files whose
+    committed ``order_id`` [min, max] meets the increment's id range
+    are read (``read_snapshot_pruned``'s ``footer_stats.keep_file``
+    rule); ids that rise by day leave no file to read."""
+    if tl.current_version(orders_dir) is None:
+        return None
+    ids = txns.filter(F.exists("items", lambda i: i.qty.isNotNull())).select(
+        F.col("transaction_id").alias("order_id")
+    )
+    lo, hi = ids.agg(F.min("order_id"), F.max("order_id")).first()
+    if lo is None:
+        return None
+    held, kept, _ = tl.read_snapshot_pruned(spark, orders_dir, "order_id", lo, hi)
+    if not kept:
+        return None
+    hit = held.select("order_id").join(ids, "order_id", "left_semi").first()
+    return None if hit is None else hit.order_id
+
+
 def read_pipeline_outputs(
     spark: SparkSession, workdir: str, products: DataFrame
 ) -> dict[str, DataFrame]:
@@ -389,9 +300,7 @@ def read_pipeline_outputs(
     current snapshots (no recomputation — the maintenance already
     paid it)."""
     li_dir, _, orders_dir, daily_dir = _ivm_dirs(workdir)
-    line_items = tl.read_snapshot(spark, li_dir)
-    orders_tbl = tl.read_snapshot(spark, orders_dir)
-    orders_full = orders_tbl.select(
+    orders = tl.read_snapshot(spark, orders_dir).select(
         "order_id",
         "order_datetime",
         "customer_id",
@@ -408,17 +317,15 @@ def read_pipeline_outputs(
             _ROUND2(F.col("sales_raw")).alias("total_sales"),
             _ROUND2(F.col("profit_raw")).alias("total_profit"),
         )
-        .orderBy("date")
     )
-    return {
-        "order_line_items": line_items.select(
-            "order_id", "product_id", "quantity", "unit_price", "line_total"
-        ).orderBy("order_id", "product_id"),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": orders_full.drop("order_profit").orderBy("order_id"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
-    }
+    return report_outputs(
+        {
+            "line_items": tl.read_snapshot(spark, li_dir),
+            "products": products,
+            "orders": orders,
+            "daily_summary": daily,
+        }
+    )
 
 
 def run_pipeline_incremental(
@@ -467,7 +374,7 @@ def run_pipeline_incremental(
     ``version=`` away. Re-invoking over the same workdir with an
     extended path list ingests only the new days (the append commit's
     meta is the day ledger). Outputs match ``run_pipeline``'s five
-    (parity pinned in tests over the reference's own dataset)."""
+    (parity pinned in tests over generated histories)."""
     for day_path in transaction_paths:
         ingest_days(
             spark, [day_path], products, workdir, n_buckets=n_buckets

@@ -21,10 +21,14 @@ orders rollup needs no second branch over the transactions:
                       │                                 → forecast
                       └─ used stock per product → products_updated
 
-The report outputs each end in one sorted partition
-(``repartition(1).sortWithinPartitions``): ``save_single_csv`` writes
-them through one task anyway, so a global ``orderBy``'s range exchange
-and its sampling job buy nothing.
+The five report projections are defined once (``REPORTS``) and every
+form builds its outputs through ``report_outputs``: this one-session
+pipeline, the staged DAG's export tasks (``orchestration/candy_dag.py``,
+the only staged form) and the maintained tables' reader
+(``candy_colocated.read_pipeline_outputs``). Each report ends in one
+sorted partition (``repartition(1).sortWithinPartitions``):
+``save_single_csv`` writes it through one task anyway, so a global
+``orderBy``'s range exchange and its sampling job buy nothing.
 
 Ordering policy: the reference's scan order is *file order* (SURVEY
 §2.3 — its README claims chronological, but simulation proves file
@@ -41,8 +45,9 @@ Known reference bugs fixed here (SURVEY §2.2 op-15, §2.9):
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import tracked_cache
@@ -192,6 +197,12 @@ def first_header() -> list:
     ]
 
 
+def profit_term() -> Column:
+    """One line item's profit: its total minus its allocated units'
+    cost to make (a cancelled line contributes zero)."""
+    return F.col("line_total") - F.col("quantity") * F.col("cost_to_make")
+
+
 def build_orders_with_profit(line_items: DataFrame) -> DataFrame:
     """Per-order rollup in ONE grouped pass over the line items (the
     reference re-reads every day's collection a second time for the
@@ -207,27 +218,24 @@ def build_orders_with_profit(line_items: DataFrame) -> DataFrame:
         *first_header(),
         _ROUND2(F.sum("line_total")).alias("total_amount"),
         F.count(F.lit(1)).alias("num_items"),  # counts cancelled rows too
-        F.sum(
-            F.col("line_total") - F.col("quantity") * F.col("cost_to_make")
-        ).alias("order_profit"),
+        F.sum(profit_term()).alias("order_profit"),
     )
 
 
 def build_daily_summary(orders_with_profit: DataFrame) -> DataFrame:
     """Per-day orders/sales/profit in ONE grouped pass over the
     profit-carrying orders relation (reference runs two grouped passes
-    + join; op 22-25), in one partition sorted by date."""
-    daily = orders_with_profit.groupBy(
-        F.to_date("order_datetime").alias("date")
-    ).agg(
-        F.count(F.lit(1)).alias("num_orders"),
-        _ROUND2(F.sum("total_amount")).alias("total_sales"),
-        _ROUND2(F.sum("order_profit")).alias("total_profit"),
-    )
+    + join; op 22-25). Unordered — the report sorts."""
     # golden answers use padded months; the reference's yyyy-M-dd is a
     # bug (SURVEY §2.2 op-15)
-    return _single_sorted(daily, "date").withColumn(
-        "date", F.date_format("date", "yyyy-MM-dd")
+    return (
+        orders_with_profit.groupBy(F.to_date("order_datetime").alias("date"))
+        .agg(
+            F.count(F.lit(1)).alias("num_orders"),
+            _ROUND2(F.sum("total_amount")).alias("total_sales"),
+            _ROUND2(F.sum("order_profit")).alias("total_profit"),
+        )
+        .withColumn("date", F.date_format("date", "yyyy-MM-dd"))
     )
 
 
@@ -243,58 +251,44 @@ def build_forecast(daily_summary: DataFrame, horizon: int = 1) -> DataFrame:
     )
 
 
-def run_pipeline_staged(
-    spark: SparkSession,
-    transaction_paths: list[str],
-    products: DataFrame,
-    workdir: str,
-) -> dict[str, DataFrame]:
-    """The multi-stage (DAG/orchestrator) form of the pipeline.
-
-    The reference's Airflow variant passes intermediates between tasks
-    as session temp views, which do not survive the per-task
-    SparkSessions it creates — structurally broken
-    (`candy_store_pipeline_dag.py:147,162,171,198,206-207`; SURVEY
-    §3.3). Here every stage boundary is persisted parquet: any stage
-    can run in its own session/process/cluster and resume from the
-    previous stage's files.
-    """
-    from ..sources.sinks import write_partitioned
-
-    stage1 = os.path.join(workdir, "line_items")
-    txns = load_daily_transactions(spark, transaction_paths)
-    write_partitioned(build_line_items(txns, products), stage1)
-
-    line_items = spark.read.parquet(stage1)
-    stage2 = os.path.join(workdir, "orders")
-    # the staged relation carries order_profit so the next stage never
-    # re-aggregates line_items; the golden orders output drops it
-    write_partitioned(build_orders_with_profit(line_items), stage2)
-
-    orders_full = spark.read.parquet(stage2)
-    daily = build_daily_summary(orders_full)
-    return _outputs(line_items, products, orders_full, daily)
-
-
-def _outputs(
-    line_items: DataFrame,
-    products: DataFrame,
-    orders_full: DataFrame,
-    daily: DataFrame,
-) -> dict[str, DataFrame]:
-    """The five reference outputs, each ready for ``save_single_csv``."""
-    return {
-        "order_line_items": _single_sorted(
-            line_items.select(
-                "order_id", "product_id", "quantity", "unit_price", "line_total"
-            ),
-            "order_id",
-            "product_id",
+def _line_items_report(line_items: DataFrame) -> DataFrame:
+    return _single_sorted(
+        line_items.select(
+            "order_id", "product_id", "quantity", "unit_price", "line_total"
         ),
-        "products_updated": build_products_updated(line_items, products),
-        "orders": _single_sorted(orders_full.drop("order_profit"), "order_id"),
-        "daily_summary": daily,
-        "sales_profit_forecast": build_forecast(daily),
+        "order_id",
+        "product_id",
+    )
+
+
+def _orders_report(orders_with_profit: DataFrame) -> DataFrame:
+    return _single_sorted(orders_with_profit.drop("order_profit"), "order_id")
+
+
+def _daily_summary_report(daily: DataFrame) -> DataFrame:
+    return _single_sorted(daily, "date")
+
+
+#: The five reference outputs: name -> (the relations it reads, its
+#: projection). The ONE definition of each report's columns and order.
+#: Relation names are the staged DAG's artifact names, plus
+#: ``products`` for the catalog.
+REPORTS = {
+    "order_line_items": (("line_items",), _line_items_report),
+    "products_updated": (("line_items", "products"), build_products_updated),
+    "orders": (("orders",), _orders_report),
+    "daily_summary": (("daily_summary",), _daily_summary_report),
+    "sales_profit_forecast": (("daily_summary",), build_forecast),
+}
+
+
+def report_outputs(relations: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
+    """The five reference outputs over ``relations`` (``line_items``,
+    ``products``, the profit-carrying ``orders``, ``daily_summary``),
+    each ready for ``save_single_csv``."""
+    return {
+        name: project(*(relations[r] for r in reads))
+        for name, (reads, project) in REPORTS.items()
     }
 
 
@@ -402,5 +396,15 @@ def run_pipeline(
     # forecast ← daily); caching them cuts the re-derivation chain back
     # to the line items on every output
     orders_full = build_orders_with_profit(line_items).transform(tracked_cache)
-    daily = build_daily_summary(orders_full).transform(tracked_cache)
-    return _outputs(line_items, products, orders_full, daily)
+    # cached as its report (one sorted partition), the daily summary
+    # needs no second sort, and the forecast reads a single partition
+    daily = _daily_summary_report(build_daily_summary(orders_full)).transform(
+        tracked_cache
+    )
+    relations = {
+        "line_items": line_items,
+        "products": products,
+        "orders": orders_full,
+        "daily_summary": daily,
+    }
+    return {**report_outputs(relations), "daily_summary": daily}

@@ -643,12 +643,11 @@ def serve_unbucketed_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "co-located order dim in the SAME task — zero exchange of line "
     "items, rollups, or headers; composing bucketed_aggregate + "
     "colocated_bucket_join would still exchange the intermediate. "
-    "This is the candy pipeline's orders-rollup-joins-headers stage "
-    "(reference data_processor.py:310-326) as a storage-partitioned "
-    "plan; run_pipeline_tablelog composes it over the real candy "
-    "fixture with table-log stage boundaries (golden-parity pinned "
-    "in tests/test_candy_colocated.py). The final per-status fold is "
-    "an ordinary exchange over rollup-sized rows.",
+    "It is the storage-partitioned form of an orders-rollup-joins-"
+    "headers pass (reference data_processor.py:310-326); the candy "
+    "pipeline itself carries each order's header on its line items "
+    "and needs no join. The final per-status fold is an ordinary "
+    "exchange over rollup-sized rows.",
     tags=("table_log", "bucketed", "colocated", "join", "agg"),
 )
 def colocated_rollup_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,50 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import SQL_TOKENS, tokens
 from ..sources.tpch import load_table
-from .advanced import _SQL_ALLOCATION
 from .registry import register
-
-
-@register(
-    "inventory_allocation_arrow",
-    oracle=_SQL_ALLOCATION,
-    doc="Arrow-native twin of the flagship stateful operator "
-    "(operators/allocation.py allocate_greedy_arrow): same broadcast "
-    "stock join and product-bucket shuffle, worker half on "
-    "groupBy().applyInArrow with the shared vectorized greedy kernel. "
-    "Registered to pin a MEASURED NEGATIVE RESULT: the worker compute "
-    "is cheaper (C++ sort, shared kernel) but applyInArrow's "
-    "group-input serializer costs ~4x applyInPandas's on this build "
-    "(noop A/B: 4.55s vs 1.08s at sf1, unchanged with 1-row output), "
-    "so the pandas tier stays production for large-passthrough "
-    "grouped ops; applyInArrow pays only when per-group output is "
-    "tiny (label_centroids_arrow). Same recursive-CTE oracle — "
-    "results identical by construction (one shared kernel).",
-    tags=("stateful", "applyInArrow", "negative-result"),
-)
-def inventory_allocation_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.allocation import allocate_greedy_arrow
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_suppkey",
-        "l_extendedprice",
-        F.col("l_partkey").alias("product_id"),
-        F.col("l_quantity").cast("int").alias("qty"),
-    )
-    stock = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("product_id"),
-        (F.col("p_size") * 40).alias("stock"),
-    )
-    from ..operators.allocation import grouped_map_buckets
-
-    return allocate_greedy_arrow(
-        li,
-        stock,
-        order_by=("l_orderkey", "l_linenumber", "l_suppkey", "l_extendedprice"),
-        buckets=grouped_map_buckets(spark),
-    )
 
 
 _HH_T = 200  # heavy-hitter threshold divisor: report tokens > n/200

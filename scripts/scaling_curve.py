@@ -285,14 +285,16 @@ def main() -> None:
     if have_candy and (
         args.only is None or "candy_pipeline_tablelog_outputs" in args.only
     ):
-        # the table-log/SPJ staged form: bucketed stage tables + the
-        # fused rollup-join; each timed run writes fresh stage tables
-        # (that write IS part of the staged pipeline's cost)
+        # the table-log DAG's stage tasks: versioned stage tables (line
+        # items bucketed on order_id); each timed run writes fresh
+        # stage tables (that write IS part of the staged pipeline's cost)
         import shutil as _shutil
         import tempfile as _tempfile
 
-        from candy_store_etl_spark.plans.candy_colocated import (
-            run_pipeline_tablelog,
+        from candy_store_etl_spark.orchestration import (
+            StageContext,
+            run_stages,
+            stage_outputs,
         )
 
         _tl_dirs: list = []
@@ -305,7 +307,17 @@ def main() -> None:
                 _shutil.rmtree(_tl_dirs.pop(), ignore_errors=True)
             work = _tempfile.mkdtemp(prefix="curve_candy_tl_")
             _tl_dirs.append(work)
-            return run_pipeline_tablelog(spark_, paths, products, work)
+            ctx = StageContext(
+                session_factory=lambda: spark_,
+                transaction_paths=tuple(paths),
+                products_path=os.path.join(
+                    os.path.dirname(paths[0]), "products.csv"
+                ),
+                workdir=work,
+                stage_format="table_log",
+            )
+            run_stages(ctx)
+            return stage_outputs(ctx)
 
         _candy_row("candy_pipeline_tablelog_outputs", _run_tl)
         while _tl_dirs:
@@ -446,12 +458,10 @@ def main() -> None:
             "offset transaction ids, same product catalog) — its "
             "'sf0.1' column is the reference's base 10-day dataset. "
             "`candy_pipeline_tablelog_outputs` is the same workload "
-            "through table-log stage boundaries (bucketed stage "
-            "tables + the fused co-located rollup-join, "
-            "plans/candy_colocated.py) — its time INCLUDES writing "
-            "the versioned stage tables each run, and its second "
-            "decade stays sub-linear because the rollup+headers join "
-            "moves no fact data across an exchange. Streaming "
+            "through the table-log DAG's stage tasks "
+            "(orchestration/candy_dag.py: versioned stage tables, the "
+            "line items bucketed on order_id) — its time INCLUDES "
+            "writing the versioned stage tables each run. Streaming "
             "throughput is measured separately by "
             "scripts/streaming_throughput.py, which appends its "
             "section below.\n"

@@ -249,52 +249,15 @@ def test_chained_auto_degenerates_to_single_pass(spark):
     assert got == {(1, 0): 5, (1, 1): 0, (2, 0): 3}
 
 
-def test_arrow_path_equals_pandas_path(spark, sf_smoke):
-    """allocate_greedy_arrow shares _greedy_kernel with the pandas
-    path, but the surrounding sort + column plumbing differ (Arrow C++
-    sort_by vs pandas mergesort, Table.from_arrays vs DataFrame copy)
-    — pin row-exact equivalence through Spark on real data, bucketed
-    and unbucketed."""
-    from candy_store_etl_spark.operators.allocation import (
-        allocate_greedy_arrow,
-    )
-
-    li = load_table(spark, sf_smoke, "lineitem").select(
-        *_ORDER_KEY,
-        F.col("l_partkey").alias("product_id"),
-        F.col("l_quantity").cast("int").alias("qty"),
-    )
-    stock_df = load_table(spark, sf_smoke, "part").select(
-        F.col("p_partkey").alias("product_id"),
-        (F.col("p_size") * 10).alias("stock"),
-    )
-    for buckets in (None, 8):
-        p = allocate_greedy(
-            li, stock_df, order_by=_ORDER_KEY, buckets=buckets
-        )
-        a = allocate_greedy_arrow(
-            li, stock_df, order_by=_ORDER_KEY, buckets=buckets
-        )
-        key = lambda r: tuple(r[c] for c in _ORDER_KEY)
-        assert sorted(map(tuple, p.collect()), key=lambda t: t[:4]) == sorted(
-            map(tuple, a.collect()), key=lambda t: t[:4]
-        ), f"buckets={buckets}"
-
-
 def test_null_qty_raises_loudly(spark):
     """A null qty must fail, not silently become INT64_MIN 'invalid
     negative' (numpy NaN->int64 emits garbage with only a warning —
     the pre-vectorization row loop raised ValueError and the kernel
-    entry points must keep that contract)."""
-    from candy_store_etl_spark.operators.allocation import (
-        allocate_greedy_arrow,
-    )
-
+    entry point must keep that contract)."""
     items = spark.createDataFrame(
         [(1, 5, 1), (1, None, 2)], "product_id int, qty int, seq int"
     )
     stock = spark.createDataFrame([(1, 100)], "product_id int, stock int")
-    for fn in (allocate_greedy, allocate_greedy_arrow):
-        with pytest.raises(Exception) as ei:
-            fn(items, stock, order_by=("seq",)).collect()
-        assert "null" in str(ei.value).lower() or "NaN" in str(ei.value)
+    with pytest.raises(Exception) as ei:
+        allocate_greedy(items, stock, order_by=("seq",)).collect()
+    assert "null" in str(ei.value).lower() or "NaN" in str(ei.value)

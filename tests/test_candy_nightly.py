@@ -7,7 +7,9 @@ the plain-Python reference semantics of ``perfbench.reference``.
 Also pinned here: the three mechanisms that keep a pass at 19 Spark
 jobs — day files read without a listing job, report outputs sorted in
 one partition without a sampling job, and order headers carried on the
-line items instead of a second branch over the transactions."""
+line items instead of a second branch over the transactions — and the
+other forms of the pipeline (the staged DAG over parquet or table-log
+artifacts, and the incremental table-log chain) against this one."""
 
 from __future__ import annotations
 
@@ -20,17 +22,19 @@ from contextlib import contextmanager
 import pytest
 
 from candy_store_etl_spark.caching import release_caches
-from candy_store_etl_spark.plans.candy_pipeline import (
-    run_pipeline,
-    run_pipeline_staged,
+from candy_store_etl_spark.orchestration import (
+    StageContext,
+    run_dag,
+    run_stages,
+    stage_outputs,
 )
+from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
 from candy_store_etl_spark.sources import candy
 from candy_store_etl_spark.sources.candy import read_products, read_transactions
 from candy_store_etl_spark.sources.sinks import save_single_csv
 from perfbench import gen
 from perfbench.reference import check_outputs, reference_outputs
 
-HISTORY_DAYS = 34
 OUTPUTS = (
     "order_line_items",
     "products_updated",
@@ -56,11 +60,9 @@ def _job_ids(spark, group: str):
 
 
 @pytest.fixture(scope="module")
-def history(tmp_path_factory):
-    """(day-file paths, products.csv) of a seeded 34-day history."""
-    d = str(tmp_path_factory.mktemp("candy_history"))
-    _, paths = gen.write_candy(d, 11, HISTORY_DAYS)
-    return paths, os.path.join(d, "products.csv")
+def history(candy_history):
+    """(day-file paths, products.csv) of the seeded 34-day history."""
+    return candy_history.paths, candy_history.products_csv
 
 
 @pytest.fixture(scope="module")
@@ -94,11 +96,25 @@ def test_nightly_pass_launches_at_most_20_jobs(nightly):
     assert len(build_jobs) + len(sink_jobs) <= 20
 
 
+def _dag_context(spark, paths, products_csv, workdir, stage_format):
+    return StageContext(
+        session_factory=lambda: spark,
+        transaction_paths=tuple(paths),
+        products_path=str(products_csv),
+        workdir=str(workdir),
+        stage_format=stage_format,
+    )
+
+
 def test_staged_pipeline_returns_same_rows(spark, history, tmp_path):
+    """The parquet-staged DAG's five outputs, read back from its stage
+    artifacts, are row-for-row the one-session pipeline's."""
     paths, products_csv = history
     products = read_products(spark, products_csv)
     want = run_pipeline(spark, paths, products)
-    got = run_pipeline_staged(spark, paths, products, str(tmp_path / "staged"))
+    ctx = _dag_context(spark, paths, products_csv, tmp_path / "staged", "parquet")
+    run_stages(ctx)
+    got = stage_outputs(ctx)
     try:
         for name in OUTPUTS:
             assert got[name].columns == want[name].columns, name
@@ -176,14 +192,15 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
     row takes the header of the first occurrence in file order — not
     the earliest timestamp nor the smallest or largest customer — and
     totals over all its items. Transaction 8's items are all null, so
-    it has no order. Every form agrees: the one-session pipeline, the
-    table-log pipeline, the table-log DAG and a two-day incremental
-    batch."""
-    from candy_store_etl_spark.orchestration import StageContext, run_dag
+    it has no order. Every batch form agrees: the one-session pipeline,
+    the parquet and table-log DAGs and a two-day incremental batch.
+    Ingesting the days one increment each instead raises on the
+    recurring id before anything is committed: the insert-only orders
+    view would otherwise hold two order rows for it."""
     from candy_store_etl_spark.plans.candy_colocated import (
         ingest_days,
         read_pipeline_outputs,
-        run_pipeline_tablelog,
+        run_pipeline_incremental,
     )
     from candy_store_etl_spark.sources import table_log as tl
 
@@ -209,19 +226,13 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
     )
     products = read_products(spark, str(products_csv))
 
-    def dag(workdir):
-        ctx = StageContext(
-            session_factory=lambda: spark,
-            transaction_paths=tuple(days),
-            products_path=str(products_csv),
-            workdir=workdir,
-            stage_format="table_log",
-        )
-        run_dag(ctx)
-        return {
-            "orders": tl.read_snapshot(spark, ctx.stage("orders")).drop("order_profit"),
-            "order_line_items": tl.read_snapshot(spark, ctx.stage("line_items")),
-        }
+    def dag(stage_format):
+        def run(workdir):
+            ctx = _dag_context(spark, days, products_csv, workdir, stage_format)
+            run_stages(ctx)
+            return stage_outputs(ctx)
+
+        return run
 
     def batch(workdir):
         assert ingest_days(spark, days, products, workdir, tag="days-1-2")
@@ -229,10 +240,8 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
 
     forms = {
         "run_pipeline": lambda workdir: run_pipeline(spark, days, products),
-        "run_pipeline_tablelog": lambda workdir: run_pipeline_tablelog(
-            spark, days, products, workdir
-        ),
-        "dag_table_log": dag,
+        "dag_parquet": dag("parquet"),
+        "dag_table_log": dag("table_log"),
         "ingest_days_batch": batch,
     }
     for name, form in forms.items():
@@ -240,47 +249,44 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
         try:
             orders = [tuple(r) for r in outs["orders"].collect()]
             lines = outs["order_line_items"].count()
+            days_summarized = outs["daily_summary"].count()
         finally:
             release_caches()
         # 2 x 2.00 + 1 x 3.00 + 1 x 2.00 + 1 x 3.00 over the non-null items
         assert orders == [(7, "2024-02-02T10:00:00.000000", 5, 12.0, 4)], name
         assert lines == 4, name
+        assert days_summarized == 1, name
+
+    per_day = str(tmp_path / "ingest_days_per_day")
+    with pytest.raises(ValueError, match="transaction id 7 "):
+        run_pipeline_incremental(spark, days, products, per_day)
+    assert tl.current_version(os.path.join(per_day, "line_items_tl")) == 0
 
 
-def test_stage_boundary_variants_match_pipeline(spark, tmp_path):
-    """The parquet and table-log DAGs and the incremental table-log
-    chain build orders from the header-carrying line items too; their
-    five outputs equal the one-session pipeline's on a 3-day history."""
+def test_stage_boundary_variants_match_pipeline(spark, candy_history, nightly, tmp_path):
+    """The parquet and table-log DAGs write the one-session pipeline's
+    five CSVs over the 34-day history, and their stage boundaries are
+    what they claim: parquet directories on disk, or committed
+    table-log tables with the line items bucketed on order_id, that a
+    re-run replaces as a new version while version 0 stays readable.
+    The incremental table-log chain, one increment per day, equals the
+    one-session pipeline over the first days, where stock runs out."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
-    from candy_store_etl_spark.orchestration import StageContext, run_dag
+    from candy_store_etl_spark.operators import colocated as co
     from candy_store_etl_spark.plans.candy_colocated import (
         run_pipeline_incremental,
     )
+    from candy_store_etl_spark.plans.candy_pipeline import build_daily_summary
+    from candy_store_etl_spark.sources import table_log as tl
 
-    _, paths = gen.write_candy(str(tmp_path / "in"), 5, 3)
-    products_csv = str(tmp_path / "in" / "products.csv")
-    products = read_products(spark, products_csv)
-    want_dir = str(tmp_path / "want")
-    try:
-        want = run_pipeline(spark, paths, products)
-        for name in OUTPUTS:
-            save_single_csv(want[name], want_dir, f"{name}.csv")
-        ivm = run_pipeline_incremental(spark, paths, products, str(tmp_path / "ivm"))
-        for name in OUTPUTS:
-            pd.testing.assert_frame_equal(
-                ivm[name].toPandas(), want[name].toPandas(), check_dtype=False, obj=name
-            )
-    finally:
-        release_caches()
-
+    paths = candy_history.paths
+    want_dir = nightly[2]
+    stages = ("txns", "line_items", "orders", "daily_summary")
     for fmt in ("parquet", "table_log"):
-        ctx = StageContext(
-            session_factory=lambda: spark,
-            transaction_paths=tuple(paths),
-            products_path=products_csv,
-            workdir=str(tmp_path / f"dag_{fmt}"),
-            stage_format=fmt,
+        ctx = _dag_context(
+            spark, paths, candy_history.products_csv, tmp_path / f"dag_{fmt}", fmt
         )
         run_dag(ctx)
         for name in OUTPUTS:
@@ -289,3 +295,39 @@ def test_stage_boundary_variants_match_pipeline(spark, tmp_path):
                 pd.read_csv(os.path.join(want_dir, f"{name}.csv")),
                 obj=f"{fmt}:{name}",
             )
+        if fmt == "parquet":
+            for artifact in stages:
+                assert os.path.isdir(ctx.stage(artifact)), artifact
+                assert tl.current_version(ctx.stage(artifact)) is None, artifact
+            continue
+        for artifact in stages:
+            assert tl.current_version(ctx.stage(artifact)) == 0, artifact
+        li = ctx.stage("line_items")
+        assert co.bucket_spec(li) == {"key": "order_id", "n": 16}
+        # the staged line items serve a bucketed point read directly
+        any_order = tl.read_snapshot(spark, li).select("order_id").first()[0]
+        hit = co.point_lookup(spark, li, [any_order])
+        assert hit.filter(F.col("order_id") == any_order).count() >= 1
+        # a re-run over the same workdir replaces every stage (no
+        # doubled orders) while version 0 stays readable
+        orders = ctx.stage("orders")
+        v0_rows = tl.read_snapshot(spark, orders, version=0).count()
+        assert v0_rows > 0
+        run_stages(ctx)
+        assert tl.current_version(orders) == 1
+        assert tl.read_snapshot(spark, orders).count() == v0_rows
+        assert tl.read_snapshot(spark, orders, version=0).count() == v0_rows
+        assert build_daily_summary(tl.read_snapshot(spark, orders)).count() == len(paths)
+
+    short = paths[: candy_history.SHORT_DAYS]
+    products = read_products(spark, candy_history.short_products_csv)
+    try:
+        want = run_pipeline(spark, short, products)
+        assert want["order_line_items"].filter("quantity = 0").count() > 0
+        ivm = run_pipeline_incremental(spark, short, products, str(tmp_path / "ivm"))
+        for name in OUTPUTS:
+            pd.testing.assert_frame_equal(
+                ivm[name].toPandas(), want[name].toPandas(), check_dtype=False, obj=name
+            )
+    finally:
+        release_caches()

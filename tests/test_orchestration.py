@@ -1,7 +1,8 @@
-"""The DAG declaration must match the staged pipeline's real
-topology: every stage read must be preceded by its producing write,
-and the terminal artifacts must be exactly the five reference
-outputs."""
+"""The DAG declaration must match the stage tasks' real topology:
+every stage read must be preceded by its producing write, and the
+terminal artifacts must be exactly the five reference outputs. The
+DAG's outputs are pinned against the one-session pipeline in
+tests/test_candy_nightly.py."""
 
 from __future__ import annotations
 
@@ -40,141 +41,29 @@ def test_terminal_artifacts_are_the_five_reference_outputs():
 
 
 def test_stage_artifacts_match_staged_pipeline():
-    # run_pipeline_staged persists line_items then orders, and derives
-    # daily/forecast from the orders stage — the DAG must agree
+    # the stage tasks persist line_items then orders (built from the
+    # header-carrying line items alone), and derive daily/forecast
+    # from the orders stage
+    from candy_store_etl_spark.plans.candy_pipeline import REPORTS
+
     arts = {name: art for name, (_, art) in CANDY_DAG_TASKS.items()}
     assert arts["build_line_items"] == "line_items"
     assert arts["build_orders"] == "orders"
     deps = {name: set(d) for name, (d, _) in CANDY_DAG_TASKS.items()}
-    assert "build_line_items" in deps["build_orders"]
+    assert deps["build_orders"] == {"build_line_items"}
     assert "build_orders" in deps["build_daily_summary"]
     assert "build_daily_summary" in deps["forecast"]
+    # each export depends on exactly the tasks producing the
+    # relations its report reads (products is an input, not a task)
+    producer = {art: name for name, art in arts.items()}
+    for name, art in arts.items():
+        if art.startswith("reports/"):
+            reads = REPORTS[art.split("/", 1)[1]][0]
+            want = {producer[r] for r in reads if r != "products"}
+            assert deps[name] == want, name
 
 
 def test_airflow_binding_is_import_gated():
     pytest.importorskip("airflow", reason="airflow not installed here")
     dag = build_airflow_dag()
     assert len(dag.tasks) == len(CANDY_DAG_TASKS)
-
-
-def test_run_dag_executes_full_graph_and_matches_pipeline(spark, tmp_path):
-    """Drive every task through run_stage in topological order (exactly
-    what the Airflow PythonOperators do) and require the five report
-    CSVs to equal the single-session pipeline's outputs — proving the
-    graph really is resumable from parquet stage boundaries alone."""
-    import os
-
-    import pandas as pd
-
-    from candy_store_etl_spark.orchestration import StageContext, run_dag
-    from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
-    from candy_store_etl_spark.sources.candy import read_products
-    from candy_store_etl_spark.sources.sinks import save_single_csv
-
-    ref_data = "/root/reference/data/dataset_5"
-    if not os.path.isdir(ref_data):
-        pytest.skip("reference dataset not present")
-    dates = [f"202402{d:02d}" for d in range(1, 11)]
-    paths = tuple(
-        os.path.join(ref_data, f"transactions_{d}.json") for d in dates
-    )
-
-    ctx = StageContext(
-        session_factory=lambda: spark,
-        transaction_paths=paths,
-        products_path=os.path.join(ref_data, "products.csv"),
-        workdir=str(tmp_path / "dagwork"),
-    )
-    run_dag(ctx)
-
-    # the one-session pipeline, exported through the same CSV sink
-    want_dir = str(tmp_path / "want")
-    products = read_products(spark, ctx.products_path)
-    for name, df in run_pipeline(spark, list(paths), products).items():
-        if name == "order_line_items":
-            df = df.orderBy("order_id", "product_id")
-        elif name == "orders":
-            df = df.orderBy("order_id")
-        elif name == "daily_summary":
-            df = df.orderBy("date")
-        save_single_csv(df, want_dir, f"{name}.csv")
-
-    for name in [
-        "order_line_items",
-        "products_updated",
-        "orders",
-        "daily_summary",
-        "sales_profit_forecast",
-    ]:
-        got = pd.read_csv(os.path.join(ctx.workdir, "reports", f"{name}.csv"))
-        want = pd.read_csv(os.path.join(want_dir, f"{name}.csv"))
-        pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=name)
-
-
-def test_run_dag_tablelog_stages_match_pipeline(spark, tmp_path):
-    """The SAME task graph with stage_format='table_log': every stage
-    artifact is a versioned table-log table (fact stages bucketed on
-    order_id, so build_orders rides the fused storage-partitioned
-    rollup+join), and the five report CSVs still equal the
-    single-session pipeline's — orchestration, table format, and the
-    SPJ composed over the reference's own workload."""
-    import os
-
-    import pandas as pd
-
-    from candy_store_etl_spark.operators.colocated import bucket_spec
-    from candy_store_etl_spark.orchestration import StageContext, run_dag
-    from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
-    from candy_store_etl_spark.sources import table_log as tl
-    from candy_store_etl_spark.sources.candy import read_products
-    from candy_store_etl_spark.sources.sinks import save_single_csv
-
-    ref_data = "/root/reference/data/dataset_5"
-    if not os.path.isdir(ref_data):
-        pytest.skip("reference dataset not present")
-    dates = [f"202402{d:02d}" for d in range(1, 11)]
-    paths = tuple(
-        os.path.join(ref_data, f"transactions_{d}.json") for d in dates
-    )
-
-    ctx = StageContext(
-        session_factory=lambda: spark,
-        transaction_paths=paths,
-        products_path=os.path.join(ref_data, "products.csv"),
-        workdir=str(tmp_path / "tlwork"),
-        stage_format="table_log",
-    )
-    run_dag(ctx)
-
-    # stage artifacts are committed table-log tables; the fact stages
-    # carry the bucket spec the SPJ planned against
-    for artifact in ("txns", "line_items", "headers", "orders",
-                     "daily_summary"):
-        assert tl.current_version(ctx.stage(artifact)) == 0, artifact
-    for artifact in ("line_items", "headers"):
-        assert bucket_spec(ctx.stage(artifact)) == {
-            "key": "order_id",
-            "n": 16,
-        }, artifact
-
-    want_dir = str(tmp_path / "want")
-    products = read_products(spark, ctx.products_path)
-    for name, df in run_pipeline(spark, list(paths), products).items():
-        if name == "order_line_items":
-            df = df.orderBy("order_id", "product_id")
-        elif name == "orders":
-            df = df.orderBy("order_id")
-        elif name == "daily_summary":
-            df = df.orderBy("date")
-        save_single_csv(df, want_dir, f"{name}.csv")
-
-    for name in [
-        "order_line_items",
-        "products_updated",
-        "orders",
-        "daily_summary",
-        "sales_profit_forecast",
-    ]:
-        got = pd.read_csv(os.path.join(ctx.workdir, "reports", f"{name}.csv"))
-        want = pd.read_csv(os.path.join(want_dir, f"{name}.csv"))
-        pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=name)

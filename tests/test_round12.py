@@ -486,7 +486,7 @@ def test_maintenance_streak_is_per_column(spark, tmp_path):
 
 
 def test_ingest_days_crash_between_hops_repairs_on_rerun(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, candy_history
 ):
     """Kill the ingest after the line-items append + orders/usage
     drains but BEFORE the orders->daily drain; re-running the same
@@ -495,18 +495,12 @@ def test_ingest_days_crash_between_hops_repairs_on_rerun(
     chain defers manifest adoption: per-hop single-table atomicity +
     checkpointed drains already make a half-ingested day exactly
     repairable."""
-    REF_DATA = "/root/reference/data/dataset_5"
-    if not os.path.isdir(REF_DATA):
-        pytest.skip("reference dataset not present")
     from candy_store_etl_spark.plans import candy_colocated as cc
     from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
     from candy_store_etl_spark.sources.candy import read_products
 
-    products = read_products(spark, os.path.join(REF_DATA, "products.csv"))
-    paths = [
-        os.path.join(REF_DATA, f"transactions_202402{d:02d}.json")
-        for d in (1, 2)
-    ]
+    products = read_products(spark, candy_history.short_products_csv)
+    paths = candy_history.paths[:2]
     work = str(tmp_path / "ivm")
     assert cc.ingest_days(spark, [paths[0]], products, work)
 
