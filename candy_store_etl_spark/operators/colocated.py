@@ -64,19 +64,18 @@ def write_bucketed(
     n_buckets: int,
     stats_cols: list[str] = (),
     mode: str = "overwrite",
-    extra_meta: dict | None = None,
 ) -> int:
     """Materialize ``df`` as a hash-bucketed table-log table: one data
     file per bucket (``pmod(xxhash64(key), n)`` — the one shared
     key->bucket definition), bucket id in the FILE NAME, and the
-    bucket spec recorded in the commit's ``meta`` so readers can plan
-    co-located joins against it. Atomic; ``mode="append"`` widens
-    each bucket's file group instead of replacing the table (the
-    declared spec must match the committed one — appending under a
-    different layout would silently break co-location), and with
-    ``stats_cols`` each slice's files carry their own [min, max], so
-    range-sliced appends give stats pruning sub-bucket file
-    granularity to cut at."""
+    bucket spec as the commit's only ``meta`` (``{"bucket": spec}``)
+    so readers can plan co-located joins against it. Atomic;
+    ``mode="append"`` widens each bucket's file group instead of
+    replacing the table (the declared spec must match the committed
+    one — appending under a different layout would silently break
+    co-location), and with ``stats_cols`` each slice's files carry
+    their own [min, max], so range-sliced appends give stats pruning
+    sub-bucket file granularity to cut at."""
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     if mode not in ("overwrite", "append"):
@@ -149,18 +148,7 @@ def write_bucketed(
         f"p{os.getpid()}u{uuid.uuid4().hex[:6]}",
     )
     stats = file_stats(table_dir, names, stats_cols) if stats_cols else None
-    # extra_meta rides the same commit (e.g. an ingest ledger tag a
-    # caller uses for append idempotence); layout-authoritative keys
-    # are reserved — "bucket" always wins on collision, and
-    # "buckets_per_file" is refused outright (readers resolve the
-    # grouping from it, and this writer stages ONE file per bucket)
-    if extra_meta and "buckets_per_file" in extra_meta:
-        raise ValueError(
-            "extra_meta key 'buckets_per_file' is reserved for "
-            "layout resolution — write_bucketed stages per-bucket "
-            "files and must not declare a coarser grouping"
-        )
-    meta = {**(extra_meta or {}), "bucket": declared}
+    meta = {"bucket": declared}
     if mode == "overwrite":
         return tl.commit(
             table_dir,

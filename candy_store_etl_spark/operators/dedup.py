@@ -631,13 +631,12 @@ def simhash_neardup_pairs(
 #: (table_dir) -> (incarnation identity, newest version folded, op
 #: tags seen). Repeated ledger asks read only the commits SINCE the
 #: last ask — O(delta) per ingest where a per-call log_entries walk
-#: would go quadratic over the index's lifetime (the same pattern as
-#: candy_colocated._meta_tags). Validity is keyed on the v0
-#: INCARNATION identity (table_log.incarnation_identity): a same-path
-#: rebuild — at ANY version, even replaying entries byte-identical to
-#: the old ones (a manifest entry is file-less, so entry content
-#: cannot distinguish incarnations) — must not serve the dead
-#: incarnation's ledger and silently skip a real ingest.
+#: would go quadratic over the index's lifetime. Validity is keyed on
+#: the v0 INCARNATION identity (table_log.incarnation_identity): a
+#: same-path rebuild — at ANY version, even replaying entries
+#: byte-identical to the old ones (a manifest entry is file-less, so
+#: entry content cannot distinguish incarnations) — must not serve the
+#: dead incarnation's ledger and silently skip a real ingest.
 _OP_LEDGER_CACHE: dict[str, tuple[tuple, int, set]] = {}
 
 #: maintained-index probe prunes collect the batch's distinct probe

@@ -21,12 +21,11 @@ orders rollup needs no second branch over the transactions:
                       │                                 → forecast
                       └─ used stock per product → products_updated
 
-The five report projections are defined once (``REPORTS``) and every
-form builds its outputs through ``report_outputs``: this one-session
-pipeline, the staged DAG's export tasks (``orchestration/candy_dag.py``,
-the only staged form) and the maintained tables' reader
-(``candy_colocated.read_pipeline_outputs``). Each report ends in one
-sorted partition (``repartition(1).sortWithinPartitions``):
+The five report projections are defined once (``REPORTS``) and both
+forms build their outputs through ``report_outputs``: this one-session
+pipeline and the staged DAG's export tasks
+(``orchestration/candy_dag.py``, the only staged form). Each report
+ends in one sorted partition (``repartition(1).sortWithinPartitions``):
 ``save_single_csv`` writes it through one task anyway, so a global
 ``orderBy``'s range exchange and its sampling job buy nothing.
 
@@ -47,7 +46,7 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import tracked_cache
@@ -181,44 +180,29 @@ def build_products_updated(
     )
 
 
-def first_header() -> list:
-    """``order_datetime`` and ``customer_id`` of an order's first
-    occurrence in file order (``day_idx``, ``row_in_file``), as
-    aggregate columns over rows carrying those four columns — the ONE
-    header rule of every candy form, so a transaction id repeated
-    across day files gets the same header whichever form built it."""
-    first = F.min_by(
-        F.struct("order_datetime", "customer_id"),
-        F.struct("day_idx", "row_in_file"),
-    )
-    return [
-        first.order_datetime.alias("order_datetime"),
-        first.customer_id.alias("customer_id"),
-    ]
-
-
-def profit_term() -> Column:
-    """One line item's profit: its total minus its allocated units'
-    cost to make (a cancelled line contributes zero)."""
-    return F.col("line_total") - F.col("quantity") * F.col("cost_to_make")
-
-
 def build_orders_with_profit(line_items: DataFrame) -> DataFrame:
     """Per-order rollup in ONE grouped pass over the line items (the
     reference re-reads every day's collection a second time for the
     headers, `data_processor.py:310-326`): amount, item count, profit
     AND the header come out of the same shuffle on ``order_id``. The
     header is the one of the order's first occurrence in file order
-    (``first_header``), so a transaction id repeated across
+    (``day_idx``, ``row_in_file``), so a transaction id repeated across
     day files yields one order with totals over all its items; a
     transaction whose items are all null has no line items and no
     order. Unordered — the report sink sorts. The golden ``orders``
     output is this minus the ``order_profit`` column."""
+    first = F.min_by(
+        F.struct("order_datetime", "customer_id"),
+        F.struct("day_idx", "row_in_file"),
+    )
+    # a cancelled line's profit is zero: no units, no line total
+    profit = F.col("line_total") - F.col("quantity") * F.col("cost_to_make")
     return line_items.groupBy("order_id").agg(
-        *first_header(),
+        first.order_datetime.alias("order_datetime"),
+        first.customer_id.alias("customer_id"),
         _ROUND2(F.sum("line_total")).alias("total_amount"),
         F.count(F.lit(1)).alias("num_items"),  # counts cancelled rows too
-        F.sum(profit_term()).alias("order_profit"),
+        F.sum(profit).alias("order_profit"),
     )
 
 

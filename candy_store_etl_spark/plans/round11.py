@@ -346,25 +346,22 @@ def serve_join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM li JOIN o ON l_orderkey = o_orderkey
     GROUP BY month ORDER BY month
     """,
-    doc="The incremental candy pipeline's TPC-H-shaped driver twin "
-    "(the candy-schema run_pipeline_incremental is parity-pinned on "
-    "the reference dataset in tests): line items arrive as FOUR "
-    "bucketed appends to a stage table; its change feed maintains a "
-    "per-order rollup through the routed CDC sink (the order's month "
-    "rides carry_cols, so no join back to the dim in the maintenance "
-    "path); the ROLLUP'S own change feed maintains a per-month view "
-    "by signed folding (an updated order's old row nets out — order "
-    "counts stay exact even when an order's lines straddle batches). "
-    "The final monthly view must equal the oracle's zero-hop "
-    "recomputation over the raw relations. This is the GENERAL "
-    "merge-based chain — correct under key updates, with per-batch "
-    "rewrite cost governed by the coverage router (these saturating "
-    "quarter-batches full-rewrite the rollup by design); the "
-    "flat-marginal-cost claim belongs to the candy pipeline's "
-    "INSERT-ONLY orders hop (plans/candy_colocated.ingest_days, "
-    "measured by scripts/ivm_marginal_day.py). The reference's "
-    "per-day driver loop (/root/reference/src/data_processor.py:172) "
-    "re-reads and re-aggregates history for every day either way.",
+    doc="Incremental view maintenance over TPC-H: line items arrive as "
+    "FOUR bucketed appends to a stage table; its change feed "
+    "maintains a per-order rollup through the routed CDC sink (the "
+    "order's month rides carry_cols, so no join back to the dim in "
+    "the maintenance path); the ROLLUP'S own change feed maintains "
+    "a per-month view by signed folding (an updated order's old row "
+    "nets out — order counts stay exact even when an order's lines "
+    "straddle batches). The final monthly view must equal the "
+    "oracle's zero-hop recomputation over the raw relations. This "
+    "is the GENERAL merge-based chain — correct under key updates, "
+    "with per-batch rewrite cost governed by the coverage router "
+    "(these saturating quarter-batches full-rewrite the rollup by "
+    "design). The candy pipeline itself has no incremental form: a "
+    "candy-schema chain of this shape lost to a full run_pipeline "
+    "recompute at every measured history size and was deleted "
+    "(SCALING.md).",
     tags=("warehouse", "table-format", "streaming", "cdc", "ivm"),
 )
 def incremental_daily_sales_ivm(

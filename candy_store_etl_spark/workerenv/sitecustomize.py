@@ -22,6 +22,10 @@ zip — otherwise the path is left untouched. Disable with
 ``SPARK_GRAFT_KEEP_ZIP_IMPORTS=1``. No pyspark code is modified; this
 is environment hygiene, valid on any deployment where workers carry
 both a zip and an unpacked install of the same pyspark.
+
+``site`` imports only the first ``sitecustomize`` on the path, so this
+one then runs the next ``sitecustomize`` on the path after its own
+directory (a deployment's own worker hook is not shadowed).
 """
 
 import os
@@ -109,4 +113,25 @@ def _prune_spark_zip_paths() -> None:
         sys.path[:] = old
 
 
+def _chain_next_sitecustomize() -> None:
+    """Run the ``sitecustomize`` that follows this module's directory
+    on ``sys.path``: the one ``site`` would have imported without it.
+    Searching only past this directory keeps two copies of this module
+    on one path from running each other in a loop."""
+    import importlib.machinery
+    import importlib.util
+
+    here = os.path.dirname(os.path.realpath(__file__))
+    dirs = [os.path.realpath(p or os.curdir) for p in sys.path]
+    if here not in dirs:
+        return  # not imported from the path: nothing is shadowed
+    i = dirs.index(here)
+    rest = [p for p, d in zip(sys.path[i:], dirs[i:]) if d != here]
+    spec = importlib.machinery.PathFinder.find_spec("sitecustomize", rest)
+    if spec is None or spec.loader is None:
+        return
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
+
+
 _prune_spark_zip_paths()
+_chain_next_sitecustomize()

@@ -9,8 +9,8 @@ Flat-ish seconds per batch across two decades of history is the
 claim, measured (the bucket probe's build side grows with history, so
 a mild rise is honest; a re-signature path would scale ~linearly).
 
-Methodology matches ivm_marginal_day.py: quiet box, one untimed warm
-batch per history size, min over the timed batches reported. Writes/
+Methodology: quiet box, one untimed warm batch per history size, min
+over the timed batches reported. Writes/
 replaces the "## Maintained near-dup index: marginal increment"
 section of SCALING.md and prints one JSON line.
 """

@@ -8,8 +8,7 @@ Also pinned here: the three mechanisms that keep a pass at 19 Spark
 jobs — day files read without a listing job, report outputs sorted in
 one partition without a sampling job, and order headers carried on the
 line items instead of a second branch over the transactions — and the
-other forms of the pipeline (the staged DAG over parquet or table-log
-artifacts, and the incremental table-log chain) against this one."""
+staged DAG over parquet or table-log artifacts against this one."""
 
 from __future__ import annotations
 
@@ -192,18 +191,8 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
     row takes the header of the first occurrence in file order — not
     the earliest timestamp nor the smallest or largest customer — and
     totals over all its items. Transaction 8's items are all null, so
-    it has no order. Every batch form agrees: the one-session pipeline,
-    the parquet and table-log DAGs and a two-day incremental batch.
-    Ingesting the days one increment each instead raises on the
-    recurring id before anything is committed: the insert-only orders
-    view would otherwise hold two order rows for it."""
-    from candy_store_etl_spark.plans.candy_colocated import (
-        ingest_days,
-        read_pipeline_outputs,
-        run_pipeline_incremental,
-    )
-    from candy_store_etl_spark.sources import table_log as tl
-
+    it has no order. Every form agrees: the one-session pipeline and
+    the parquet and table-log DAGs."""
     day1 = _write_day(
         tmp_path / "transactions_20240201.json",
         [
@@ -234,15 +223,10 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
 
         return run
 
-    def batch(workdir):
-        assert ingest_days(spark, days, products, workdir, tag="days-1-2")
-        return read_pipeline_outputs(spark, workdir, products)
-
     forms = {
         "run_pipeline": lambda workdir: run_pipeline(spark, days, products),
         "dag_parquet": dag("parquet"),
         "dag_table_log": dag("table_log"),
-        "ingest_days_batch": batch,
     }
     for name, form in forms.items():
         outs = form(str(tmp_path / name))
@@ -257,27 +241,17 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
         assert lines == 4, name
         assert days_summarized == 1, name
 
-    per_day = str(tmp_path / "ingest_days_per_day")
-    with pytest.raises(ValueError, match="transaction id 7 "):
-        run_pipeline_incremental(spark, days, products, per_day)
-    assert tl.current_version(os.path.join(per_day, "line_items_tl")) == 0
-
 
 def test_stage_boundary_variants_match_pipeline(spark, candy_history, nightly, tmp_path):
     """The parquet and table-log DAGs write the one-session pipeline's
     five CSVs over the 34-day history, and their stage boundaries are
     what they claim: parquet directories on disk, or committed
     table-log tables with the line items bucketed on order_id, that a
-    re-run replaces as a new version while version 0 stays readable.
-    The incremental table-log chain, one increment per day, equals the
-    one-session pipeline over the first days, where stock runs out."""
+    re-run replaces as a new version while version 0 stays readable."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     from candy_store_etl_spark.operators import colocated as co
-    from candy_store_etl_spark.plans.candy_colocated import (
-        run_pipeline_incremental,
-    )
     from candy_store_etl_spark.plans.candy_pipeline import build_daily_summary
     from candy_store_etl_spark.sources import table_log as tl
 
@@ -318,16 +292,3 @@ def test_stage_boundary_variants_match_pipeline(spark, candy_history, nightly, t
         assert tl.read_snapshot(spark, orders).count() == v0_rows
         assert tl.read_snapshot(spark, orders, version=0).count() == v0_rows
         assert build_daily_summary(tl.read_snapshot(spark, orders)).count() == len(paths)
-
-    short = paths[: candy_history.SHORT_DAYS]
-    products = read_products(spark, candy_history.short_products_csv)
-    try:
-        want = run_pipeline(spark, short, products)
-        assert want["order_line_items"].filter("quantity = 0").count() > 0
-        ivm = run_pipeline_incremental(spark, short, products, str(tmp_path / "ivm"))
-        for name in OUTPUTS:
-            pd.testing.assert_frame_equal(
-                ivm[name].toPandas(), want[name].toPandas(), check_dtype=False, obj=name
-            )
-    finally:
-        release_caches()

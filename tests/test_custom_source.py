@@ -1,5 +1,6 @@
 """Python DataSource (candy_transactions): planning-time date pruning,
-parallel per-day partitions, agreement with the JSON reader."""
+parallel per-day partitions, agreement with the JSON reader — over the
+seeded ``candy_history`` days — plus the JDBC and custom-sink paths."""
 
 from __future__ import annotations
 
@@ -12,12 +13,7 @@ from candy_store_etl_spark.sources.candy import read_transactions
 from candy_store_etl_spark.sources.custom_source import (
     CandyTransactionsDataSource,
 )
-
-REF_DATA = "/root/reference/data/dataset_5"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF_DATA), reason="reference dataset not present"
-)
+from perfbench import gen
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -25,49 +21,50 @@ def _register(spark):
     spark.dataSource.register(CandyTransactionsDataSource)
 
 
-def _load(spark, start: str, end: str):
+def _day(path: str) -> str:
+    """``20240203`` for ``.../transactions_20240203.json``."""
+    return os.path.basename(path)[len("transactions_") : -len(".json")]
+
+
+def _load(spark, paths: list[str], start: str, end: str):
     return (
         spark.read.format("candy_transactions")
-        .option("path", REF_DATA)
+        .option("path", os.path.dirname(paths[0]))
         .option("start", start)
         .option("end", end)
         .load()
     )
 
 
-def test_full_range_matches_json_reader(spark):
-    via_source = _load(spark, "20240201", "20240210")
-    paths = [
-        os.path.join(REF_DATA, f"transactions_202402{d:02d}.json")
-        for d in range(1, 11)
-    ]
+def test_full_range_matches_json_reader(spark, candy_history):
+    paths = candy_history.paths[:10]
+    via_source = _load(spark, paths, _day(paths[0]), _day(paths[-1]))
     via_json = read_transactions(spark, paths)
-    assert via_source.count() == via_json.count() == 10_000
+    assert via_source.count() == via_json.count() == len(paths) * gen.TXNS_PER_DAY
     # spot-check content equality on one day
     a = sorted(
         (r.transaction_id, r.customer_id, len(r.items or []))
-        for r in via_source.filter(F.col("day") == "20240203").collect()
+        for r in via_source.filter(F.col("day") == _day(paths[2])).collect()
     )
     b = sorted(
         (r.transaction_id, r.customer_id, len(r.items or []))
-        for r in read_transactions(
-            spark, os.path.join(REF_DATA, "transactions_20240203.json")
-        ).collect()
+        for r in read_transactions(spark, paths[2]).collect()
     )
     assert a == b
 
 
-def test_date_range_prunes_partitions(spark):
-    pruned = _load(spark, "20240201", "20240203")
+def test_date_range_prunes_partitions(spark, candy_history):
+    paths = candy_history.paths
+    pruned = _load(spark, paths, _day(paths[0]), _day(paths[2]))
     days = {r.day for r in pruned.select("day").distinct().collect()}
-    assert days == {"20240201", "20240202", "20240203"}
+    assert days == {_day(p) for p in paths[:3]}
     # partition count == day count (planning-time pruning)
     assert pruned.rdd.getNumPartitions() == 3
 
 
-def test_empty_range_raises(spark):
+def test_empty_range_raises(spark, candy_history):
     with pytest.raises(Exception, match="within"):
-        _load(spark, "19990101", "19990102").count()
+        _load(spark, candy_history.paths, "19990101", "19990102").count()
 
 
 # ---------------------------------------------------------------------------
@@ -196,20 +193,17 @@ def test_custom_python_datasource_writer_overwrite_sweeps_stale(
     assert back.count() == docs.count()
 
 
-def test_read_jdbc_executes_against_embedded_derby(spark, sf_smoke):
+def test_read_jdbc_executes_against_embedded_derby(spark, candy_history):
     """Real end-to-end JDBC execution (reference data_processor.py:87-101
-    reads MySQL): load the 36-row products table into an in-memory
-    Derby database through the session JVM, then read it back through
+    reads MySQL): load the products table into an in-memory Derby
+    database through the session JVM, then read it back through
     read_jdbc — both the single-partition and the partitioned
     (partitionColumn/bounds/numPartitions) paths."""
     from candy_store_etl_spark.sources.candy import read_jdbc, read_products
 
-    ref_products = "/root/reference/data/dataset_5/products.csv"
-    if not os.path.exists(ref_products):
-        pytest.skip("reference dataset not present")
-    products = read_products(spark, ref_products)
+    products = read_products(spark, candy_history.products_csv)
     rows = products.collect()
-    assert len(rows) == 36
+    assert len(rows) == gen.N_PRODUCTS
 
     url = "jdbc:derby:memory:candyjdbc;create=true"
     jvm = spark._jvm
@@ -250,7 +244,7 @@ def test_read_jdbc_executes_against_embedded_derby(spark, sf_smoke):
         "products",
         partitionColumn="PRODUCT_ID",
         lowerBound="1",
-        upperBound="37",
+        upperBound=str(len(rows) + 1),
         numPartitions="4",
     )
     assert part.rdd.getNumPartitions() == 4
@@ -496,8 +490,8 @@ def test_custom_stream_checkpoint_restart_resumes_exactly_once(spark, tmp_path):
 def test_transaction_ids_survive_past_int32(spark, tmp_path):
     """Ids are unbounded at scale: the 1000-day replica dataset's id
     offsets pass 2^31 around copy 21, and an int-typed schema NULLs
-    every later id under permissive parsing (found when the IVM
-    marginal-day run's daily view collapsed from 1000 days to 220).
+    every later id under permissive parsing (found when a 1000-day
+    run's daily view collapsed from 1000 days to 220).
     Both readers must carry long ids losslessly."""
     import json
 

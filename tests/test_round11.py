@@ -247,54 +247,6 @@ def test_serve_join_outer_semantics_and_on(spark, tmp_path):
     assert df3.count() == 100
 
 
-def test_meta_tag_cache_invalidates_on_version_regression(
-    spark, tmp_path
-):
-    """A table rebuilt at the same path (rmtree + fresh v0) must not
-    serve the dead incarnation's ledger tags — a stale cache here
-    makes ingest_days/append_orders silently skip real work."""
-    import shutil
-
-    from candy_store_etl_spark.plans import candy_colocated as cc
-
-    t = str(tmp_path / "ledger")
-    df = _facts(spark, 8)
-
-    def _write(tag, mode):
-        co.write_bucketed(
-            df, t, key_col="k", n_buckets=2, mode=mode,
-            extra_meta={"day": tag},
-        )
-
-    _write("day1", "overwrite")
-    _write("day2", "append")
-    assert cc._meta_tags(t, "day") == {"day1", "day2"}
-    # rebuild at the same path: version regresses 1 -> 0
-    shutil.rmtree(t)
-    _write("day7", "overwrite")
-    assert cc._meta_tags(t, "day") == {"day7"}
-
-
-def test_write_bucketed_refuses_reserved_layout_meta_key(
-    spark, tmp_path
-):
-    """extra_meta must not be able to declare a grouping the writer
-    did not stage: 'buckets_per_file' in commit meta is
-    layout-authoritative for every reader, and write_bucketed always
-    writes one file per bucket."""
-    t = str(tmp_path / "tbl")
-    with pytest.raises(ValueError, match="buckets_per_file"):
-        co.write_bucketed(
-            _facts(spark, 10),
-            t,
-            key_col="k",
-            n_buckets=4,
-            extra_meta={"buckets_per_file": 4, "day": "d1"},
-        )
-    # nothing committed
-    assert tl.current_version(t) is None
-
-
 def test_maintained_neardup_index_equals_from_scratch(spark, tmp_path):
     """The maintained index's union-over-increments pair set must equal
     the from-scratch portable pairs on the same corpus, each increment

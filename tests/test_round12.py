@@ -1,7 +1,6 @@
 """Round-12: manifest-chain hardening (incarnation tokens, dangler
-vacuum, intra-batch dup guard, published-read pruning), the batched/
-maintained faces of range serving, and the IVM-chain crash deferral
-pinned by a test.
+vacuum, intra-batch dup guard, published-read pruning), and the batched/
+maintained faces of range serving.
 
 Verdict items 4-7 + all four round-11 ADVICE lows.
 """
@@ -477,81 +476,6 @@ def test_maintenance_streak_is_per_column(spark, tmp_path):
     # must survive the interleaved val probe
     assert maintenance_due(t, "val")["full_scan_streak"] == 1
     assert maintenance_due(t, "k")["full_scan_streak"] >= 3
-
-
-# ---------------------------------------------------------------------------
-# IVM chain: crash between the usage drain and the daily drain
-# (verdict item #6 — the manifest deferral pinned by a test)
-# ---------------------------------------------------------------------------
-
-
-def test_ingest_days_crash_between_hops_repairs_on_rerun(
-    spark, tmp_path, monkeypatch, candy_history
-):
-    """Kill the ingest after the line-items append + orders/usage
-    drains but BEFORE the orders->daily drain; re-running the same
-    ingest must repair the chain (catch-up drains) so the daily view
-    hash-matches the full recompute — the written-down reason the IVM
-    chain defers manifest adoption: per-hop single-table atomicity +
-    checkpointed drains already make a half-ingested day exactly
-    repairable."""
-    from candy_store_etl_spark.plans import candy_colocated as cc
-    from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
-    from candy_store_etl_spark.sources.candy import read_products
-
-    products = read_products(spark, candy_history.short_products_csv)
-    paths = candy_history.paths[:2]
-    work = str(tmp_path / "ivm")
-    assert cc.ingest_days(spark, [paths[0]], products, work)
-
-    # day 2: crash before the daily drain — the orders->daily drain
-    # (ckpt_daily) of the post-append _drain_all; the pre-append
-    # catch-up _drain_all's calls run clean (day-1 is fully drained).
-    # ingest_days imports run_stream_foreach_batch from
-    # streaming.events at call time, so patch it at its SOURCE module.
-    from candy_store_etl_spark.streaming import events as ev
-
-    real_drain = ev.run_stream_foreach_batch
-    calls = {"daily_after_append": 0}
-
-    class Boom(RuntimeError):
-        pass
-
-    seen = {"appended": False}
-
-    def exploding(df, sink, *, checkpoint_dir, **kw):
-        if checkpoint_dir.endswith("ckpt_daily") and seen["appended"]:
-            calls["daily_after_append"] += 1
-            raise Boom("simulated crash before the daily drain")
-        return real_drain(df, sink, checkpoint_dir=checkpoint_dir, **kw)
-
-    monkeypatch.setattr(ev, "run_stream_foreach_batch", exploding)
-    # mark the append boundary: the catch-up drains run BEFORE the
-    # append, the crash must hit the post-append drain
-    real_write = cc.write_bucketed
-
-    def marking_write(*a, **kw):
-        out = real_write(*a, **kw)
-        if kw.get("extra_meta", {}).get("day"):
-            seen["appended"] = True
-        return out
-
-    monkeypatch.setattr(cc, "write_bucketed", marking_write)
-    with pytest.raises(Boom):
-        cc.ingest_days(spark, [paths[1]], products, work)
-    assert calls["daily_after_append"] == 1
-    monkeypatch.setattr(ev, "run_stream_foreach_batch", real_drain)
-    monkeypatch.setattr(cc, "write_bucketed", real_write)
-
-    # rerun the same day: tag already ingested -> False, but the
-    # catch-up drains must first repair the half-ingested day
-    assert cc.ingest_days(spark, [paths[1]], products, work) is False
-
-    got = cc.read_pipeline_outputs(spark, work, products)["daily_summary"]
-    want = run_pipeline(spark, paths, products)["daily_summary"]
-    g = sorted(tuple(r) for r in got.collect())
-    w = sorted(tuple(r) for r in want.collect())
-    assert g == w and len(g) == 2
 
 
 # ---------------------------------------------------------------------------

@@ -61,12 +61,11 @@ def test_section_must_start_with_its_header():
 
 
 def test_every_section_regenerator_uses_splice_section():
-    # the four scripts that own a SCALING.md section; scaling_curve.py
+    # the three scripts that own a SCALING.md section; scaling_curve.py
     # owns the file HEAD and preserves the tail from the streaming
     # header on, which is checked separately below
     for script in (
         "streaming_throughput.py",
-        "ivm_marginal_day.py",
         "neardup_increment.py",
         "sf100_decade.py",
     ):
@@ -89,7 +88,6 @@ def test_shipped_scaling_md_has_all_sections():
     md = open(os.path.join(REPO, "SCALING.md")).read()
     for header in (
         SCALING_STREAM_HEADER.strip(),
-        "## IVM marginal-day maintenance",
         "## Maintained near-dup index: marginal increment",
         "## sf100 third decade",
     ):

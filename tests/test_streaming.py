@@ -214,31 +214,26 @@ def test_foreach_batch_writes_epoch_partitioned_parquet(spark, tmp_path):
     assert len(epochs) == 3
 
 
-REF_DATA = "/root/reference/data/dataset_5"
-
-
-@pytest.mark.skipif(
-    not os.path.isdir(REF_DATA), reason="reference dataset not present"
-)
-def test_streaming_allocation_matches_batch_pipeline(spark, tmp_path):
-    """The reference's daily batch loop as Structured Streaming: the 10
-    daily transaction files flow through the stateful allocation as 10
-    micro-batches (state = running stock, exactly the inventory
-    carry-over), and the result must equal the batch pipeline's
-    allocation product-for-product."""
+def test_streaming_allocation_matches_batch_pipeline(
+    spark, tmp_path, candy_history
+):
+    """The reference's daily batch loop as Structured Streaming: the
+    first days' transaction files flow through the stateful allocation
+    as one micro-batch each (state = running stock, exactly the
+    inventory carry-over), and the result must equal the batch
+    pipeline's allocation product-for-product. The short-stock
+    products run out inside those days, so some items are cancelled."""
     from pyspark.sql import functions as F
 
     from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
     from candy_store_etl_spark.sources.candy import read_products
 
-    dates = [f"202402{d:02d}" for d in range(1, 11)]
-    paths = [
-        os.path.join(REF_DATA, f"transactions_{d}.json") for d in dates
-    ]
-    products = read_products(spark, os.path.join(REF_DATA, "products.csv"))
+    paths = candy_history.paths[: candy_history.SHORT_DAYS]
+    products = read_products(spark, candy_history.short_products_csv)
 
     # batch ground truth
     batch = run_pipeline(spark, paths, products)
+    assert batch["order_line_items"].filter("quantity = 0").count() > 0
     want_alloc = {
         r.product_id: r.q
         for r in batch["order_line_items"]

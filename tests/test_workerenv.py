@@ -137,3 +137,36 @@ def test_prune_keeps_zips_when_py4j_version_differs(tmp_path, monkeypatch):
     monkeypatch.setattr(sys, "path", matched[:])
     mod._prune_spark_zip_paths()
     assert sys.path == matched[:-2]
+
+
+def test_next_sitecustomize_on_the_path_still_runs(tmp_path):
+    """``site`` imports only the first ``sitecustomize`` on the path:
+    the worker module must run the one it shadows, here a second hook
+    that sets a marker."""
+    import os
+    import subprocess
+    import sys
+
+    other = tmp_path / "other"
+    other.mkdir()
+    (other / "sitecustomize.py").write_text(
+        "import sys\nsys.chained_sitecustomize_marker = 'set'\n"
+    )
+    env = {
+        **os.environ,
+        "PYTHONPATH": os.pathsep.join([str(_SITECUSTOMIZE.parent), str(other)]),
+    }
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, sitecustomize; "
+            "print(sitecustomize.__file__); "
+            "print(getattr(sys, 'chained_sitecustomize_marker', None))",
+        ],
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert out == [str(_SITECUSTOMIZE), "set"]
