@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from candy_store_etl_spark.caching import release_caches  # noqa: E402
 from candy_store_etl_spark.plans import query_map  # noqa: E402
 from candy_store_etl_spark.session import build_session  # noqa: E402
+from perfbench import meter  # noqa: E402
 
 # foreign cpu-seconds during a run above which flagged deltas need an
 # attribution (an interleaved A/B) before being read as regressions —
@@ -172,74 +173,29 @@ def _wait_for_quiet(max_wait_s: float = 600.0, target: float = 0.5) -> float:
     return load
 
 
-def _system_busy_jiffies() -> tuple[int, int]:
-    """(non-idle jiffies, steal jiffies) across all cpus since boot
-    (/proc/stat). Busy includes STEAL (field 8): on a virtualized box
-    the hypervisor descheduling this guest shows up as busy-but-not-
-    ours, which the ambient meter would otherwise attribute to
-    foreign *processes*. Returning steal separately lets the report
-    split "another process burned CPU" (actionable: find and stop
-    it) from "the host throttled us" (actionable: re-run in a
-    quieter window; no local process to blame)."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    steal = vals[7] if len(vals) > 7 else 0
-    return sum(vals) - vals[3] - vals[4], steal  # minus idle + iowait
-
-
-def _subtree_cpu_jiffies() -> int:
-    """utime+stime (+ reaped children's cutime+cstime) summed over
-    THIS process's subtree — the bench's own CPU, Spark JVM included."""
-    children: dict[int, list[int]] = {}
-    own: dict[int, int] = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                s = f.read()
-        except OSError:
-            continue  # raced a process exit
-        rest = s[s.rindex(")") + 2 :].split()
-        pid = int(d)
-        children.setdefault(int(rest[1]), []).append(pid)
-        # utime stime cutime cstime = fields 14-17 (1-based) = rest[11:15]
-        own[pid] = sum(int(x) for x in rest[11:15])
-    seen: set[int] = set()
-    stack = [os.getpid()]
-    total = 0
-    while stack:
-        p = stack.pop()
-        if p in seen:
-            continue
-        seen.add(p)
-        total += own.get(p, 0)
-        stack.extend(children.get(p, []))
-    return total
-
-
 def _ambient_meter():
     """Start measuring CPU consumed OUTSIDE this bench's subtree; the
     returned closure yields ``(ambient_cpu_sec, steal_cpu_sec)``
     burned since the start. The pre-run quiet gate cannot see work
     that STARTS mid-measurement — this can, and near-zero here
     certifies a clean run better than any loadavg snapshot. Ambient
-    keeps its historical meaning (busy-not-ours, steal INCLUDED, so
-    cross-round files stay comparable); the steal component is
-    reported alongside because on this Firecracker box hypervisor
-    steal is routinely the entire "ambient" figure (round 12: 770-950
-    ambient cpu-s with <2 min of actual foreign-process CPU since
-    boot) — without the split, steal reads as a foreign-load flag
-    nobody can act on."""
-    busy0, steal0 = _system_busy_jiffies()
-    mine0 = _subtree_cpu_jiffies()
-    hz = os.sysconf("SC_CLK_TCK")
+    keeps its historical meaning (machine busy time with hypervisor
+    steal INCLUDED, minus this process tree's CPU, so cross-round
+    files stay comparable); the steal component is reported alongside
+    because on this Firecracker box steal is routinely the entire
+    "ambient" figure (round 12: 770-950 ambient cpu-s with <2 min of
+    actual foreign-process CPU since boot) — without the split, steal
+    reads as a foreign-load flag nobody can act on. Both readings
+    come from ``perfbench.meter``."""
+    tree = meter.CpuMeter()
+    busy0, steal0 = meter.machine_busy()
+    mine0 = tree.ticks()
 
     def finish() -> tuple[float, float]:
-        busy1, steal1 = _system_busy_jiffies()
-        ambient = (busy1 - busy0) - (_subtree_cpu_jiffies() - mine0)
-        return max(ambient, 0) / hz, max(steal1 - steal0, 0) / hz
+        busy1, steal1 = meter.machine_busy()
+        steal = steal1 - steal0
+        mine = (tree.ticks() - mine0) / meter.HZ
+        return max(busy1 - busy0 + steal - mine, 0.0), max(steal, 0.0)
 
     return finish
 

@@ -551,10 +551,10 @@ def keyset_lookup(
     files with an ``isin`` residual — not a Python-side merge: a
     lookup has no join to express, so after file pruning the
     vectorized JVM reader (row-group stats, codegen filter) beats an
-    Arrow-Python task wave at every probe density (measured in
-    ``scripts/ab_point_lookup.py``: the Python form lost 3x to a
-    plain scan once probes saturated the buckets; this form
-    degrades to exactly that scan instead).
+    Arrow-Python task wave at every probe density (measured by the
+    point-lookup serving A/B, NOTES.md Round-9 progress: the Python
+    form lost 3x to a plain scan once probes saturated the buckets;
+    this form degrades to exactly that scan instead).
 
     ``_resolved`` (internal, passed by ``serve()``) carries the
     already-pinned ``{"spec", "schema", "bpf", "by_group"}`` so the
@@ -711,9 +711,10 @@ def point_lookup(
     return out
 
 
-#: measured crossover (scripts/ab_point_lookup.py): at 64 files the
-#: min/max-skipping pushdown SCAN beat the bucket lookup 0.7-0.9x
-#: (fixed per-probe driver overhead vs a columnar scan); at 512 files
+#: measured crossover (point-lookup serving A/B, NOTES.md Round-9
+#: progress): at 64 files the min/max-skipping pushdown SCAN beat the
+#: bucket lookup 0.7-0.9x (fixed per-probe driver overhead vs a
+#: columnar scan); at 512 files
 #: the lookup won 3-9x with a flat cost curve. File COUNT, not row
 #: count, is the lookup's variable, so the router switches on it.
 SERVE_SCAN_FILE_THRESHOLD = 96
@@ -2108,7 +2109,8 @@ def serve_aggregate(
 #: the join router's broadcast cutoff, in COMPRESSED snapshot bytes
 #: (the same estimator Spark's own autoBroadcastJoinThreshold applies
 #: to file relations). 32 MB is deliberately conservative: at the
-#: measured A/B scales (scripts/ab_colocated.py, ab_fused_rollup.py)
+#: measured A/B scales (the SPJ vs shuffle and fused rollup+join
+#: A/Bs, NOTES.md Round-8 and driver round 9 progress)
 #: a dimension side this small broadcasts in one stage with no
 #: Python workers and beats BOTH alternatives at every SF, while a
 #: side past it stops being "dimension-sized" and the choice falls
@@ -2137,11 +2139,12 @@ def serve_join(
       join's own shape). Precedence over colocated even when layouts
       align: the co-located plan would pay per-group Arrow-task
       overhead to avoid an exchange the broadcast plan doesn't do
-      either (the fixed cost ab_fused_rollup measured pricing every
-      SPJ form below its crossover). Sides: the right side
-      broadcasts for inner/left/left_semi/left_anti, the left only
-      for inner (Spark cannot broadcast the preserved side); full
-      outer never broadcasts.
+      either (the fixed cost the fused rollup+join A/B measured
+      pricing every SPJ form below its crossover; NOTES.md, driver
+      round 9). Sides: the right side broadcasts for
+      inner/left/left_semi/left_anti, the left only for inner (Spark
+      cannot broadcast the preserved side); full outer never
+      broadcasts.
     - ``colocated`` — both sides are big but share the layout (same
       bucket count, same key type, both committed): the zero-exchange
       ``colocated_bucket_join``, the shape whose advantage GROWS with

@@ -380,9 +380,10 @@ def simhash_neardup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 #
 # point_lookup / keyset_lookup / the pushdown scan are three execution
-# shapes over one committed layout, and scripts/ab_point_lookup.py
-# measured where each wins (file count is the lookup's variable; the
-# keyset shape wins at every probe density once files are many). serve()
+# shapes over one committed layout, and the point-lookup serving A/B
+# (NOTES.md, Round-9 progress) measured where each wins (file count is
+# the lookup's variable; the keyset shape wins at every probe density
+# once files are many). serve()
 # encodes those crossovers; the queries below pin one oracled row per
 # regime — the ROUTE itself is a hash-checked output column, so a
 # routing regression fails the driver gate, not just a benchmark.

@@ -196,10 +196,11 @@ def _join_rollup(df, info, *extra) -> DataFrame:
     "dim, kilobytes of committed snapshot bytes): the router must "
     "pick the BROADCAST shape — one JVM stage, no Python workers, the "
     "fact side never exchanged — even though both sides share a "
-    "bucket layout the colocated route could use (ab_fused_rollup's "
-    "fixed SPJ task cost is pure loss when the dim broadcasts for "
-    "free). Route is a hash-checked output column; the joined rollup "
-    "is recomputed by the oracle from the raw relations.",
+    "bucket layout the colocated route could use (the fixed SPJ task "
+    "cost the fused rollup+join A/B measured, NOTES.md driver round "
+    "9, is pure loss when the dim broadcasts for free). Route is a "
+    "hash-checked output column; the joined rollup is recomputed by "
+    "the oracle from the raw relations.",
     tags=("table_log", "bucketed", "serving", "router", "join"),
 )
 def serve_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:

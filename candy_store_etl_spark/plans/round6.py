@@ -63,10 +63,10 @@ _TRI_MAX_POS = 4096  # char-position cap per doc, shared with the oracle
     "vocabulary-sized (trigram, partial-count) rows instead of "
     "exploding ~450M occurrence strings through the JVM; the "
     "weighted MG fold + weighted exact verify keep the identical "
-    "guarantee and oracle. Measured sf10 (scripts/ab_hh_trigrams.py, "
-    "interleaved rotated order): explode tier 50.8 s -> direct tier "
-    "3.2 s (16x), identical rows — retired the catalog's cost "
-    "leader.",
+    "guarantee and oracle. Measured sf10 (interleaved rotated order; "
+    "NOTES.md, Round-7 progress, trigram heavy hitters): explode "
+    "tier 50.8 s -> direct tier 3.2 s (16x), identical rows — "
+    "retired the catalog's cost leader.",
     tags=("text", "sketch", "heavy-hitters", "mapInPandas"),
 )
 def heavy_hitter_char_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:

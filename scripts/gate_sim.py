@@ -238,10 +238,12 @@ def main() -> int:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     con = duckdb.connect()
+    # scale dirs (scripts/gen_scale_data.py) hold directory datasets
+    suffix = "/*.parquet" if os.path.isdir(os.path.join(sf_dir, "region.parquet")) else ""
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
+            f"read_parquet('{sf_dir}/{t}.parquet{suffix}')"
         )
 
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()

@@ -14,11 +14,13 @@ Additions-only: bench.py and its one-line JSON contract are untouched;
 this script writes its own artifact (plans/r13/spot_bench_scale.json)
 and splices ONE section into SCALING.md.
 
-Task-time source: the Spark UI REST API (enabled for THIS script's
-session only — bench.py keeps spark.ui.enabled=false), summing
-completed stages' executorRunTime between per-run stage high-water
-marks. Subtree CPU seconds (bench.py's meter, jiffies-exact) are
-recorded alongside as the UI-independent cross-check.
+Instruments: perfbench's, nothing of its own. Each (query, tier, trial)
+runs in its own Spark job group; task-time is that group's executor run
+time summed over its tasks by ``perfbench.trace.read_event_log`` from the
+session's event log, read after ``spark.stop()``. The process tree's
+CPU seconds per trial come from ``perfbench.meter.CpuMeter``, which
+refuses an impossible reading (negative, or above wall x cores): such
+a trial records ``cpu_s: null``, never a number.
 
 Also measures the funnel's footer-derived pid ROW BALANCE at each SF
 (r13 verdict item 8): equal-width doc_id buckets assume dense ids; the
@@ -33,9 +35,10 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,7 +46,9 @@ from candy_store_etl_spark.caching import release_caches  # noqa: E402
 from candy_store_etl_spark.plans import query_map  # noqa: E402
 from candy_store_etl_spark.session import build_session  # noqa: E402
 
-from bench import SCALING_STREAM_HEADER, _ambient_meter, _wait_for_quiet, splice_section  # noqa: E402,F401
+from bench import _ambient_meter, _wait_for_quiet, splice_section  # noqa: E402
+from perfbench import meter  # noqa: E402
+from perfbench.trace import read_event_log  # noqa: E402
 
 # the heaviest data-proportional headline queries (r12 verdict item 1
 # names the families): the funnel, the dedup tiers, the heavy hitters,
@@ -66,26 +71,29 @@ QUERIES = [
 SECTION_HEADER = "\n## Data-bound spot bench (wall + executor task-time)\n"
 
 
-def _stage_metrics(ui_url: str, app_id: str) -> dict[int, float]:
-    """stageId -> executorRunTime seconds for COMPLETE stages (all
-    attempts summed)."""
-    with urllib.request.urlopen(
-        f"{ui_url}/api/v1/applications/{app_id}/stages?status=complete",
-        timeout=30,
-    ) as r:
-        stages = json.load(r)
-    out: dict[int, float] = {}
-    for s in stages:
-        out[s["stageId"]] = out.get(s["stageId"], 0.0) + (
-            s.get("executorRunTime", 0) / 1000.0
-        )
+def time_trials(run, trials: int, cpu: meter.CpuMeter, prepare) -> list[dict]:
+    """``{"wall_s", "cpu_s"}`` of each of ``trials`` calls ``run(t)``,
+    with ``prepare(t)`` untimed before each. ``cpu_s`` is the process
+    tree's CPU seconds, or ``None`` where ``cpu`` refuses the reading."""
+    out = []
+    for t in range(trials):
+        prepare(t)
+        cpu.start()
+        t0 = time.perf_counter()
+        run(t)
+        out.append({"wall_s": time.perf_counter() - t0, "cpu_s": cpu.stop()})
     return out
 
 
-def _subtree_cpu() -> float:
-    from bench import _subtree_cpu_jiffies
-
-    return _subtree_cpu_jiffies() / os.sysconf("SC_CLK_TCK")
+def best_row(trials: list[dict], task_s: list[float]) -> dict:
+    """Best-of-trials row; ``cpu_s`` is the least VALID reading, and
+    ``None`` when no trial's reading was valid."""
+    cpus = [t["cpu_s"] for t in trials if t["cpu_s"] is not None]
+    return {
+        "wall_s": round(min(t["wall_s"] for t in trials), 3),
+        "task_s": round(min(task_s), 2),
+        "cpu_s": round(min(cpus), 2) if cpus else None,
+    }
 
 
 def main() -> None:
@@ -113,78 +121,53 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "28g")
     load = _wait_for_quiet()
     ambient = _ambient_meter()
+    log_dir = tempfile.mkdtemp(prefix="spot-bench-eventlog-")
     spark = build_session(
         "spot-bench-scale", cpus=cpus,
-        extra_conf={"spark.ui.enabled": "true"},
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": log_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-    ui_url = sc.uiWebUrl
-    app_id = sc.applicationId
-    tracker = sc.statusTracker()
-
-    def stage_high_water() -> int:
-        ids = []
-        for jid in tracker.getJobIdsForGroup(None):
-            ji = tracker.getJobInfo(jid)
-            if ji is not None:
-                ids.extend(ji.stageIds)
-        return max(ids) if ids else -1
+    cpu = meter.CpuMeter()
 
     fns = query_map()
     names = [n for n in QUERIES if n in fns]
 
-    # one warm pass at the smallest SF for worker/codegen cold start
-    for n in names:
-        fns[n](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
+    def noop(n: str, sf: str) -> None:
+        fns[n](spark, sf).write.format("noop").mode("overwrite").save()
 
-    results: dict[str, dict] = {n: {} for n in names}
+    # one warm pass at the smallest SF for worker/codegen cold start
+    sc.setJobGroup("warm", "warm")
+    for n in names:
+        noop(n, "/root/testdata/sf0.001")
+
+    def group(n: str, label: str, t: int) -> str:
+        return f"{n} @ {label} trial {t}"
+
+    trials: dict[tuple[str, str], list[dict]] = {}
     for label, sf_dir in tiers:
         for n in names:
             # untimed warm pass at the TARGET SF (cold page-cache I/O
             # on multi-GB tables measured 2-5x steady state)
             release_caches()
             spark.catalog.clearCache()
-            sc.setJobDescription(f"warm {n} @ {label}")
-            fns[n](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best_wall = float("inf")
-            best_task = float("inf")
-            best_cpu = float("inf")
-            for t in range(args.trials):
+            sc.setJobGroup("warm", "warm")
+            noop(n, sf_dir)
+
+            def prepare(t: int) -> None:
                 release_caches()
                 spark.catalog.clearCache()
-                mark = stage_high_water()
-                cpu0 = _subtree_cpu()
-                sc.setJobDescription(f"{n} @ {label} trial {t}")
-                t0 = time.perf_counter()
-                fns[n](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                wall = time.perf_counter() - t0
-                cpu = _subtree_cpu() - cpu0
-                task = sum(
-                    v
-                    for k, v in _stage_metrics(ui_url, app_id).items()
-                    if k > mark
-                )
-                best_wall = min(best_wall, wall)
-                best_task = min(best_task, task)
-                best_cpu = min(best_cpu, cpu)
-            sc.setJobDescription(None)
-            results[n][label] = {
-                "wall_s": round(best_wall, 3),
-                "task_s": round(best_task, 2),
-                "cpu_s": round(best_cpu, 2),
-            }
-            print(
-                f"{n} @ {label}: wall={best_wall:.3f}s "
-                f"task={best_task:.2f}s cpu={best_cpu:.2f}s",
-                file=sys.stderr,
+                sc.setJobGroup(group(n, label, t), group(n, label, t))
+
+            trials[n, label] = time_trials(
+                lambda t: noop(n, sf_dir), args.trials, cpu, prepare
             )
+            print(f"{n} @ {label}: {trials[n, label]}", file=sys.stderr)
 
     # funnel pid row balance (verdict item 8): how even are the
     # footer-derived equal-width doc_id buckets on each tier's data?
@@ -197,6 +180,7 @@ def main() -> None:
         table_path,
     )
 
+    sc.setJobGroup("balance", "balance")
     n_part = prefix_sum_partitions(spark)
     for label, sf_dir in tiers:
         bounds = funnel_pid_bounds(sf_dir, n_part)
@@ -230,6 +214,18 @@ def main() -> None:
               file=sys.stderr)
 
     amb, steal = ambient()
+    spark.stop()
+    # task-time per trial: the trial's job group in the flushed event log
+    groups = read_event_log(log_dir)
+    shutil.rmtree(log_dir)
+    results: dict[str, dict] = {n: {} for n in names}
+    for (n, label), rows in trials.items():
+        task = [
+            groups.get(group(n, label, t), {}).get("task_s", 0.0)
+            for t in range(len(rows))
+        ]
+        results[n][label] = best_row(rows, task)
+
     artifact = {
         "queries": results,
         "funnel_pid_balance": balance,
@@ -249,8 +245,9 @@ def main() -> None:
     lines = [
         SECTION_HEADER.strip("\n"),
         "",
-        "Wall next to EXECUTOR TASK-TIME (sum of completed stages' "
-        "executorRunTime) and subtree cpu-s, best-of-"
+        "Wall next to EXECUTOR TASK-TIME (executor run time of the "
+        "trial's tasks, from the Spark event log) and process-tree "
+        "cpu-s, best-of-"
         f"{args.trials} after an untimed warm pass per SF, local["
         f"{cpus}], noop sink (scripts/spot_bench_scale.py; ambient "
         f"load {load:.2f}, {amb:.0f} ambient cpu-s / {steal:.0f} "
@@ -288,7 +285,6 @@ def main() -> None:
     with open(md_path, "w") as f:
         f.write(splice_section(existing, SECTION_HEADER, section))
     print(json.dumps(artifact))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -290,8 +290,10 @@ def test_global_row_number_quantile_pid_is_exact_permutation(spark):
         by_rn = {r["__rn"]: r["doc_id"] for r in got}
         assert [by_rn[i] for i in range(1, n + 1)] == want
 
-    # the real path: boundaries from the approx-quantile pass
+    # the real path: boundaries from the approx-quantile pass, at a
+    # local and at a cluster-sized partition count
     check(_global_row_number(df, order, n_parts=8, quantile_key=key))
+    check(_global_row_number(df, order, n_parts=1024, quantile_key=key))
     # adversarial monotone splits: skewed, degenerate, single-bucket
     for bounds in (
         [-900.0, -900.0, 0.0, 995.5],  # duplicated cut + empty bucket
@@ -300,3 +302,40 @@ def test_global_row_number_quantile_pid_is_exact_permutation(spark):
     ):
         with_pid = df.withColumn("__pid", pid_from_bounds(bounds, key))
         check(_rank_with_offsets(with_pid, order))
+
+
+def test_pid_from_bounds_is_bisect_right_at_1023_bounds(spark):
+    """The halving CASE tree must place every key exactly where
+    bisect_right does — on each bound, between bounds, past both ends,
+    and with runs of duplicated cuts — and a null key past the last
+    bucket."""
+    import bisect
+
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from candy_store_etl_spark.sources.tpch import pid_from_bounds
+
+    # 1,023 sorted cuts: distinct ones, 50 duplicated pairs and a run
+    # of four
+    bounds = sorted(
+        [float(i) for i in range(900)]
+        + [float(i) for i in range(100, 200, 2)]
+        + [float(i) + 0.5 for i in range(0, 140, 2)]
+        + [450.0] * 3
+    )
+    assert len(bounds) == 1023 and bounds.count(450.0) == 4
+    distinct = sorted(set(bounds))
+    keys = (
+        bounds
+        + [(a + b) / 2 for a, b in zip(distinct, distinct[1:])]
+        + [bounds[0] - 1.0, bounds[-1] + 1.0]
+    )
+    df = spark.createDataFrame(
+        [(k,) for k in keys] + [(None,)],
+        StructType([StructField("k", DoubleType())]),
+    )
+    got = df.select("k", pid_from_bounds(bounds, df["k"]).alias("p")).collect()
+    assert len(got) == len(keys) + 1
+    for r in got:
+        want = len(bounds) if r["k"] is None else bisect.bisect_right(bounds, r["k"])
+        assert r["p"] == want, r["k"]
