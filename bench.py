@@ -217,12 +217,17 @@ _DELTA_FLAG = 0.10
 _DELTA_FLAG_2R = 0.15
 
 
-def _delta_report(timings: dict[str, float]) -> dict | None:
-    """Compare against the newest BENCH_r*.json next to this script
-    (and the one before it for compounded drift); returns {prev,
-    prev_ambient_load_1m, pct: {q: +/-pct}, pct_vs_prev2: {q: ...},
-    flagged: [q, ...]} or None when no prior file parses."""
-    here = os.path.dirname(os.path.abspath(__file__))
+def _delta_report(
+    timings: dict[str, float],
+    sf: float | None,
+    here: str = os.path.dirname(os.path.abspath(__file__)),
+) -> dict | None:
+    """Compare against the newest BENCH_r*.json in ``here`` run at the
+    same scale factor ``sf`` (and the one before it for compounded
+    drift); returns {prev, prev_ambient_load_1m, pct: {q: +/-pct},
+    pct_vs_prev2: {q: ...}, flagged: [q, ...]} or None when no prior
+    file at ``sf`` parses. Timings at another scale factor differ by
+    the data size, not the code, so they are never compared."""
 
     def _round_num(p: str):
         m = re.search(r"BENCH_r(\d+)\.json$", os.path.basename(p))
@@ -243,7 +248,11 @@ def _delta_report(timings: dict[str, float]) -> dict | None:
         except Exception:
             return None
 
-    parsed = [(p, d) for p in reversed(prev_files) if (d := _load(p))]
+    parsed = [
+        (p, d)
+        for p in reversed(prev_files)
+        if (d := _load(p)) and sf is not None and d.get("sf") == sf
+    ]
     if not parsed:
         return None
     path, prev = parsed[0]
@@ -382,7 +391,7 @@ def main() -> None:
         )),
         "steal_cpu_sec_during_run": round(ambient_steal[1], 1),
     }
-    delta = _delta_report(timings)
+    delta = _delta_report(timings, out["sf"])
     if delta is not None:
         # Machine-readable attribution (round-10 verdict, wrong #3):
         # BENCH_r10 shipped with 124 cpu-s of foreign load and 31/34

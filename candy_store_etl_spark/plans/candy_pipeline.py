@@ -26,8 +26,9 @@ forms build their outputs through ``report_outputs``: this one-session
 pipeline and the staged DAG's export tasks
 (``orchestration/candy_dag.py``, the only staged form). Each report
 ends in one sorted partition (``repartition(1).sortWithinPartitions``):
-``save_single_csv`` writes it through one task anyway, so a global
-``orderBy``'s range exchange and its sampling job buy nothing.
+``save_single_csv`` collects it to the driver through Arrow and writes
+it there as one file, so a global ``orderBy``'s range exchange and its
+sampling job buy nothing.
 
 Ordering policy: the reference's scan order is *file order* (SURVEY
 §2.3 — its README claims chronological, but simulation proves file
@@ -156,8 +157,8 @@ def build_line_items(
 
 def _single_sorted(df: DataFrame, *cols: str) -> DataFrame:
     """``df`` in one partition sorted by ``cols``: the shape of a
-    report bound for ``save_single_csv``, whose ``coalesce(1)`` writes
-    through one task anyway, without a global sort's sampling job."""
+    report bound for ``save_single_csv``, which collects one sorted
+    partition, without a global sort's sampling job."""
     return df.repartition(1).sortWithinPartitions(*cols)
 
 

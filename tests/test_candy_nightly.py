@@ -7,8 +7,10 @@ the plain-Python reference semantics of ``perfbench.reference``.
 Also pinned here: the three mechanisms that keep a pass at 19 Spark
 jobs — day files read without a listing job, report outputs sorted in
 one partition without a sampling job, and order headers carried on the
-line items instead of a second branch over the transactions — and the
-staged DAG over parquet or table-log artifacts against this one."""
+line items instead of a second branch over the transactions — the
+five reports written on the sink's Arrow route in Spark's CSV bytes,
+and the staged DAG over parquet or table-log artifacts against this
+one."""
 
 from __future__ import annotations
 
@@ -28,7 +30,7 @@ from candy_store_etl_spark.orchestration import (
     stage_outputs,
 )
 from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
-from candy_store_etl_spark.sources import candy
+from candy_store_etl_spark.sources import candy, sinks
 from candy_store_etl_spark.sources.candy import read_products, read_transactions
 from candy_store_etl_spark.sources.sinks import save_single_csv
 from perfbench import gen
@@ -58,6 +60,42 @@ def _job_ids(spark, group: str):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@contextmanager
+def _spark_writer_raises():
+    """``save_single_csv`` inside the block must not fall back to
+    Spark's writer: a silent fallback would lose the driver route."""
+
+    def fallback(df, output_path, filename):
+        raise AssertionError(f"{filename} fell back to Spark's CSV writer")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(sinks, "_spark_csv", fallback)
+        yield
+
+
+def _write_arrow_route(outs, out_dir: str) -> None:
+    """The five reports through ``save_single_csv``, each on its Arrow
+    route."""
+    with _spark_writer_raises():
+        for name in OUTPUTS:
+            save_single_csv(outs[name], out_dir, f"{name}.csv")
+
+
+def _write_spark_route(outs, out_dir: str) -> None:
+    """The five reports through Spark's writer, into ``<out_dir>/spark``."""
+    for name in OUTPUTS:
+        sinks._spark_csv(outs[name], os.path.join(out_dir, "spark"), f"{name}.csv")
+
+
+def _assert_spark_bytes(out_dir: str) -> None:
+    """Each report in ``out_dir`` has the bytes of its Spark-written twin."""
+    for name in OUTPUTS:
+        with open(os.path.join(out_dir, f"{name}.csv"), "rb") as f:
+            got = f.read()
+        with open(os.path.join(out_dir, "spark", f"{name}.csv"), "rb") as f:
+            assert got == f.read(), name
+
+
 @pytest.fixture(scope="module")
 def history(candy_history):
     """(day-file paths, products.csv) of the seeded 34-day history."""
@@ -66,15 +104,18 @@ def history(candy_history):
 
 @pytest.fixture(scope="module")
 def nightly(spark, history, tmp_path_factory):
-    """One nightly pass: (build job ids, sink job ids, output dir)."""
+    """One nightly pass: (build job ids, sink job ids, output dir), its
+    reports written on the sink's Arrow route (a fallback to Spark's
+    writer raises), and the same frames through Spark's writer in
+    ``<output dir>/spark``, outside the counted jobs."""
     paths, products_csv = history
     out = str(tmp_path_factory.mktemp("nightly_out"))
     products = read_products(spark, products_csv)
     with _job_ids(spark, "nightly-build") as build_jobs:
         outs = run_pipeline(spark, paths, products)
     with _job_ids(spark, "nightly-sinks") as sink_jobs:
-        for name in OUTPUTS:
-            save_single_csv(outs[name], out, f"{name}.csv")
+        _write_arrow_route(outs, out)
+    _write_spark_route(outs, out)
     release_caches()
     return build_jobs, sink_jobs, out
 
@@ -84,6 +125,10 @@ def test_nightly_outputs_match_reference_semantics(history, nightly):
     last_day = gen.FIRST_DAY + dt.timedelta(days=len(paths) - 1)
     want = reference_outputs(products_csv, paths)
     assert check_outputs(nightly[2], want, last_day) == []
+
+
+def test_nightly_reports_are_spark_csv_bytes(nightly):
+    _assert_spark_bytes(nightly[2])
 
 
 def test_plan_build_over_34_day_files_launches_no_job(nightly):
@@ -186,13 +231,9 @@ def _txn(tid: int, customer: int, ts: str, items: list[tuple]) -> dict:
     }
 
 
-def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
-    """Transaction 7 occurs three times over two day files. Its order
-    row takes the header of the first occurrence in file order — not
-    the earliest timestamp nor the smallest or largest customer — and
-    totals over all its items. Transaction 8's items are all null, so
-    it has no order. Every form agrees: the one-session pipeline and
-    the parquet and table-log DAGs."""
+def _repeated_history(tmp_path) -> tuple[list[str], str]:
+    """(day files, products.csv) in which transaction 7 occurs three
+    times over two day files and transaction 8's items are all null."""
     day1 = _write_day(
         tmp_path / "transactions_20240201.json",
         [
@@ -213,6 +254,17 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
         ",".join(candy.PRODUCTS_SCHEMA.names)
         + "\n1,p1,c,s,Bar,2.00,1.00,100\n2,p2,c,s,Bar,3.00,1.50,100\n"
     )
+    return days, str(products_csv)
+
+
+def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
+    """Transaction 7 occurs three times over two day files. Its order
+    row takes the header of the first occurrence in file order — not
+    the earliest timestamp nor the smallest or largest customer — and
+    totals over all its items. Transaction 8's items are all null, so
+    it has no order. Every form agrees: the one-session pipeline and
+    the parquet and table-log DAGs."""
+    days, products_csv = _repeated_history(tmp_path)
     products = read_products(spark, str(products_csv))
 
     def dag(stage_format):
@@ -240,6 +292,20 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
         assert orders == [(7, "2024-02-02T10:00:00.000000", 5, 12.0, 4)], name
         assert lines == 4, name
         assert days_summarized == 1, name
+
+
+def test_repeated_transaction_reports_are_spark_csv_bytes(spark, tmp_path):
+    """The repeated-transaction history's five reports take the sink's
+    Arrow route and are byte-identical to Spark's writer's."""
+    days, products_csv = _repeated_history(tmp_path)
+    outs = run_pipeline(spark, days, read_products(spark, products_csv))
+    out = str(tmp_path / "reports")
+    try:
+        _write_arrow_route(outs, out)
+        _write_spark_route(outs, out)
+    finally:
+        release_caches()
+    _assert_spark_bytes(out)
 
 
 def test_stage_boundary_variants_match_pipeline(spark, candy_history, nightly, tmp_path):

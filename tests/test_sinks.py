@@ -1,17 +1,25 @@
 """Sinks (reference op-4): the single-file CSV report sink must
-produce exactly one named file. The parquet-staged pipeline form
-(§3.3) is pinned against the in-memory one in
-tests/test_candy_nightly.py."""
+produce exactly one named file, in the bytes of Spark's CSV writer
+whichever route writes it. The parquet-staged pipeline form (§3.3) is
+pinned against the in-memory one in tests/test_candy_nightly.py."""
 
 from __future__ import annotations
 
 import csv
+import datetime as dt
+import math
 import os
+import random
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from candy_store_etl_spark.sources import sinks
 from candy_store_etl_spark.sources.sinks import save_single_csv
+
+SPARK_CSV = sinks._spark_csv  # the reference bytes, never spied on
+LARGEST_PLAIN = math.nextafter(1e7, 0.0)  # the largest double below 1e7
 
 
 def test_save_single_csv_one_named_file(spark, tmp_path):
@@ -34,6 +42,203 @@ def test_save_single_csv_overwrites(spark, tmp_path):
     save_single_csv(spark.range(3), d, "r.csv")
     with open(os.path.join(d, "r.csv")) as f:
         assert len(list(csv.reader(f))) == 4  # header + 3
+
+
+@pytest.fixture
+def spark_route(monkeypatch):
+    """The file names ``save_single_csv`` hands to Spark's writer."""
+    calls = []
+
+    def spy(df, output_path, filename):
+        calls.append(filename)
+        return SPARK_CSV(df, output_path, filename)
+
+    monkeypatch.setattr(sinks, "_spark_csv", spy)
+    return calls
+
+
+def _both_routes(df, tmp_path) -> tuple[bytes, bytes]:
+    """(``save_single_csv`` bytes, Spark's writer's bytes) of ``df``."""
+    fast = save_single_csv(df, str(tmp_path / "fast"), "r.csv")
+    ref = SPARK_CSV(df, str(tmp_path / "spark"), "r.csv")
+    with open(fast, "rb") as f, open(ref, "rb") as g:
+        return f.read(), g.read()
+
+
+ACCEPTED_SCHEMA = (
+    "l long, i int, sh short, b byte, d double, s string, day date"
+)
+ACCEPTED_ROWS = [
+    (1, 2, 3, 4, 0.0, "plain", dt.date(2024, 2, 1)),
+    (-9_007_199_254_740_993, -2_147_483_648, -32768, -128, -0.0, "ünï©ødé 日本", dt.date(1, 1, 1)),
+    (None, None, None, None, None, None, None),
+    (0, 7, 0, 0, 1e-3, "a b", dt.date(9999, 12, 31)),
+    (5, 8, 1, 1, LARGEST_PLAIN, "x#y", dt.date(1970, 1, 1)),
+    (6, 9, 2, 2, -LARGEST_PLAIN, "it's", None),
+    (7, None, 3, 3, 1234.56, "p'q;r|s", dt.date(1582, 10, 4)),
+    (8, 10, 4, 5, 0.30000000000000004, "a~b", dt.date(2000, 2, 29)),
+    (9, 11, 5, 6, -1e-3, "z", dt.date(1999, 12, 31)),
+    (10, 12, 6, 7, 100.0, "Ω", dt.date(2024, 12, 31)),
+]
+
+
+def test_driver_route_writes_spark_bytes(spark, tmp_path, spark_route):
+    """Every accepted type, with nulls and the double boundaries, over
+    several partitions: the driver route writes it, byte for byte as
+    Spark's writer does."""
+    df = spark.createDataFrame(ACCEPTED_ROWS, ACCEPTED_SCHEMA).repartition(3, "l")
+    df = df.sortWithinPartitions("l")
+    fast, ref = _both_routes(df, tmp_path)
+    assert spark_route == []
+    assert fast == ref
+    assert fast.splitlines()[0] == b"l,i,sh,b,d,s,day"
+    assert b"\n,,,,,,\n" in fast
+
+
+def test_driver_route_writes_header_of_empty_report(spark, tmp_path, spark_route):
+    empty = spark.createDataFrame([], ACCEPTED_SCHEMA)
+    fast, ref = _both_routes(empty, tmp_path)
+    assert spark_route == []
+    assert fast == ref == b"l,i,sh,b,d,s,day\n"
+
+
+REJECTED = {
+    # doubles Java writes in scientific notation, or not as a number
+    "1e7": ("x double", [(1e7,)]),
+    "-1e7": ("x double", [(-1e7,)]),
+    "1e300": ("x double", [(1e300,)]),
+    "below 1e-3": ("x double", [(math.nextafter(1e-3, 0.0),)]),
+    "-1e-5": ("x double", [(-1e-5,)]),
+    "subnormal": ("x double", [(5e-324,)]),
+    "nan": ("x double", [(float("nan"),)]),
+    "inf": ("x double", [(float("inf"),)]),
+    "-inf": ("x double", [(float("-inf"),)]),
+    # strings Spark quotes, escapes, trims or writes as ""
+    "comma": ("s string", [("a,b",)]),
+    "quote": ("s string", [('a"b',)]),
+    "backslash": ("s string", [("a\\b",)]),
+    "cr": ("s string", [("a\rb",)]),
+    "lf": ("s string", [("a\nb",)]),
+    "leading space": ("s string", [(" a",)]),
+    "trailing space": ("s string", [("a ",)]),
+    "leading tab": ("s string", [("\ta",)]),
+    "nul": ("s string", [("\x00a",)]),
+    "leading nbsp": ("s string", [("\xa0a",)]),
+    "comment char": ("s string", [("#a",)]),
+    "empty": ("s string", [("",)]),
+    # a lone null field: Spark writes no line for it
+    "one-column null": ("x long", [(1,), (None,), (2,)]),
+    # names Spark quotes or trims in the header
+    "name with comma": ("`a,b` long", [(1,)]),
+    "name with space first": ("` a` long", [(1,)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(REJECTED))
+def test_rejected_values_take_spark_route(spark, tmp_path, spark_route, case):
+    schema, rows = REJECTED[case]
+    df = spark.createDataFrame([(7, "ok", *r) for r in rows], "k long, t string, " + schema)
+    if case == "one-column null":
+        df = df.select(df.columns[-1])
+    fast, ref = _both_routes(df, tmp_path)
+    assert spark_route == ["r.csv"]
+    assert fast == ref
+
+
+@pytest.mark.parametrize(
+    "expr",
+    [
+        "timestamp_seconds(id * 86399) AS x",
+        "CAST(id / 3 AS DECIMAL(10, 4)) AS x",
+        "CAST(id / 3 AS FLOAT) AS x",
+        "id % 2 = 0 AS x",
+        "CAST(CAST(id AS STRING) AS BINARY) AS x",
+    ],
+)
+def test_other_types_take_spark_route(spark, tmp_path, spark_route, expr):
+    df = spark.range(4).selectExpr("id", expr)
+    fast, ref = _both_routes(df, tmp_path)
+    assert spark_route == ["r.csv"]
+    assert fast == ref
+
+
+@pytest.mark.parametrize(
+    "expr",
+    ["array(id) AS x", "named_struct('v', id) AS x", "map(id, id) AS x"],
+)
+def test_types_spark_cannot_write_raise_on_spark_route(spark, tmp_path, spark_route, expr):
+    df = spark.range(2).selectExpr("id", expr)
+    with pytest.raises(Exception, match="CSV") as fast:
+        save_single_csv(df, str(tmp_path / "fast"), "r.csv")
+    with pytest.raises(Exception, match="CSV") as ref:
+        SPARK_CSV(df, str(tmp_path / "spark"), "r.csv")
+    assert spark_route == ["r.csv"]
+    assert type(fast.value) is type(ref.value)
+
+
+def test_collect_over_max_result_size_falls_back(spark, tmp_path, spark_route, monkeypatch):
+    """A report bigger than ``spark.driver.maxResultSize`` is written by
+    Spark's writer; any other collect failure is raised."""
+    df = spark.range(5).selectExpr("id", "id / 2 AS half")
+
+    def too_big(self):
+        raise RuntimeError(
+            "Job aborted due to stage failure: Total size of serialized results "
+            "of 1 tasks (3.1 MiB) is bigger than spark.driver.maxResultSize (1024.0 KiB)"
+        )
+
+    monkeypatch.setattr(type(df), "toArrow", too_big)
+    fast, ref = _both_routes(df, tmp_path)
+    assert spark_route == ["r.csv"]
+    assert fast == ref
+    assert os.listdir(tmp_path / "fast") == ["r.csv"]
+
+    def broken(self):
+        raise RuntimeError("executor lost")
+
+    monkeypatch.setattr(type(df), "toArrow", broken)
+    with pytest.raises(RuntimeError, match="executor lost"):
+        save_single_csv(df, str(tmp_path / "fast"), "r.csv")
+    assert spark_route == ["r.csv"]
+
+
+def test_failed_write_leaves_output_path_unchanged(spark, tmp_path, spark_route, monkeypatch):
+    out = tmp_path / "reports"
+    out.mkdir()
+    (out / "r.csv").write_bytes(b"old\n")
+    (out / "other.csv").write_bytes(b"x\n")
+    before = sorted(os.listdir(out))
+
+    def half_then_fail(table, sink, options):
+        sink.write(b"0,0\n1,")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(sinks.pa_csv, "write_csv", half_then_fail)
+    with pytest.raises(OSError, match="disk full"):
+        save_single_csv(spark.range(3).selectExpr("id", "id AS j"), str(out), "r.csv")
+    assert sorted(os.listdir(out)) == before
+    assert (out / "r.csv").read_bytes() == b"old\n"
+    assert spark_route == []
+
+
+def test_double_text_is_java_double_tostring(spark):
+    """The driver route's double rule against the session JVM's
+    ``Double.toString`` over 2-dp money values, integral doubles,
+    random doubles in [1e-3, 1e7) and both ends of that range."""
+    rng = random.Random(20240201)
+    values = [k / 100 for k in rng.sample(range(10**9), 5000)]
+    values += [float(rng.randrange(10**7)) for _ in range(5000)]
+    values += [rng.uniform(1e-3, 1e7) for _ in range(10000)]
+    values += [10 ** rng.uniform(-2.99, 6.99) for _ in range(2000)]
+    values += [1e-3, LARGEST_PLAIN, 0.0, -0.0]
+    values += [-v for v in values[::11]]
+    assert len(values) >= 20000
+    arr = pa.array(values, pa.float64())
+    assert sinks._plain_doubles(arr)
+    java = spark._jvm.java.lang.Double.toString
+    text = sinks._double_text(arr).to_pylist()
+    differ = [(v, t, j) for v, t in zip(values, text) if t != (j := java(v))]
+    assert differ == []
 
 
 def test_jsonl_roundtrip_sharded(spark, sf_correctness, tmp_path):
