@@ -90,6 +90,7 @@ _UNPLAIN = r'^$|^[#\s\p{Z}]|[\s\p{Z}]$|[,"\\\p{Cc}]'
 # |x| in [1e-3, 1e7) or zero: where java.lang.Double.toString writes
 # plain decimal digits rather than computerized scientific notation.
 _PLAIN_DOUBLE_MIN, _PLAIN_DOUBLE_END = 1e-3, 1e7
+_DISTINCT_SAMPLE = 1024
 # the years whose ``yyyy-MM-dd`` text Spark and Arrow write alike
 _FIRST_DATE = pa.scalar(datetime.date.min, pa.date32())
 _LAST_DATE = pa.scalar(datetime.date.max, pa.date32())
@@ -127,13 +128,23 @@ def _all(mask: pa.Array | pa.ChunkedArray) -> bool:
 def _double_text(values: pa.Array | pa.ChunkedArray) -> pa.Array | pa.ChunkedArray:
     """``java.lang.Double.toString`` of plain doubles (``_plain_doubles``):
     Arrow's shortest round-trip digits, with ``.0`` when they have no
-    point (``1`` -> ``1.0``, ``-0`` -> ``-0.0``)."""
+    point (``1`` -> ``1.0``, ``-0`` -> ``-0.0``).
+
+    Report doubles repeat (prices, line totals), so unless most of the
+    first ``_DISTINCT_SAMPLE`` values differ, each distinct value is
+    formatted once (the hash keeps ``0.0`` and ``-0.0`` apart);
+    hashing costs more than formatting when nearly all differ."""
+    head = values.slice(0, _DISTINCT_SAMPLE)
+    if 2 * pc.count_distinct(head).as_py() > len(head):
+        return _java_double_text(values)
+    distinct = pc.unique(values)
+    return pc.take(_java_double_text(distinct), pc.index_in(values, distinct))
+
+
+def _java_double_text(values: pa.Array | pa.ChunkedArray) -> pa.Array | pa.ChunkedArray:
     text = pc.cast(values, pa.string())
-    return pc.if_else(
-        pc.match_substring(text, "."),
-        text,
-        pc.binary_join_element_wise(text, ".0", ""),
-    )
+    point = pc.if_else(pc.match_substring(text, "."), "", ".0")
+    return pc.binary_join_element_wise(text, point, "")
 
 
 def _csv_text(table: pa.Table, schema: T.StructType) -> pa.Table | None:

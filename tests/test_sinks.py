@@ -224,7 +224,9 @@ def test_failed_write_leaves_output_path_unchanged(spark, tmp_path, spark_route,
 def test_double_text_is_java_double_tostring(spark):
     """The driver route's double rule against the session JVM's
     ``Double.toString`` over 2-dp money values, integral doubles,
-    random doubles in [1e-3, 1e7) and both ends of that range."""
+    random doubles in [1e-3, 1e7) and both ends of that range, each
+    value once (formatted in place) and three times over (each
+    distinct value formatted once)."""
     rng = random.Random(20240201)
     values = [k / 100 for k in rng.sample(range(10**9), 5000)]
     values += [float(rng.randrange(10**7)) for _ in range(5000)]
@@ -236,9 +238,11 @@ def test_double_text_is_java_double_tostring(spark):
     arr = pa.array(values, pa.float64())
     assert sinks._plain_doubles(arr)
     java = spark._jvm.java.lang.Double.toString
+    want = [java(v) for v in values]
     text = sinks._double_text(arr).to_pylist()
-    differ = [(v, t, j) for v, t in zip(values, text) if t != (j := java(v))]
-    assert differ == []
+    assert [(v, t, j) for v, t, j in zip(values, text, want) if t != j] == []
+    tripled = pa.array([v for v in values for _ in range(3)], pa.float64())
+    assert sinks._double_text(tripled).to_pylist() == [j for j in want for _ in range(3)]
 
 
 def test_jsonl_roundtrip_sharded(spark, sf_correctness, tmp_path):
