@@ -46,6 +46,7 @@ from collections import defaultdict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import driver_read
 from ..sources import table_log as tl
 from ..sources.footer_stats import file_stats, keep_file
 from ..streaming.cdc import (
@@ -547,14 +548,27 @@ def keyset_lookup(
     the scan plans under the committed snapshot schema. ``version``
     pins the whole lookup to one snapshot.
 
-    Execution is a JVM parquet scan over JUST the touched groups'
-    files with an ``isin`` residual — not a Python-side merge: a
-    lookup has no join to express, so after file pruning the
-    vectorized JVM reader (row-group stats, codegen filter) beats an
-    Arrow-Python task wave at every probe density (measured by the
-    point-lookup serving A/B, NOTES.md Round-9 progress: the Python
-    form lost 3x to a plain scan once probes saturated the buckets;
-    this form degrades to exactly that scan instead).
+    Execution reads JUST the touched groups' files, on one of two
+    routes, recorded in ``info["exec"]`` (``"driver"`` or
+    ``"spark"``) with ``info["exec_reason"]``:
+
+    - ``driver`` — a few small local files (``driver_read``'s gates:
+      at most ``MAX_FILES`` files and ``MAX_BYTES`` bytes, an
+      integral, string or date key, at most 64 coerced keys, file
+      schemas equal to the snapshot's, no legacy rebase metadata):
+      each file is read with pyarrow and filtered with ``is_in`` on
+      the driver, and the rows come back as a ``LocalRelation``, so
+      collecting them launches no Spark job (SCALING.md, "Serving
+      probes: driver read vs Spark scan").
+    - ``spark`` — everything else: a JVM parquet scan with an
+      ``isin`` residual (a broadcast semi-join past 64 keys). After
+      file pruning the vectorized JVM reader beats an Arrow-Python
+      task wave at every probe density (point-lookup serving A/B,
+      NOTES.md Round-9 progress: the Python form lost 3x to a plain
+      scan once probes saturated the buckets; this form degrades to
+      exactly that scan instead).
+
+    Both routes return the same rows under the same schema.
 
     ``_resolved`` (internal, passed by ``serve()``) carries the
     already-pinned ``{"spec", "schema", "bpf", "by_group"}`` so the
@@ -635,7 +649,29 @@ def keyset_lookup(
         # lookup that is a legitimate all-miss, not a caller error —
         # an empty result under the committed schema, so callers never
         # wrap probes in try/except to handle absence
+        if info is not None:
+            info.update(exec="driver", exec_reason="no files")
         return spark.createDataFrame([], schema)
+    df, reason = driver_read.read_keys(spark, files, schema, key, coerced)
+    if info is not None:
+        info.update(
+            exec="spark" if df is None else "driver", exec_reason=reason
+        )
+    if df is not None:
+        return df
+    return _keyset_scan(spark, files, schema, key, dtype, coerced)
+
+
+def _keyset_scan(
+    spark: SparkSession,
+    files: list[str],
+    schema,
+    key: str,
+    dtype: str,
+    coerced: list,
+) -> DataFrame:
+    """``keyset_lookup``'s Spark route: one parquet scan of ``files``
+    under ``schema`` with the probe residual on ``key``."""
     scan = spark.read.schema(schema).parquet(*files)
     if len(coerced) <= 64:
         return scan.filter(F.col(key).isin(coerced))
@@ -801,6 +837,13 @@ def serve(
       saturation, where it degrades to slightly better than the scan
       instead of losing).
 
+    ``info["exec"]`` says how the rows are read: ``"driver"`` when
+    the keyset route's few small files are read on the driver through
+    Arrow (``keyset_lookup``; no Spark job), ``"spark"`` for a Spark
+    scan — every other route, and the keyset route past the driver
+    read's gates. ``info["exec_reason"]`` says why. ``route`` is the
+    same either way.
+
     ``point_lookup`` stays the separate per-key CONTRACT api (its
     ``probe_files`` column pins the one-file point read); as an
     execution shape it is dominated by ``keyset_lookup``, so the
@@ -844,12 +887,19 @@ def serve(
         if off_key
         else ("scan-unbucketed" if spec is None else "scan-small-table")
     )
-    info: dict = {"files_total": len(files)}
+    # only the keyset route has a driver read; it overwrites these
+    info: dict = {
+        "files_total": len(files),
+        "exec": "spark",
+        "exec_reason": "no driver route",
+    }
     if not files:
         # an empty snapshot is a legitimate all-miss for a serving
         # read — same no-try/except contract as the lookups
-        info["route"] = scan_route
-        info["files_scanned"] = 0
+        info.update(
+            route=scan_route, files_scanned=0,
+            exec="driver", exec_reason="no files",
+        )
         return spark.createDataFrame([], schema), info
     key = spec["key"] if spec is not None else key_col
     if key is None:
@@ -961,6 +1011,12 @@ def serve_range(
       help. Low coverage is the layout's signal to run
       ``compact(sort_by=column, stats_cols=[column])`` maintenance.
 
+    ``info["exec"]`` is ``"driver"`` when the stats-pruned route's
+    kept files pass ``driver_read``'s gates (few, small, local files
+    of the snapshot schema; an integral column with ``int`` bounds)
+    and are read on the driver through Arrow with no Spark job, and
+    ``"spark"`` otherwise; ``info["exec_reason"]`` says why.
+
     All resolution is pinned to one ``version`` (default: current,
     read once here), like every other serving face."""
     if version is None:
@@ -972,9 +1028,12 @@ def serve_range(
     # accessors would pay the resolve three times per probe
     files, stats, schema = tl.snapshot_resolved(table_dir, version=version)
     coverage, _ = _stats_coverage(files, stats, column, "cols")
+    # only the stats-pruned route has a driver read; it overwrites these
     info: dict = {
         "files_total": len(files),
         "stats_coverage": round(coverage, 3),
+        "exec": "spark",
+        "exec_reason": "no driver route",
     }
     if not files:
         # an empty snapshot is a legitimate all-miss, same as serve()
@@ -983,16 +1042,27 @@ def serve_range(
                 f"{table_dir} is empty with no committed schema — "
                 "nothing to shape the result"
             )
-        info["route"] = "full-scan"
-        info["files_scanned"] = 0
+        info.update(
+            route="full-scan", files_scanned=0,
+            exec="driver", exec_reason="no files",
+        )
         return spark.createDataFrame([], schema), info
     if coverage >= coverage_threshold:
-        df, kept, total = tl.read_snapshot_pruned(
-            spark, table_dir, column, lo, hi, version=version,
-            _resolved=(files, stats, schema),
+        kept = [p for p in files if keep_file(stats, p, column, lo, hi)]
+        df, reason = driver_read.read_range(
+            spark, kept, schema, column, lo, hi
         )
-        info["route"] = "stats-pruned"
-        info["files_scanned"] = kept
+        info.update(
+            route="stats-pruned",
+            files_scanned=len(kept),
+            exec="spark" if df is None else "driver",
+            exec_reason=reason,
+        )
+        if df is None:
+            df, _, _ = tl.read_snapshot_pruned(
+                spark, table_dir, column, lo, hi, version=version,
+                _resolved=(files, stats, schema),
+            )
         if record_routes:
             _record_range_route(
                 table_dir, column, "stats-pruned", version

@@ -1313,18 +1313,26 @@ def inline_probe_rows(
 
     ``cols_sql`` projects over the probe column ``v`` (and its
     0-based index ``i``); ``dtype`` is a committed Spark type string
-    (trusted — never caller-supplied free text). Values bind as
-    parameter markers, so string probes need no escaping, and a probe
-    the stored type cannot represent still fails LOUDLY — the ANSI
-    cast is evaluated while folding the inline table
+    (trusted — never caller-supplied free text). A Python ``int`` in
+    the signed 64-bit range (not a ``bool``) is written into the SQL
+    text as a literal — a parameter costs about four py4j round trips,
+    so inlining keeps integer probes at a constant number of calls
+    whatever the key count; every other value binds as a parameter
+    marker, so string probes need no escaping. Either way a probe the
+    stored type cannot represent still fails LOUDLY — the ANSI cast
+    is evaluated while folding the inline table
     (``INVALID_INLINE_TABLE.FAILED_SQL_EXPRESSION_EVALUATION``
     wrapping the cast error), never a silent null/empty result."""
-    rows_sql = ", ".join(
-        f"({i}, CAST(:v{i} AS {dtype}))" for i in range(len(values))
-    )
+    rows, args = [], {}
+    for i, v in enumerate(values):
+        if type(v) is int and -(1 << 63) <= v < (1 << 63):
+            rows.append(f"({i}, CAST({v} AS {dtype}))")
+        else:
+            rows.append(f"({i}, CAST(:v{i} AS {dtype}))")
+            args[f"v{i}"] = v
     return spark.sql(
-        f"SELECT {cols_sql} FROM VALUES {rows_sql} AS t(i, v)",
-        args={f"v{i}": v for i, v in enumerate(values)},
+        f"SELECT {cols_sql} FROM VALUES {', '.join(rows)} AS t(i, v)",
+        args=args or None,
     ).collect()
 
 

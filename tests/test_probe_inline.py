@@ -100,3 +100,45 @@ def test_buckets_of_values_zero_jobs(spark, tmp_path):
             .count()
         )
         assert rows == 1, f"key {v} not in its routed bucket {b}"
+
+
+def _outcome(fn):
+    try:
+        return ("rows", [tuple(r) for r in fn()])
+    except Exception as e:  # noqa: BLE001 — the outcome IS the result
+        return ("error", type(e).__name__)
+
+
+@pytest.mark.parametrize("dtype", ["tinyint", "smallint", "int", "bigint"])
+def test_inlined_ints_equal_parameter_markers(spark, dtype):
+    # Python ints in the signed 64-bit range are written into the SQL
+    # text; everything else binds as a parameter. Both forms must give
+    # the same value, hash and loud failure for every integral type.
+    cols = "i, v, xxhash64(v) AS h"
+    edges = [
+        -(1 << 63) - 1, -(1 << 63), -(1 << 63) + 1,
+        -(1 << 31) - 1, -(1 << 31), (1 << 31) - 1, 1 << 31,
+        -129, -128, 127, 128, -32769, 32767, 32768,
+        0, -1, (1 << 63) - 1, 1 << 63,
+    ]
+    for v in edges:
+        inline = _outcome(lambda: tl.inline_probe_rows(spark, [v], dtype, cols))
+        marker = _outcome(
+            lambda: spark.sql(
+                f"SELECT {cols} FROM VALUES (0, CAST(:v0 AS {dtype})) AS t(i, v)",
+                args={"v0": v},
+            ).collect()
+        )
+        assert inline[0] == marker[0], (dtype, v, inline, marker)
+        if inline[0] == "rows":
+            assert inline == marker, (dtype, v)
+    # the first value past the type fails loudly in the inlined form
+    # (past bigint, the value itself is not inlined)
+    over = {"tinyint": 128, "smallint": 32768, "int": 1 << 31}.get(dtype)
+    if over is not None:
+        assert _outcome(
+            lambda: tl.inline_probe_rows(spark, [over], dtype, cols)
+        )[0] == "error"
+    # a mixed probe set keeps each value's own form
+    rows = tl.inline_probe_rows(spark, [5, "7", True], "bigint", "i, v")
+    assert [tuple(r) for r in rows] == [(0, 5), (1, 7), (2, 1)]
