@@ -28,10 +28,26 @@ cannot express "these two scans are already co-partitioned", so the
 join itself runs as an Arrow-batched grouped merge (ladder rung (b)),
 while all planning stays metadata-sized on the driver.
 
+Every co-located operator — the pair join (``colocated_bucket_join``),
+the N-table star join (``colocated_multi_join``), the fused rollup join
+(``colocated_aggregate_join``) and the exchange-free aggregate
+(``bucketed_aggregate``) — is the same two pieces plus a kernel:
+
+- ONE group planner (``_plan_groups``; ``colocated_plan`` is its
+  two-side public face) validates every side's spec, schema, bucket
+  count, key type and file-grouping nesting, aligns the files at the
+  coarsest grouping, and selects groups by join type;
+- ONE task-wave runner (``_run_wave``) routes one task per planned
+  group with zero exchange, reads each side's files padded to its
+  committed schema, calls the operator's Arrow kernel (an Acero join
+  chain, a ``group_by`` then a join, or a ``group_by``) and casts the
+  result to the output schema, whose join columns follow ONE rule
+  (``_join_schema``, shared with ``serve_join``'s Spark routes).
+
 Scale shape at 100 TB: the ONLY exchange in the plan moves one
 metadata row per aligned bucket group (task routing, bytes ~ file
-names); each task streams two bucket-local parquet scans through one
-pandas hash-merge. Layouts need not match file-for-file — a side
+names); each task streams its bucket-local parquet reads through one
+Acero kernel. Layouts need not match file-for-file — a side
 coarsened by compaction (``buckets_per_file`` > 1) aligns at the
 coarser granularity, so maintenance never breaks join locality.
 """
@@ -359,37 +375,87 @@ def _side_meta(table_dir: str, version: int | None) -> dict:
     }
 
 
-def _check_key_types(
-    left_dir: str,
-    right_dir: str,
-    lkey: str,
-    rkey: str,
-    lv: int | None,
-    rv: int | None,
-    _schemas: tuple | None = None,
-) -> None:
-    """Equal bucket counts are NOT enough for co-location: xxhash64
-    is type-sensitive (int 5 and bigint 5 hash differently), so two
-    tables bucketed with the same n on differently-typed keys pass
-    the count check while equal key VALUES land in different buckets
-    — a silently incomplete join. Compare the committed snapshot
-    schemas' key types and refuse the plan instead. ``_schemas``
-    carries already-resolved schemas from a planner that has them."""
-    if _schemas is not None:
-        ls, rs = _schemas
-    else:
-        ls = tl.snapshot_schema(left_dir, version=lv)
-        rs = tl.snapshot_schema(right_dir, version=rv)
-    if ls is None or rs is None:
-        return  # no committed schema to compare (join will refuse later)
-    lt, rt = ls[lkey].dataType, rs[rkey].dataType
-    if lt != rt:
+def _needs(how: str, side: int) -> bool:
+    """Whether a task must have ``side`` (0 = the anchor) populated to
+    emit anything under ``how``: inner and left-semi output only
+    matched anchor rows (every side), left-outer and left-anti emit
+    unmatched anchor rows (the anchor only), full outer emits either
+    side's unmatched rows (no side). The ONE rule behind the group
+    planner's selection and the stats pruner's empty-side drop."""
+    return how in ("inner", "left_semi") or (
+        how in ("left", "left_anti") and side == 0
+    )
+
+
+def _plan_groups(
+    dirs: list[str], metas: list[dict], how: str
+) -> list[tuple]:
+    """The ONE co-located group planner, over N sides (``dirs[0]``
+    anchors): one task ``(coarse_group, files_0, ..., files_{N-1})``
+    per aligned bucket group, selected by ``how`` (``_needs``: inner/
+    semi plan groups populated on every side, left/anti every
+    anchor-populated group, full the union), with a side's list empty
+    where that side has no files in the group.
+
+    Validates that every side commits a bucket spec and a schema, the
+    SAME bucket count and the SAME key type as the anchor (xxhash64 is
+    type-sensitive: equal values of different types hash to different
+    buckets, so the join would be silently incomplete), and file
+    groupings that nest; mismatched groupings (a side coarsened by
+    compaction) align at the coarsest one."""
+    if how not in _ACERO_JOIN:
+        raise ValueError(f"how={how!r} not in {sorted(_ACERO_JOIN)}")
+    for d, m in zip(dirs, metas):
+        if m["spec"] is None:
+            raise ValueError(
+                f"{d} has no committed bucket spec — write it with "
+                "write_bucketed (or repartition and use a plain join)"
+            )
+        if m["schema"] is None:
+            raise ValueError(
+                f"{d} has a bucket spec but no committed schema — "
+                "rewrite it with write_bucketed"
+            )
+    ns = [m["spec"]["n"] for m in metas]
+    if len(set(ns)) != 1:
         raise ValueError(
-            f"bucket key types differ ({lkey}: {lt.simpleString()} vs "
-            f"{rkey}: {rt.simpleString()}): xxhash64 is type-sensitive, "
-            "equal values hash to different buckets — cast one table's "
-            "key and rewrite it"
+            f"bucket counts differ ({' vs '.join(map(str, ns))}): keys "
+            "hash to different buckets, co-location does not hold"
         )
+    key0 = metas[0]["spec"]["key"]
+    t0 = metas[0]["schema"][key0].dataType
+    for m in metas[1:]:
+        key = m["spec"]["key"]
+        t = m["schema"][key].dataType
+        if t != t0:
+            raise ValueError(
+                f"bucket key types differ ({key0}: {t0.simpleString()} vs "
+                f"{key}: {t.simpleString()}): xxhash64 is type-sensitive, "
+                "equal values hash to different buckets — cast one "
+                "table's key and rewrite it"
+            )
+    bpfs = [m["bpf"] for m in metas]
+    coarse = max(bpfs)
+    if any(coarse % b for b in bpfs):
+        raise ValueError(
+            f"file groupings {bpfs} do not nest — compact to multiples "
+            "of one another"
+        )
+    sides: list[dict[int, list[str]]] = []
+    for m, bpf in zip(metas, bpfs):
+        per: dict[int, list[str]] = defaultdict(list)
+        for p in m["files"]:
+            per[_group_of_name(p) * bpf // coarse].append(p)
+        sides.append(per)
+    groups = {
+        g
+        for per in sides
+        for g in per
+        if all(g in s for i, s in enumerate(sides) if _needs(how, i))
+    }
+    return [
+        (g, *(sorted(s.get(g, ())) for s in sides)) for g in sorted(groups)
+    ]
 
 
 def colocated_plan(
@@ -401,20 +467,13 @@ def colocated_plan(
     right_version: int | None = None,
     _sides: tuple[dict, dict] | None = None,
 ) -> list[tuple[int, list[str], list[str]]]:
-    """Driver-side task plan for the co-located join: one entry per
-    aligned bucket group — ``(coarse_group, left_files, right_files)``
-    — with group SELECTION driven by the join type: inner and
-    left-semi output only matched left rows, so groups empty on
-    either side plan no task; left-outer and left-anti must emit
-    unmatched left rows, so every left-populated group plans a task
-    (its right list may be empty); full-outer plans the union. This
-    is bucket-level pruning falling out of join semantics — an anti
-    join against a sparse blocklist still skips nothing on the left,
-    but an inner join with a sparse probe side reads only the probed
-    buckets. Validates that both tables commit the SAME bucket count
-    and the SAME key type (same hash by construction: ``bucket_expr``
-    is the one definition, and xxhash64 is type-sensitive), and
-    aligns mismatched file groupings at the coarser granularity.
+    """Driver-side task plan for the co-located pair join — the
+    two-side face of ``_plan_groups``: one ``(coarse_group,
+    left_files, right_files)`` entry per aligned bucket group, selected
+    by the join type. This is bucket-level pruning falling out of join
+    semantics — an anti join against a sparse blocklist still skips
+    nothing on the left, but an inner join with a sparse probe side
+    reads only the probed buckets.
 
     Each side's spec, file grouping, and file list resolve at ONE
     pinned version (``left_version``/``right_version``, default the
@@ -422,56 +481,11 @@ def colocated_plan(
     compaction coarsening the live CDC warehouse mid-plan — can no
     longer land between the bpf read and the file listing and pair
     post-compaction files with a pre-compaction grouping."""
-    if _sides is not None:
-        lmeta, rmeta = _sides
-    else:
-        lmeta = _side_meta(left_dir, left_version)
-        rmeta = _side_meta(right_dir, right_version)
-    for d, m in ((left_dir, lmeta), (right_dir, rmeta)):
-        if m["spec"] is None:
-            raise ValueError(
-                f"{d} has no committed bucket spec — write it with "
-                "write_bucketed (or repartition and use a plain join)"
-            )
-    ls, rs = lmeta["spec"], rmeta["spec"]
-    if ls["n"] != rs["n"]:
-        raise ValueError(
-            f"bucket counts differ ({ls['n']} vs {rs['n']}): keys hash "
-            "to different buckets, co-location does not hold"
-        )
-    _check_key_types(
-        left_dir, right_dir, ls["key"], rs["key"],
-        lmeta["version"], rmeta["version"],
-        _schemas=(lmeta["schema"], rmeta["schema"]),
+    metas = _sides or (
+        _side_meta(left_dir, left_version),
+        _side_meta(right_dir, right_version),
     )
-    bpf_l, bpf_r = lmeta["bpf"], rmeta["bpf"]
-    coarse = max(bpf_l, bpf_r)
-    if coarse % bpf_l or coarse % bpf_r:
-        raise ValueError(
-            f"file groupings {bpf_l} and {bpf_r} do not nest — "
-            "compact one side to a multiple of the other"
-        )
-    sides: list[dict[int, list[str]]] = []
-    for m, bpf in ((lmeta, bpf_l), (rmeta, bpf_r)):
-        per: dict[int, list[str]] = defaultdict(list)
-        for p in m["files"]:
-            per[_group_of_name(p) * bpf // coarse].append(p)
-        sides.append(per)
-    if how not in _ACERO_JOIN:
-        raise ValueError(
-            f"how={how!r} not in {sorted(_ACERO_JOIN)}"
-        )
-    lf, rf = sides
-    if how in ("inner", "left_semi"):
-        groups = set(lf) & set(rf)
-    elif how in ("left", "left_anti"):
-        groups = set(lf)
-    else:  # full
-        groups = set(lf) | set(rf)
-    return [
-        (g, sorted(lf.get(g, ())), sorted(rf.get(g, ())))
-        for g in sorted(groups)
-    ]
+    return _plan_groups([left_dir, right_dir], list(metas), how)
 
 
 def buckets_of_values(
@@ -520,11 +534,6 @@ def buckets_of_values(
     for r in rows:
         out[r.i] = r.b
     return out
-
-
-def bucket_of_value(spark: SparkSession, table_dir: str, value) -> int:
-    """Single-key face of ``buckets_of_values``."""
-    return buckets_of_values(spark, table_dir, [value])[0]
 
 
 def keyset_lookup(
@@ -756,17 +765,6 @@ def point_lookup(
 SERVE_SCAN_FILE_THRESHOLD = 96
 
 
-def _probe_filter(
-    spark: SparkSession, scan: DataFrame, key: str, dtype: str, values: list
-) -> DataFrame:
-    """Size-routed probe residual — delegates to the ONE shared rule
-    (``table_log.probe_residual``; casting each probe to the STORED
-    key type keeps serve()'s "route is invisible in the answer"
-    contract across the 64-probe / 96-file boundaries for string/
-    decimal/float keys too, not just integers)."""
-    return tl.probe_residual(spark, scan, key, dtype, values)
-
-
 def _stats_coverage(
     files: list[str], stats: dict, column: str, kind: str
 ) -> tuple[float, int]:
@@ -951,7 +949,7 @@ def serve(
                 if hint["due"]:
                     info["maintenance_hint"] = hint["fix"]
         scan = spark.read.schema(schema).parquet(*files)
-        return _probe_filter(spark, scan, key, dtype, keys), info
+        return tl.probe_residual(spark, scan, key, dtype, keys), info
     info["route"] = "keyset"
     if record_routes:
         _record_range_route(table_dir, key, "keyset", version, kind="point")
@@ -1437,13 +1435,97 @@ def _acero_out_type(fn: str, src):
     return src
 
 
+def _group_agg(tbl, key: str, aggs: list[tuple[str, str, str]]):
+    """Acero ``group_by(key)`` of one bucket group's rows, aggregate
+    columns renamed from Acero's ``{col}_{fn}`` to their out names."""
+    got = tbl.group_by(key).aggregate([(col, fn) for col, fn, _ in aggs])
+    rename = {f"{col}_{fn}": out for col, fn, out in aggs}
+    return got.rename_columns([rename.get(n, n) for n in got.column_names])
+
+
+def _join_schema(left: list, lkey: str, rights: list[tuple], how: str):
+    """The ONE output-column rule of every co-located join, and of
+    ``serve_join``'s Spark routes: the left fields, then each right
+    side's ``(schema, key)`` non-key fields in order. Semi/anti output
+    the left rows verbatim. Right fields are nullable where ``how``
+    can leave them unmatched (left, full); for ``full`` the key is the
+    coalesced key, first, and every other field is nullable. A right
+    non-key name that collides with an earlier output column is
+    refused rather than silently suffixed."""
+    from pyspark.sql.types import StructField, StructType
+
+    def nullable(fields):
+        return [StructField(f.name, f.dataType, True) for f in fields]
+
+    out = list(left)
+    for schema, key in rights:
+        extra = [f for f in schema.fields if f.name != key]
+        overlap = {f.name for f in extra} & {f.name for f in out}
+        if overlap:
+            raise ValueError(
+                f"non-key column name overlap {sorted(overlap)}: rename "
+                "before joining"
+            )
+        if how not in ("left_semi", "left_anti"):
+            out += nullable(extra) if how in ("left", "full") else extra
+    if how == "full":
+        out = [f for f in out if f.name == lkey] + nullable(
+            f for f in out if f.name != lkey
+        )
+    return StructType(out)
+
+
+def _run_wave(
+    spark: SparkSession, tasks: list[tuple], schemas: list, out_schema, kernel
+) -> DataFrame:
+    """The ONE co-located task runner. ``tasks`` are the planner's
+    ``(group, files_0, ..., files_{N-1})`` rows; each becomes one
+    routing row (``_routing_relation``: one task per row, zero
+    exchange), and its task reads every side's files (bare paths or
+    skew-split row-group ranges, ``_read_table_spec``) padded to that
+    side's committed ``schemas[i]`` (``_pad_table``; a side with no
+    files in the group reads as a schema-true empty table), calls
+    ``kernel(tables) -> pa.Table`` — the operator's whole per-group
+    work, Arrow end to end — and ships the result selected and cast to
+    ``out_schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(out_schema)
+    reads = [to_arrow_schema(s) for s in schemas]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for row in batch.to_pylist():
+                tables = [
+                    pa.concat_tables(
+                        [_pad_table(_read_table_spec(p), s) for p in paths]
+                    )
+                    if paths
+                    else s.empty_table()
+                    for paths, s in zip(row["files"], reads)
+                ]
+                got = kernel(tables)
+                if got.num_rows:
+                    yield from got.select(target.names).cast(
+                        target
+                    ).to_batches()
+
+    return _routing_relation(
+        spark,
+        [(t[0], list(t[1:])) for t in tasks],
+        "grp int, files array<array<string>>",
+    ).mapInArrow(run, out_schema)
+
+
 def bucketed_aggregate(
     spark: SparkSession,
     table_dir: str,
     aggs: list[tuple[str, str, str]],
     *,
     version: int | None = None,
-    _resolved: tuple | None = None,
+    _side: dict | None = None,
 ) -> DataFrame:
     """Per-key aggregation WITHOUT an exchange: the table is bucketed
     on the key, so every row of a key lives in one file group — each
@@ -1456,62 +1538,19 @@ def bucketed_aggregate(
     version (``version``, default the current version read once here)
     — a concurrent commit cannot mix snapshots mid-plan.
 
-    ``_resolved`` (internal, passed by ``serve_aggregate``) carries an
-    already-resolved ``(files, schema)`` pair for the same version so
+    ``_side`` (internal, passed by ``serve_aggregate``) carries the
+    table's already-resolved ``_side_meta`` for the same version so
     the routing caller pays the checkpoint-load + tail-replay once."""
-    if version is None:
-        version = tl.current_version(table_dir)
-    spec = bucket_spec(table_dir, version=version)
-    if spec is None:
-        raise ValueError(f"{table_dir} has no committed bucket spec")
-    key = spec["key"]
-    if _resolved is not None:
-        files, schema = _resolved
-    else:
-        files, _, schema = tl.snapshot_resolved(table_dir, version=version)
-    if schema is None:
-        raise ValueError("bucketed_aggregate needs a committed schema")
-    by_group: dict[int, list[str]] = defaultdict(list)
-    for p in files:
-        by_group[_group_of_name(p)].append(p)
+    meta = _side or _side_meta(table_dir, version)
+    tasks = _plan_groups([table_dir], [meta], "inner")
+    key = meta["spec"]["key"]
+    from pyspark.sql.types import StructType
 
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(_agg_out_fields(schema, key, aggs))
-    out_cols = [f.name for f in out_schema.fields]
-    target = to_arrow_schema(out_schema)
-
-    read_arrow = to_arrow_schema(schema)
-
-    def agg(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for batch in batches:
-            for row in batch.to_pylist():
-                tbl = pa.concat_tables(
-                    [
-                        _pad_table(pq.read_table(p), read_arrow)
-                        for p in row["files"]
-                    ]
-                )
-                got = tbl.group_by(key).aggregate(
-                    [(col, fn) for col, fn, _ in aggs]
-                )
-                rename = {f"{col}_{fn}": out for col, fn, out in aggs}
-                got = got.rename_columns(
-                    [rename.get(n, n) for n in got.column_names]
-                )
-                if got.num_rows:
-                    yield from got.select(out_cols).cast(target).to_batches()
-
-    meta = _routing_relation(
-        spark,
-        sorted((g, sorted(fs)) for g, fs in by_group.items()),
-        "grp int, files array<string>",
+    out_schema = StructType(_agg_out_fields(meta["schema"], key, aggs))
+    return _run_wave(
+        spark, tasks, [meta["schema"]], out_schema,
+        lambda t: _group_agg(t[0], key, aggs),
     )
-    return meta.mapInArrow(agg, out_schema)
 
 
 def colocated_multi_join(
@@ -1546,139 +1585,46 @@ def colocated_multi_join(
     if len(dirs) < 2:
         raise ValueError("colocated_multi_join needs >= 2 tables")
     # one pinned version per table for the whole plan (spec, grouping,
-    # files, schema) — same mid-plan-commit defense as the pair join,
-    # resolved with ONE checkpoint-load + tail-replay per table
-    # (_side_meta) instead of one per metadata fact
+    # files, schema), resolved with ONE checkpoint-load + tail-replay
+    # per table (_side_meta)
     metas = [_side_meta(d, None) for d in dirs]
-    specs = []
-    for d, m in zip(dirs, metas):
-        if m["spec"] is None:
-            raise ValueError(f"{d} has no committed bucket spec")
-        specs.append(m["spec"])
-    if len({s["n"] for s in specs}) != 1:
-        raise ValueError(
-            f"bucket counts differ ({[s['n'] for s in specs]}): keys "
-            "hash to different buckets, co-location does not hold"
-        )
-    for d, s, m in zip(dirs[1:], specs[1:], metas[1:]):
-        _check_key_types(
-            dirs[0], d, specs[0]["key"], s["key"],
-            metas[0]["version"], m["version"],
-            _schemas=(metas[0]["schema"], m["schema"]),
-        )
-    bpfs = [m["bpf"] for m in metas]
-    coarse = max(bpfs)
-    if any(coarse % b for b in bpfs):
-        raise ValueError(
-            f"file groupings {bpfs} do not nest — compact to multiples"
-        )
-    sides: list[dict[int, list[str]]] = []
-    for m, bpf in zip(metas, bpfs):
-        per: dict[int, list[str]] = defaultdict(list)
-        for p in m["files"]:
-            per[_group_of_name(p) * bpf // coarse].append(p)
-        sides.append(per)
-    if how == "inner":
-        groups = sorted(set.intersection(*(set(s) for s in sides)))
-    else:  # left: every anchor-populated group plans a task
-        groups = sorted(sides[0])
-    tasks = [
-        (g, [sorted(s.get(g, ())) for s in sides]) for g in groups
-    ]
+    tasks = _plan_groups(dirs, metas, how)
     if max_task_rows is not None:
-        # split on the ANCHOR side; the satellite lists ride each
-        # chunk untouched (the splitter passes its third element
-        # through verbatim)
-        split = _split_skewed_groups(
-            [(g, fs[0], fs[1:]) for g, fs in tasks], max_task_rows
-        )
-        tasks = [(g, [lf] + list(rest)) for g, lf, rest in split]
-
+        tasks = _split_skewed_groups(tasks, max_task_rows)
+    keys = [m["spec"]["key"] for m in metas]
     schemas = [m["schema"] for m in metas]
-    if any(s is None for s in schemas):
-        raise ValueError("every table must carry a committed schema")
-    anchor_key = specs[0]["key"]
-    keys = [s["key"] for s in specs]
-    from pyspark.sql.types import StructField, StructType
-
-    out_fields = list(schemas[0].fields)
-    seen = {f.name for f in schemas[0].fields}
-    for schema, key in zip(schemas[1:], keys[1:]):
-        extra = [f for f in schema.fields if f.name != key]
-        overlap = {f.name for f in extra} & seen
-        if overlap:
-            raise ValueError(
-                f"non-key column name overlap {sorted(overlap)}: "
-                "rename before joining"
-            )
-        if how == "left":  # satellite columns can be unmatched-null
-            extra = [
-                StructField(f.name, f.dataType, True) for f in extra
-            ]
-        out_fields += extra
-        seen |= {f.name for f in extra}
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(out_schema)
-    arrow_schemas = [to_arrow_schema(s) for s in schemas]
-    join_type = "inner" if how == "inner" else "left outer"
-
-    def merge(batches):
-        import pyarrow as pa
-
-        def _read(paths, schema) -> pa.Table:
-            if not paths:  # satellite empty in this group (left join)
-                return pa.Table.from_batches([], schema=schema)
-            return pa.concat_tables(
-                [_pad_table(_read_table_spec(p), schema) for p in paths]
-            )
-
-        for batch in batches:
-            for row in batch.to_pylist():
-                joined = _read(row["files"][0], arrow_schemas[0])
-                for i, paths in enumerate(row["files"][1:], start=1):
-                    joined = joined.join(
-                        _read(paths, arrow_schemas[i]),
-                        keys=anchor_key,
-                        right_keys=keys[i],
-                        join_type=join_type,
-                    )
-                    if not joined.num_rows:
-                        break
-                if joined.num_rows:
-                    yield from joined.select(out_cols).cast(
-                        target
-                    ).to_batches()
-
-    # sub distinguishes a split group's chunks; the one-row-per-slice
-    # routing relation spreads them one-per-task (the point of the
-    # split) with no exchange
-    meta = _routing_relation(
-        spark,
-        [(g, i, fs) for i, (g, fs) in enumerate(tasks)],
-        "grp int, sub int, files array<array<string>>",
+    out_schema = _join_schema(
+        schemas[0].fields, keys[0], list(zip(schemas[1:], keys[1:])), how
     )
-    return meta.mapInArrow(merge, out_schema)
+    join_type = _ACERO_JOIN[how]
+
+    def kernel(tables):
+        joined = tables[0]
+        for t, key in zip(tables[1:], keys[1:]):
+            if not joined.num_rows:
+                break
+            joined = joined.join(
+                t, keys=keys[0], right_keys=key, join_type=join_type
+            )
+        return joined
+
+    return _run_wave(spark, tasks, schemas, out_schema, kernel)
 
 
-def _split_skewed_groups(
-    tasks: list[tuple[int, list[str], list[str]]], max_rows: int
-) -> list[tuple[int, list[str], list[str]]]:
-    """Skew relief for the SPJ: a bucket group whose LEFT side exceeds
-    ``max_rows`` splits into several tasks at ROW-GROUP granularity —
-    each chunk of left row groups pairs with the group's FULL right
-    file list, so every left row still meets the complete right side
-    exactly once and the union of chunk joins equals the unsplit join
-    (valid for inner/left/semi/anti, where output rows are left-row-
-    local; full outer would duplicate right-unmatched rows and is
-    refused upstream). Chunk specs encode as ``path#start:end``
-    (half-open row-group range); whole files stay bare paths. Row
-    counts come from parquet footers, read driver-side only when
-    splitting is requested — at warehouse scale the same numbers
-    would ride the commit's per-file stats."""
+def _split_skewed_groups(tasks: list[tuple], max_rows: int) -> list[tuple]:
+    """Skew relief for the SPJ: a bucket group whose ANCHOR side (the
+    task's first file list) exceeds ``max_rows`` splits into several
+    tasks at ROW-GROUP granularity — each chunk of anchor row groups
+    pairs with the group's FULL other-side file lists, so every anchor
+    row still meets the complete other sides exactly once and the
+    union of chunk joins equals the unsplit join (valid for inner/
+    left/semi/anti, where output rows are anchor-row-local; full outer
+    would duplicate right-unmatched rows and is refused upstream).
+    Chunk specs encode as ``path#start:end`` (half-open row-group
+    range); whole files stay bare paths. Row counts come from parquet
+    footers, read driver-side only when splitting is requested — at
+    warehouse scale the same numbers would ride the commit's per-file
+    stats."""
     import pyarrow.parquet as pq
 
     def _encode(chunk: list[tuple[str, int]]) -> list[str]:
@@ -1694,8 +1640,8 @@ def _split_skewed_groups(
         specs.append(f"{cur}#{s}:{e}")
         return specs
 
-    out: list[tuple[int, list[str], list[str]]] = []
-    for g, lf, rf in tasks:
+    out: list[tuple] = []
+    for g, lf, *rest in tasks:
         units: list[tuple[str, int, int]] = []
         total = 0
         for p in lf:
@@ -1705,89 +1651,60 @@ def _split_skewed_groups(
                 units.append((p, i, n))
                 total += n
         if total <= max_rows or len(units) <= 1:
-            out.append((g, list(lf), rf))
+            out.append((g, list(lf), *rest))
             continue
         chunk: list[tuple[str, int]] = []
         rows = 0
         for p, i, n in units:
             if chunk and rows + n > max_rows:
-                out.append((g, _encode(chunk), rf))
+                out.append((g, _encode(chunk), *rest))
                 chunk, rows = [], 0
             chunk.append((p, i))
             rows += n
         if chunk:
-            out.append((g, _encode(chunk), rf))
+            out.append((g, _encode(chunk), *rest))
     return out
 
 
-def prune_tasks_by_left_stats(
-    tasks: list[tuple[int, list[str], list[str]]],
-    left_dir: str,
+def prune_tasks_by_stats(
+    tasks: list[tuple],
+    side: int,
+    table_dir: str,
     column: str,
     lo,
     hi,
     *,
-    keep_empty_left: bool = False,
+    keep_empty: bool = False,
     version: int | None = None,
     _stats: dict | None = None,
-) -> tuple[list[tuple[int, list[str], list[str]]], int, int]:
-    """Drop left files whose committed [min, max] for ``column``
-    cannot intersect [lo, hi] from an SPJ task plan — zone-map
-    pruning INSIDE bucket groups, planned from the log with zero
-    read-time footer I/O (the same losslessness rules as
+) -> tuple[list[tuple], int, int]:
+    """Drop side ``side``'s files (0 = left, 1 = right, in the
+    ``colocated_plan`` task rows; ``table_dir`` is that side's table)
+    whose committed [min, max] for ``column`` cannot intersect
+    [lo, hi] — zone-map pruning INSIDE bucket groups, planned from the
+    log with zero read-time footer I/O (the same losslessness rules as
     ``read_snapshot_pruned``: stats-less files are kept, committed-
     empty files are dropped, and the caller still applies the exact
-    row filter). A group whose left side prunes to nothing plans no
-    task unless ``keep_empty_left`` (full outer must still emit its
-    right side). ``version`` pins the stats to the snapshot the task
-    plan was built from; ``_stats`` carries an already-resolved stats
-    map for that version. Returns ``(tasks, files_kept,
-    files_total)``."""
+    row filter, so it is filter-then-join on that input). A group
+    whose side prunes to nothing plans no task unless ``keep_empty``
+    (the join type still emits the other side's rows there).
+    ``version`` pins the stats to the snapshot the task plan was built
+    from; ``_stats`` carries an already-resolved stats map for that
+    version. Returns ``(tasks, files_kept, files_total)``."""
     stats = (
         _stats
         if _stats is not None
-        else tl.snapshot_file_stats(left_dir, version=version)
+        else tl.snapshot_file_stats(table_dir, version=version)
     )
-    out: list[tuple[int, list[str], list[str]]] = []
+    out: list[tuple] = []
     kept_n = total = 0
-    for g, lf, rf in tasks:
-        kept = [p for p in lf if keep_file(stats, p, column, lo, hi)]
-        total += len(lf)
+    for task in tasks:
+        files = task[1 + side]
+        kept = [p for p in files if keep_file(stats, p, column, lo, hi)]
+        total += len(files)
         kept_n += len(kept)
-        if kept or keep_empty_left:
-            out.append((g, kept, rf))
-    return out, kept_n, total
-
-
-def prune_tasks_by_right_stats(
-    tasks: list[tuple[int, list[str], list[str]]],
-    right_dir: str,
-    column: str,
-    lo,
-    hi,
-    *,
-    keep_empty_right: bool = False,
-    version: int | None = None,
-    _stats: dict | None = None,
-) -> tuple[list[tuple[int, list[str], list[str]]], int, int]:
-    """The RIGHT-side twin of ``prune_tasks_by_left_stats``
-    (filter-then-join semantics on the right input): a group whose
-    right side prunes to nothing plans no task unless
-    ``keep_empty_right`` (left/anti/full must still emit left
-    rows)."""
-    stats = (
-        _stats
-        if _stats is not None
-        else tl.snapshot_file_stats(right_dir, version=version)
-    )
-    out: list[tuple[int, list[str], list[str]]] = []
-    kept_n = total = 0
-    for g, lf, rf in tasks:
-        kept = [p for p in rf if keep_file(stats, p, column, lo, hi)]
-        total += len(rf)
-        kept_n += len(kept)
-        if kept or keep_empty_right:
-            out.append((g, lf, kept))
+        if kept or keep_empty:
+            out.append(task[: 1 + side] + (kept,) + task[2 + side :])
     return out, kept_n, total
 
 
@@ -1811,24 +1728,19 @@ def colocated_bucket_join(
     100 TB decontamination serving shape (corpus anti-joined against
     a blocklist, both bucketed, no exchange of corpus bytes).
 
-    The plan: a LOCAL metadata relation (one row per aligned bucket
-    group, carrying both sides' file lists — a side's list may be
-    empty for outer/anti groups), pre-sliced one row per task with no
-    exchange at all (``_routing_relation``; the former metadata
-    range-repartition paid a sampling job + shuffle per execution)
-    — then ``mapInArrow`` reads each group's
-    files from BOTH tables and hash-joins them with Acero (columnar
-    end-to-end; no pandas materialization). Equal keys share a
+    The plan is ``colocated_plan``'s task rows run by the one task
+    runner (``_run_wave``): each task reads its group's files from
+    BOTH tables and hash-joins them with Acero. Equal keys share a
     bucket by construction (same hash, same n), so the union of
     per-group joins IS the join: an unmatched left row is unmatched
-    in its OWN bucket or nowhere. Output columns: all left columns,
-    then (except semi/anti, whose output is left rows verbatim) the
-    right columns minus its key, null-filled where the join type
-    leaves them unmatched; for ``full`` the key column is the
-    Acero-coalesced key, so right-only rows carry their key under
-    the left name. The committed snapshot schemas are the source of
-    truth; overlapping non-key names are refused rather than
-    silently suffixed.
+    in its OWN bucket or nowhere. Output columns (``_join_schema``):
+    all left columns, then (except semi/anti, whose output is left
+    rows verbatim) the right columns minus its key, null-filled where
+    the join type leaves them unmatched; for ``full`` the key column
+    is the Acero-coalesced key, so right-only rows carry their key
+    under the left name. The committed snapshot schemas are the
+    source of truth; overlapping non-key names are refused rather
+    than silently suffixed.
 
     ``max_task_rows`` opts into SKEW RELIEF: a hot bucket whose left
     side exceeds it splits into several row-group-ranged tasks, each
@@ -1840,8 +1752,8 @@ def colocated_bucket_join(
 
     ``left_range=(column, lo, hi)`` composes ZONE-MAP pruning with
     the layout: left files whose committed stats cannot intersect
-    the range are never read (``prune_tasks_by_left_stats``), and
-    the exact inclusive-range filter is applied to the left input
+    the range are never read (``prune_tasks_by_stats``), and the
+    exact inclusive-range filter is applied to the left input
     Arrow-side before the join, so the result equals filtering the
     left table first — layout locates the KEY, stats locate the
     RANGE, one planner uses both. ``right_range`` is the symmetric
@@ -1851,37 +1763,20 @@ def colocated_bucket_join(
     # the ENTIRE plan — specs, groupings, file lists, stats, schemas —
     # resolves at these two versions, read once here (or PASSED in by
     # a router like serve_join that already resolved them, so its
-    # decision and the executed join can never straddle a commit): a
-    # commit landing mid-plan (compaction on the live CDC warehouse, a
-    # concurrent append) cannot mix snapshots
-    lmeta = (
-        _sides[0] if _sides is not None
-        else _side_meta(left_dir, left_version)
+    # decision and the executed join can never straddle a commit)
+    metas = _sides or (
+        _side_meta(left_dir, left_version),
+        _side_meta(right_dir, right_version),
     )
-    rmeta = (
-        _sides[1] if _sides is not None
-        else _side_meta(right_dir, right_version)
-    )
-    ls, rs = lmeta["spec"], rmeta["spec"]
-    tasks = colocated_plan(
-        left_dir, right_dir, how, _sides=(lmeta, rmeta)
-    )
-    if left_range is not None:
-        tasks, _, _ = prune_tasks_by_left_stats(
-            tasks,
-            left_dir,
-            *left_range,
-            keep_empty_left=(how == "full"),
-            _stats=lmeta["stats"],
-        )
-    if right_range is not None:
-        tasks, _, _ = prune_tasks_by_right_stats(
-            tasks,
-            right_dir,
-            *right_range,
-            keep_empty_right=(how in ("left", "left_anti", "full")),
-            _stats=rmeta["stats"],
-        )
+    tasks = colocated_plan(left_dir, right_dir, how, _sides=metas)
+    ranges = (left_range, right_range)
+    for side, (d, rng) in enumerate(zip((left_dir, right_dir), ranges)):
+        if rng is not None:
+            tasks, _, _ = prune_tasks_by_stats(
+                tasks, side, d, *rng,
+                keep_empty=not _needs(how, side),
+                _stats=metas[side]["stats"],
+            )
     if max_task_rows is not None:
         if how == "full":
             raise ValueError(
@@ -1889,98 +1784,28 @@ def colocated_bucket_join(
                 "right-unmatched rows would emit once per chunk"
             )
         tasks = _split_skewed_groups(tasks, max_task_rows)
-    lkey, rkey = ls["key"], rs["key"]
-    lschema, rschema = lmeta["schema"], rmeta["schema"]
-    if lschema is None or rschema is None:
-        raise ValueError("both tables must carry committed schemas")
-    overlap = ({f.name for f in lschema} & {f.name for f in rschema}) - (
-        {lkey} if lkey == rkey else set()
+    (lkey, lschema), (rkey, rschema) = (
+        (m["spec"]["key"], m["schema"]) for m in metas
     )
-    if overlap:
-        raise ValueError(
-            f"non-key column name overlap {sorted(overlap)}: rename "
-            "before joining"
-        )
-    from pyspark.sql.types import StructField, StructType
-
-    def _nullable(fields):
-        return [StructField(f.name, f.dataType, True) for f in fields]
-
-    if how in ("left_semi", "left_anti"):
-        out_schema = StructType(list(lschema.fields))
-    elif how == "left":
-        out_schema = StructType(
-            list(lschema.fields)
-            + _nullable(f for f in rschema.fields if f.name != rkey)
-        )
-    elif how == "full":
-        # everything but the coalesced key can be unmatched-null
-        out_schema = StructType(
-            [lschema[lkey]]
-            + _nullable(f for f in lschema.fields if f.name != lkey)
-            + _nullable(f for f in rschema.fields if f.name != rkey)
-        )
-    else:
-        out_schema = StructType(
-            lschema.fields + [f for f in rschema.fields if f.name != rkey]
-        )
-    out_cols = [f.name for f in out_schema.fields]
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(out_schema)
-    l_arrow = to_arrow_schema(lschema)
-    r_arrow = to_arrow_schema(rschema)
+    out_schema = _join_schema(lschema.fields, lkey, [(rschema, rkey)], how)
     join_type = _ACERO_JOIN[how]
 
-    def merge(batches):
-        # Arrow end-to-end: parquet -> Acero hash join -> record
-        # batches into the JVM; no pandas materialization at all
-        import pyarrow as pa
+    def kernel(tables):
         import pyarrow.compute as pc
 
-        def _read(specs, schema) -> pa.Table:
-            if not specs:  # a side empty in this group (outer/anti)
-                return pa.Table.from_batches([], schema=schema)
-            return pa.concat_tables(
-                [_pad_table(_read_table_spec(s), schema) for s in specs]
+        left, right = (
+            t
+            if rng is None
+            else t.filter(
+                (pc.field(rng[0]) >= rng[1]) & (pc.field(rng[0]) <= rng[2])
             )
+            for t, rng in zip(tables, ranges)
+        )
+        return left.join(
+            right, keys=lkey, right_keys=rkey, join_type=join_type
+        )
 
-        for batch in batches:
-            for row in batch.to_pylist():
-                left = _read(row["left_files"], l_arrow)
-                if left_range is not None:
-                    fcol, flo, fhi = left_range
-                    left = left.filter(
-                        (pc.field(fcol) >= flo) & (pc.field(fcol) <= fhi)
-                    )
-                right = _read(row["right_files"], r_arrow)
-                if right_range is not None:
-                    fcol, flo, fhi = right_range
-                    right = right.filter(
-                        (pc.field(fcol) >= flo) & (pc.field(fcol) <= fhi)
-                    )
-                joined = left.join(
-                    right,
-                    keys=lkey,
-                    right_keys=rkey,
-                    join_type=join_type,
-                )
-                if joined.num_rows:
-                    yield from joined.select(out_cols).cast(
-                        target
-                    ).to_batches()
-
-    # sub distinguishes a split group's chunks; the one-row-per-slice
-    # routing relation spreads them one-per-task (the point of the
-    # split) with no exchange
-    meta = _routing_relation(
-        spark,
-        [(g, i, lf, rf) for i, (g, lf, rf) in enumerate(tasks)],
-        "grp int, sub int, left_files array<string>, "
-        "right_files array<string>",
-    )
-    return meta.mapInArrow(merge, out_schema)
+    return _run_wave(spark, tasks, [lschema, rschema], out_schema, kernel)
 
 
 def colocated_aggregate_join(
@@ -2012,83 +1837,21 @@ def colocated_aggregate_join(
     with one metadata-sized exchange in the whole plan."""
     if how not in ("inner", "left"):
         raise ValueError(f"how={how!r} not in ['inner', 'left']")
-    # ONE resolve + two layout walks per side (_side_meta), shared
-    # with the task planner — the accessor-per-fact form paid the
-    # checkpoint-load + tail-replay 4x per call
-    lmeta = _side_meta(left_dir, None)
-    rmeta = _side_meta(right_dir, None)
-    ls, rs = lmeta["spec"], rmeta["spec"]
-    tasks = colocated_plan(
-        left_dir,
-        right_dir,
-        "inner" if how == "inner" else "left",
-        _sides=(lmeta, rmeta),
+    metas = (_side_meta(left_dir, None), _side_meta(right_dir, None))
+    tasks = colocated_plan(left_dir, right_dir, how, _sides=metas)
+    (lkey, lschema), (rkey, rschema) = (
+        (m["spec"]["key"], m["schema"]) for m in metas
     )
-    lkey, rkey = ls["key"], rs["key"]
-    lschema, rschema = lmeta["schema"], rmeta["schema"]
-    if lschema is None or rschema is None:
-        raise ValueError("both tables must carry committed schemas")
-    from pyspark.sql.types import StructField, StructType
-
-    left_fields = _agg_out_fields(lschema, lkey, aggs)  # [key] + aggs
-    right_extra = [f for f in rschema.fields if f.name != rkey]
-    overlap = {f.name for f in left_fields} & {f.name for f in right_extra}
-    if overlap:
-        raise ValueError(
-            f"output column name overlap {sorted(overlap)}: rename "
-            "before joining"
-        )
-    if how == "left":
-        right_extra = [
-            StructField(f.name, f.dataType, True) for f in right_extra
-        ]
-    out_schema = StructType(left_fields + right_extra)
-    out_cols = [f.name for f in out_schema.fields]
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(out_schema)
-    l_arrow = to_arrow_schema(lschema)
-    r_arrow = to_arrow_schema(rschema)
-    join_type = "inner" if how == "inner" else "left outer"
-
-    def merge(batches):
-        import pyarrow as pa
-
-        def _read(specs, schema) -> pa.Table:
-            if not specs:
-                return pa.Table.from_batches([], schema=schema)
-            return pa.concat_tables(
-                [_pad_table(_read_table_spec(s), schema) for s in specs]
-            )
-
-        rename = {f"{col}_{fn}": out for col, fn, out in aggs}
-        for batch in batches:
-            for row in batch.to_pylist():
-                left = _read(row["left_files"], l_arrow)
-                rolled = left.group_by(lkey).aggregate(
-                    [(col, fn) for col, fn, _ in aggs]
-                )
-                rolled = rolled.rename_columns(
-                    [rename.get(n, n) for n in rolled.column_names]
-                )
-                joined = rolled.join(
-                    _read(row["right_files"], r_arrow),
-                    keys=lkey,
-                    right_keys=rkey,
-                    join_type=join_type,
-                )
-                if joined.num_rows:
-                    yield from joined.select(out_cols).cast(
-                        target
-                    ).to_batches()
-
-    meta = _routing_relation(
-        spark,
-        [(g, lf, rf) for g, lf, rf in tasks],
-        "grp int, left_files array<string>, right_files array<string>",
+    out_schema = _join_schema(
+        _agg_out_fields(lschema, lkey, aggs), lkey, [(rschema, rkey)], how
     )
-    return meta.mapInArrow(merge, out_schema)
+    join_type = _ACERO_JOIN[how]
+    return _run_wave(
+        spark, tasks, [lschema, rschema], out_schema,
+        lambda t: _group_agg(t[0], lkey, aggs).join(
+            t[1], keys=lkey, right_keys=rkey, join_type=join_type
+        ),
+    )
 
 
 #: router vocabulary -> (Acero fn, Spark fn) for serve_aggregate: only
@@ -2133,26 +1896,16 @@ def serve_aggregate(
             f"unsupported agg fns {sorted(set(bad))} — route-invariant "
             f"vocabulary is {sorted(_SERVE_AGGS)}"
         )
-    if version is None:
-        version = tl.current_version(table_dir)
-    spec = bucket_spec(table_dir, version=version)
-    # ONE checkpoint-load + tail-replay feeds BOTH routes (the
-    # separate snapshot_schema + snapshot_files accessors paid it
-    # twice per probe; serve()/serve_range's single-resolve
-    # discipline, applied to the aggregate face)
-    files, _, schema = tl.snapshot_resolved(table_dir, version=version)
+    # ONE checkpoint-load + tail-replay feeds BOTH routes
+    # (serve()/serve_range's single-resolve discipline)
+    meta = _side_meta(table_dir, version)
+    spec, files, schema = meta["spec"], meta["files"], meta["schema"]
     if schema is None:
         raise ValueError(f"{table_dir} needs a committed schema")
     info: dict = {}
     if spec is not None and spec["key"] == group_col:
         info["route"] = "bucketed-local"
-        return (
-            bucketed_aggregate(
-                spark, table_dir, aggs, version=version,
-                _resolved=(files, schema),
-            ),
-            info,
-        )
+        return bucketed_aggregate(spark, table_dir, aggs, _side=meta), info
     info["route"] = "shuffle-agg"
     if not files:
         from pyspark.sql.types import StructType
@@ -2262,14 +2015,7 @@ def serve_join(
             "a side has no committed bucket spec: pass on=(left_col, "
             "right_col)"
         )
-    overlap = ({f.name for f in lschema} & {f.name for f in rschema}) - (
-        {lkey} if lkey == rkey else set()
-    )
-    if overlap:
-        raise ValueError(
-            f"non-key column name overlap {sorted(overlap)}: rename "
-            "before joining"
-        )
+    out_schema = _join_schema(lschema.fields, lkey, [(rschema, rkey)], how)
     lbytes = sum(os.path.getsize(p) for p in lfiles)
     rbytes = sum(os.path.getsize(p) for p in rfiles)
     info: dict = {
@@ -2324,17 +2070,9 @@ def serve_join(
     lside = F.broadcast(left) if bcast == "left" else left
     rside = F.broadcast(right) if bcast == "right" else right
     joined = lside.join(rside, left[lkey] == right[rkey], how)
-    if how in ("left_semi", "left_anti"):
-        return joined, info  # left columns verbatim, same as the SPJ
-    r_rest = [right[f.name] for f in rschema.fields if f.name != rkey]
+    # the co-located route's output columns, by name (_join_schema)
+    cols = {f.name: right[f.name] for f in rschema.fields}
+    cols.update({f.name: left[f.name] for f in lschema.fields})
     if how == "full":
-        out = joined.select(
-            F.coalesce(left[lkey], right[rkey]).alias(lkey),
-            *[left[f.name] for f in lschema.fields if f.name != lkey],
-            *r_rest,
-        )
-    else:
-        out = joined.select(
-            *[left[f.name] for f in lschema.fields], *r_rest
-        )
-    return out, info
+        cols[lkey] = F.coalesce(left[lkey], right[rkey]).alias(lkey)
+    return joined.select(*(cols[n] for n in out_schema.names)), info

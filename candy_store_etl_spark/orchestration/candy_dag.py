@@ -70,23 +70,14 @@ class StageContext:
     inputs live, where stage artifacts go, and how to get a session.
     Stages communicate ONLY through persisted artifacts under
     ``workdir`` — no temp views, no driver state (the reference DAG's
-    fatal flaw, `candy_store_pipeline_dag.py:147-207`).
-
-    ``stage_format`` picks the artifact kind: ``"parquet"`` (plain
-    directories — resumable, but artifacts have no history) or
-    ``"table_log"`` (each stage a VERSIONED table-log table, the line
-    items bucketed on ``order_id`` with ``n_buckets``: a re-run lands
-    as a new atomic version instead of clobbering files, every stage
-    output time-travels, and the staged line items serve bucketed
-    point reads). Same task graph, same outputs — pinned equal to the
-    one-session pipeline in tests/test_candy_nightly.py."""
+    fatal flaw, `candy_store_pipeline_dag.py:147-207`). Artifacts are
+    plain parquet directories, pinned equal to the one-session
+    pipeline in tests/test_candy_nightly.py."""
 
     session_factory: Callable[[], SparkSession]
     transaction_paths: tuple[str, ...]
     products_path: str
     workdir: str
-    stage_format: str = "parquet"
-    n_buckets: int = 16
 
     def stage(self, artifact: str) -> str:
         return os.path.join(self.workdir, artifact)
@@ -99,30 +90,7 @@ def _read(spark: SparkSession, ctx: StageContext, relation: str) -> DataFrame:
         from ..sources.candy import read_products
 
         return read_products(spark, ctx.products_path)
-    if ctx.stage_format == "table_log":
-        from ..sources import table_log as tl
-
-        return tl.read_snapshot(spark, ctx.stage(relation))
     return spark.read.parquet(ctx.stage(relation))
-
-
-def _write(df: DataFrame, ctx: StageContext, artifact: str) -> None:
-    if ctx.stage_format != "table_log":
-        from ..sources.sinks import write_partitioned
-
-        write_partitioned(df, ctx.stage(artifact))
-    elif artifact == "line_items":
-        # the fact-sized stage buckets on order_id, so the staged line
-        # items serve bucketed point reads and co-located joins
-        from ..operators.colocated import write_bucketed
-
-        write_bucketed(
-            df, ctx.stage(artifact), key_col="order_id", n_buckets=ctx.n_buckets
-        )
-    else:
-        from ..sources import table_log as tl
-
-        tl.overwrite(df, ctx.stage(artifact))
 
 
 def run_stage(name: str, ctx: StageContext) -> None:
@@ -130,14 +98,13 @@ def run_stage(name: str, ctx: StageContext) -> None:
     upstream stage artifacts from disk, compute, write this task's
     artifact. Safe to call from any process once upstreams have run."""
     from ..plans import candy_pipeline as cp
+    from ..sources.sinks import save_single_csv, write_partitioned
 
     if name not in CANDY_DAG_TASKS:
         raise KeyError(f"unknown stage {name!r}")
     spark = ctx.session_factory()
     artifact = CANDY_DAG_TASKS[name][1]
     if artifact.startswith("reports/"):
-        from ..sources.sinks import save_single_csv
-
         report = artifact.split("/", 1)[1]
         reads, project = cp.REPORTS[report]
         save_single_csv(
@@ -159,7 +126,7 @@ def run_stage(name: str, ctx: StageContext) -> None:
         df = cp.build_orders_with_profit(_read(spark, ctx, "line_items"))
     else:  # build_daily_summary
         df = cp.build_daily_summary(_read(spark, ctx, "orders"))
-    _write(df, ctx, artifact)
+    write_partitioned(df, ctx.stage(artifact))
 
 
 def run_dag(ctx: StageContext) -> None:

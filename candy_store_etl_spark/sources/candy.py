@@ -18,7 +18,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DecimalType,
@@ -174,24 +173,3 @@ def read_jdbc(spark: SparkSession, url: str, table: str, **options: str) -> Data
         .load()
     )
 
-
-def explode_items(transactions: DataFrame) -> DataFrame:
-    """Flatten the nested items array — one row per line item.
-
-    Reference `data_processor.py:123-132`. ``explode`` (not
-    ``explode_outer``): transactions with an empty/null items array
-    produce no rows, matching the reference.
-    """
-    return transactions.select(
-        F.col("transaction_id").alias("order_id"),
-        F.col("customer_id"),
-        F.col("timestamp").alias("order_datetime"),
-        F.explode("items").alias("item"),
-    ).select(
-        "order_id",
-        "customer_id",
-        "order_datetime",
-        F.col("item.product_id").alias("product_id"),
-        F.col("item.product_name").alias("product_name"),
-        F.col("item.qty").alias("qty"),
-    )

@@ -83,9 +83,10 @@ _DRIVER_TYPES = (
     T.StringType,
     T.DateType,
 )
-# A string Spark's writer would quote, escape or trim (a delimiter,
-# quote, escape or control character anywhere; the comment character
-# or whitespace first; whitespace last), or write as ``""`` (empty).
+# A string left to Spark's writer: one it would quote or escape (a
+# delimiter, quote, escape or control character anywhere; the comment
+# character first), one with whitespace at an edge, or one it writes
+# as ``""`` (empty).
 _UNPLAIN = r'^$|^[#\s\p{Z}]|[\s\p{Z}]$|[,"\\\p{Cc}]'
 # |x| in [1e-3, 1e7) or zero: where java.lang.Double.toString writes
 # plain decimal digits rather than computerized scientific notation.
@@ -150,8 +151,6 @@ def _java_double_text(values: pa.Array | pa.ChunkedArray) -> pa.Array | pa.Chunk
 def _csv_text(table: pa.Table, schema: T.StructType) -> pa.Table | None:
     """``table`` as the strings Spark's CSV writer would write for each
     value, or None when some value's text could differ."""
-    if table.num_columns == 1 and table.column(0).null_count:
-        return None  # Spark skips a line whose only field is null
     columns = []
     for field, values in zip(schema.fields, table.columns):
         if isinstance(field.dataType, T.StringType):
@@ -188,11 +187,15 @@ def save_single_csv(df: DataFrame, output_path: str, filename: str) -> str:
 
     Spark's writer (``_spark_csv``) writes the report instead when the
     text could differ: a column of another type, a name or string
-    Spark would quote, escape or trim, an empty string, a double that
-    Java writes in scientific notation (0 < |x| < 1e-3, |x| >= 1e7,
-    NaN, infinite), a date outside years 1-9999, a null in a
-    one-column report; or when the collect exceeds
-    ``spark.driver.maxResultSize``."""
+    Spark would quote or escape, a string with whitespace or a control
+    character at an edge, an empty string, a double that Java writes
+    in scientific notation (0 < |x| < 1e-3, |x| >= 1e7, NaN,
+    infinite), a date outside years 1-9999; or when the collect
+    exceeds ``spark.driver.maxResultSize``.
+
+    A null in a one-column report raises ``ValueError`` on either
+    route: its line would be empty, and Spark's writer drops an empty
+    line, so the row would be lost."""
     os.makedirs(output_path, exist_ok=True)
     schema = df.schema
     names = schema.names
@@ -209,6 +212,8 @@ def save_single_csv(df: DataFrame, output_path: str, filename: str) -> str:
         if "spark.driver.maxResultSize" not in str(e):
             raise
         return _spark_csv(df, output_path, filename)
+    if len(names) == 1 and table.column(0).null_count:
+        raise _one_column_null(names[0])
     text = _csv_text(table, schema)
     if text is None:
         return _spark_csv(df, output_path, filename)
@@ -227,15 +232,29 @@ def save_single_csv(df: DataFrame, output_path: str, filename: str) -> str:
     return final
 
 
+def _one_column_null(name: str) -> ValueError:
+    return ValueError(
+        f"one-column report has a null in {name!r}: Spark's CSV writer "
+        "drops its empty line; fill or filter the nulls first"
+    )
+
+
 def _spark_csv(df: DataFrame, output_path: str, filename: str) -> str:
     """``save_single_csv`` through Spark's CSV writer: ``coalesce(1)``
-    into a staging directory, then its one part file renamed."""
+    into a staging directory, then its one part file renamed. Values
+    are written untrimmed (Spark's writer trims characters up to
+    U+0020 at both edges by default), and a null in a one-column
+    report raises rather than losing its line."""
+    if len(df.columns) == 1 and not df.where(df[0].isNull()).isEmpty():
+        raise _one_column_null(df.columns[0])
     os.makedirs(output_path, exist_ok=True)
     tmp = tempfile.mkdtemp(dir=output_path, prefix=".csv_stage_")
     try:
         (
             df.coalesce(1)
             .write.option("header", "true")
+            .option("ignoreLeadingWhiteSpace", "false")
+            .option("ignoreTrailingWhiteSpace", "false")
             .mode("overwrite")
             .csv(tmp)
         )

@@ -191,19 +191,37 @@ def pid_from_bounds(bounds: list[float], key):
     r12's bloom hash-fold revert.) Monotone non-decreasing in ``key``
     by construction, which is the only property the prefix-sum pattern
     needs; a key equal to a bound lands above it, and empty buckets
-    are harmless."""
-    from pyspark.sql import functions as F
+    are harmless.
 
-    def halve(lo: int, hi: int):
+    The tree is ONE SQL text over the key bound as the parameter ``k``
+    of a temporary SQL function (bounds as exact ``repr``-digit double
+    literals), which the analyzer inlines into the plan: building it
+    costs a fixed handful of py4j calls whatever ``len(bounds)`` is
+    (a ``Column`` per node would cost about 5 calls per bound)."""
+    import hashlib
+    import math
+
+    def lit(b: float) -> str:
+        b = float(b)
+        return f"{b!r}D" if math.isfinite(b) else f"CAST('{b}' AS DOUBLE)"
+
+    def halve(lo: int, hi: int) -> str:
         # the answer lies in [lo, hi]; bounds[mid] splits the range
         if lo == hi:
-            return F.lit(lo)
+            return str(lo)
         mid = (lo + hi) // 2
-        return F.when(key < F.lit(bounds[mid]), halve(lo, mid)).otherwise(
-            halve(mid + 1, hi)
+        return (
+            f"CASE WHEN k < {lit(bounds[mid])} THEN {halve(lo, mid)} "
+            f"ELSE {halve(mid + 1, hi)} END"
         )
 
-    return halve(0, len(bounds)).cast("int")
+    body = halve(0, len(bounds))
+    name = "pid_from_bounds_" + hashlib.sha1(body.encode()).hexdigest()[:16]
+    SparkSession.active().sql(
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(k DOUBLE) "
+        f"RETURNS INT RETURN {body}"
+    )
+    return F.call_function(name, key)
 
 
 def monotone_double_key(primary, doc_id, sf_dir: str, *, descending: bool = False):

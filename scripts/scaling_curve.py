@@ -149,20 +149,14 @@ def main() -> None:
         raise SystemExit(f"run scripts/gen_scale_data.py first ({args.sf1} missing)")
     have_sf10 = os.path.isdir(args.sf10)
     if args.only is not None:
-        known = set(QUERIES) | {
-            "candy_pipeline_5_outputs",
-            "candy_pipeline_tablelog_outputs",
-        }
+        known = set(QUERIES) | {"candy_pipeline_5_outputs"}
         unknown = sorted(set(args.only) - known)
         if unknown:
             raise SystemExit(
                 f"--only: not curve queries: {unknown} "
                 f"(choose from {sorted(known)})"
             )
-        candy_rows = {
-            "candy_pipeline_5_outputs",
-            "candy_pipeline_tablelog_outputs",
-        }
+        candy_rows = {"candy_pipeline_5_outputs"}
         # the candy rows scale by DAYS over the candy_sf dirs; their
         # third column needs candy_sf10, not the TPC-H sf10
         if set(args.only) & candy_rows and not os.path.isdir(CANDY_SF10):
@@ -282,47 +276,6 @@ def main() -> None:
         from candy_store_etl_spark.plans.candy_pipeline import run_pipeline
 
         _candy_row("candy_pipeline_5_outputs", run_pipeline)
-    if have_candy and (
-        args.only is None or "candy_pipeline_tablelog_outputs" in args.only
-    ):
-        # the table-log DAG's stage tasks: versioned stage tables (line
-        # items bucketed on order_id); each timed run writes fresh
-        # stage tables (that write IS part of the staged pipeline's cost)
-        import shutil as _shutil
-        import tempfile as _tempfile
-
-        from candy_store_etl_spark.orchestration import (
-            StageContext,
-            run_stages,
-            stage_outputs,
-        )
-
-        _tl_dirs: list = []
-
-        def _run_tl(spark_, paths, products):
-            # the returned DataFrames read FROM the stage tables, so a
-            # run's workdir must outlive the caller's materializing
-            # noop writes — clean the previous run's dir instead
-            while _tl_dirs:
-                _shutil.rmtree(_tl_dirs.pop(), ignore_errors=True)
-            work = _tempfile.mkdtemp(prefix="curve_candy_tl_")
-            _tl_dirs.append(work)
-            ctx = StageContext(
-                session_factory=lambda: spark_,
-                transaction_paths=tuple(paths),
-                products_path=os.path.join(
-                    os.path.dirname(paths[0]), "products.csv"
-                ),
-                workdir=work,
-                stage_format="table_log",
-            )
-            run_stages(ctx)
-            return stage_outputs(ctx)
-
-        _candy_row("candy_pipeline_tablelog_outputs", _run_tl)
-        while _tl_dirs:
-            _shutil.rmtree(_tl_dirs.pop(), ignore_errors=True)
-
     md_path = os.path.join(os.path.dirname(__file__), "..", "SCALING.md")
     # preserve the streaming-throughput section across curve re-runs
     # (scripts/streaming_throughput.py owns it; its numbers are not
@@ -457,11 +410,7 @@ def main() -> None:
             "days, scripts/gen_candy_scale.py: shifted timestamps, "
             "offset transaction ids, same product catalog) — its "
             "'sf0.1' column is the reference's base 10-day dataset. "
-            "`candy_pipeline_tablelog_outputs` is the same workload "
-            "through the table-log DAG's stage tasks "
-            "(orchestration/candy_dag.py: versioned stage tables, the "
-            "line items bucketed on order_id) — its time INCLUDES "
-            "writing the versioned stage tables each run. Streaming "
+            "Streaming "
             "throughput is measured separately by "
             "scripts/streaming_throughput.py, which appends its "
             "section below.\n"

@@ -9,8 +9,7 @@ jobs — day files read without a listing job, report outputs sorted in
 one partition without a sampling job, and order headers carried on the
 line items instead of a second branch over the transactions — the
 five reports written on the sink's Arrow route in Spark's CSV bytes,
-and the staged DAG over parquet or table-log artifacts against this
-one."""
+and the staged DAG's parquet artifacts against this one."""
 
 from __future__ import annotations
 
@@ -140,13 +139,12 @@ def test_nightly_pass_launches_at_most_20_jobs(nightly):
     assert len(build_jobs) + len(sink_jobs) <= 20
 
 
-def _dag_context(spark, paths, products_csv, workdir, stage_format):
+def _dag_context(spark, paths, products_csv, workdir):
     return StageContext(
         session_factory=lambda: spark,
         transaction_paths=tuple(paths),
         products_path=str(products_csv),
         workdir=str(workdir),
-        stage_format=stage_format,
     )
 
 
@@ -156,7 +154,7 @@ def test_staged_pipeline_returns_same_rows(spark, history, tmp_path):
     paths, products_csv = history
     products = read_products(spark, products_csv)
     want = run_pipeline(spark, paths, products)
-    ctx = _dag_context(spark, paths, products_csv, tmp_path / "staged", "parquet")
+    ctx = _dag_context(spark, paths, products_csv, tmp_path / "staged")
     run_stages(ctx)
     got = stage_outputs(ctx)
     try:
@@ -263,22 +261,18 @@ def test_repeated_transaction_is_one_order_with_first_header(spark, tmp_path):
     the earliest timestamp nor the smallest or largest customer — and
     totals over all its items. Transaction 8's items are all null, so
     it has no order. Every form agrees: the one-session pipeline and
-    the parquet and table-log DAGs."""
+    the staged DAG."""
     days, products_csv = _repeated_history(tmp_path)
     products = read_products(spark, str(products_csv))
 
-    def dag(stage_format):
-        def run(workdir):
-            ctx = _dag_context(spark, days, products_csv, workdir, stage_format)
-            run_stages(ctx)
-            return stage_outputs(ctx)
-
-        return run
+    def dag(workdir):
+        ctx = _dag_context(spark, days, products_csv, workdir)
+        run_stages(ctx)
+        return stage_outputs(ctx)
 
     forms = {
         "run_pipeline": lambda workdir: run_pipeline(spark, days, products),
-        "dag_parquet": dag("parquet"),
-        "dag_table_log": dag("table_log"),
+        "dag": dag,
     }
     for name, form in forms.items():
         outs = form(str(tmp_path / name))
@@ -309,52 +303,23 @@ def test_repeated_transaction_reports_are_spark_csv_bytes(spark, tmp_path):
 
 
 def test_stage_boundary_variants_match_pipeline(spark, candy_history, nightly, tmp_path):
-    """The parquet and table-log DAGs write the one-session pipeline's
-    five CSVs over the 34-day history, and their stage boundaries are
-    what they claim: parquet directories on disk, or committed
-    table-log tables with the line items bucketed on order_id, that a
-    re-run replaces as a new version while version 0 stays readable."""
+    """The staged DAG writes the one-session pipeline's five CSVs over
+    the 34-day history, and its stage boundaries are what they claim:
+    plain parquet directories on disk, not table-log tables."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from candy_store_etl_spark.operators import colocated as co
-    from candy_store_etl_spark.plans.candy_pipeline import build_daily_summary
     from candy_store_etl_spark.sources import table_log as tl
 
-    paths = candy_history.paths
-    want_dir = nightly[2]
-    stages = ("txns", "line_items", "orders", "daily_summary")
-    for fmt in ("parquet", "table_log"):
-        ctx = _dag_context(
-            spark, paths, candy_history.products_csv, tmp_path / f"dag_{fmt}", fmt
+    ctx = _dag_context(
+        spark, candy_history.paths, candy_history.products_csv, tmp_path / "dag"
+    )
+    run_dag(ctx)
+    for name in OUTPUTS:
+        pd.testing.assert_frame_equal(
+            pd.read_csv(os.path.join(ctx.workdir, "reports", f"{name}.csv")),
+            pd.read_csv(os.path.join(nightly[2], f"{name}.csv")),
+            obj=name,
         )
-        run_dag(ctx)
-        for name in OUTPUTS:
-            pd.testing.assert_frame_equal(
-                pd.read_csv(os.path.join(ctx.workdir, "reports", f"{name}.csv")),
-                pd.read_csv(os.path.join(want_dir, f"{name}.csv")),
-                obj=f"{fmt}:{name}",
-            )
-        if fmt == "parquet":
-            for artifact in stages:
-                assert os.path.isdir(ctx.stage(artifact)), artifact
-                assert tl.current_version(ctx.stage(artifact)) is None, artifact
-            continue
-        for artifact in stages:
-            assert tl.current_version(ctx.stage(artifact)) == 0, artifact
-        li = ctx.stage("line_items")
-        assert co.bucket_spec(li) == {"key": "order_id", "n": 16}
-        # the staged line items serve a bucketed point read directly
-        any_order = tl.read_snapshot(spark, li).select("order_id").first()[0]
-        hit = co.point_lookup(spark, li, [any_order])
-        assert hit.filter(F.col("order_id") == any_order).count() >= 1
-        # a re-run over the same workdir replaces every stage (no
-        # doubled orders) while version 0 stays readable
-        orders = ctx.stage("orders")
-        v0_rows = tl.read_snapshot(spark, orders, version=0).count()
-        assert v0_rows > 0
-        run_stages(ctx)
-        assert tl.current_version(orders) == 1
-        assert tl.read_snapshot(spark, orders).count() == v0_rows
-        assert tl.read_snapshot(spark, orders, version=0).count() == v0_rows
-        assert build_daily_summary(tl.read_snapshot(spark, orders)).count() == len(paths)
+    for artifact in ("txns", "line_items", "orders", "daily_summary"):
+        assert os.path.isdir(ctx.stage(artifact)), artifact
+        assert tl.current_version(ctx.stage(artifact)) is None, artifact

@@ -339,3 +339,33 @@ def test_pid_from_bounds_is_bisect_right_at_1023_bounds(spark):
     for r in got:
         want = len(bounds) if r["k"] is None else bisect.bisect_right(bounds, r["k"])
         assert r["p"] == want, r["k"]
+
+
+#: py4j round trips one pid_from_bounds build may make, whatever the
+#: number of bounds (one SQL text and one function call)
+PID_PY4J_CALLS = 20
+
+
+def test_pid_from_bounds_py4j_calls_do_not_grow_with_bounds(spark, monkeypatch):
+    """Building the CASE tree costs the same fixed handful of py4j
+    calls at 15 and at 1,023 bounds (a per-node build made about 5
+    calls per bound: over 5,000 at 1,023)."""
+    from py4j.java_gateway import GatewayClient
+    from pyspark.sql import functions as F
+
+    from candy_store_etl_spark.sources.tpch import pid_from_bounds
+
+    key = F.col("id").cast("double")
+    pid_from_bounds([0.5], key)  # warm
+    calls = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, *a, **k):
+        calls[0] += 1
+        return send(self, *a, **k)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    for n in (15, 1023):
+        calls[0] = 0
+        pid_from_bounds([float(i) for i in range(n)], key)
+        assert calls[0] <= PID_PY4J_CALLS, (n, calls[0])

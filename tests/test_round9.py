@@ -376,8 +376,8 @@ def test_colocated_pruned_range_join_lossless_and_prunes(spark, tmp_path):
         if 0 <= r.sd <= 99
     )
     assert got == want and len(got) > 0
-    tasks, kept, total = co.prune_tasks_by_left_stats(
-        co.colocated_plan(left, right, "inner"), left, "sd", 0, 99
+    tasks, kept, total = co.prune_tasks_by_stats(
+        co.colocated_plan(left, right, "inner"), 0, left, "sd", 0, 99
     )
     # slice 1 statsful+overlapping (kept), slice 2 statsful non-
     # overlapping (dropped), slice 3 stats-less (kept): 8 of 12
@@ -396,8 +396,9 @@ def test_colocated_pruned_range_join_gate_fixture_prunes(spark, sf_smoke):
     root = _ensure_pruned_spj_tables(spark, sf_smoke)
     left = os.path.join(root, "lines")
     right = os.path.join(root, "order_dim")
-    tasks, kept, total = co.prune_tasks_by_left_stats(
+    tasks, kept, total = co.prune_tasks_by_stats(
         co.colocated_plan(left, right, "inner"),
+        0,
         left,
         "sd",
         _PRUNE_LO,
@@ -668,8 +669,8 @@ def test_colocated_right_range_prune_lossless(spark, tmp_path):
                 + [(i, f"d{i}", None) for i in range(200, 250)]
             )
         assert got == want, how
-    tasks, kept, total = co.prune_tasks_by_right_stats(
-        co.colocated_plan(dims, lines, "inner"), lines, "sd", 0, 99
+    tasks, kept, total = co.prune_tasks_by_stats(
+        co.colocated_plan(dims, lines, "inner"), 1, lines, "sd", 0, 99
     )
     assert (kept, total) == (4, 8)  # one of two statsful slices
 

@@ -154,7 +154,7 @@ def test_null_key_rows_never_match(spark, typed_tables, monkeypatch):
 def test_empty_buckets_and_serve_front_door(spark, typed_tables, monkeypatch):
     root = typed_tables["int"]
     by_bucket = co.buckets_of_values(spark, root, list(range(200)))
-    live = {co.bucket_of_value(spark, root, k) for k in _KEYS["int"][:6]}
+    live = {co.buckets_of_values(spark, root, [k])[0] for k in _KEYS["int"][:6]}
     empty = [v for v, b in zip(range(200), by_bucket) if b not in live]
     assert empty, "fixture has no empty bucket"
     df, info = _lookup(spark, root, empty[:3])

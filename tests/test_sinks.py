@@ -126,8 +126,6 @@ REJECTED = {
     "leading nbsp": ("s string", [("\xa0a",)]),
     "comment char": ("s string", [("#a",)]),
     "empty": ("s string", [("",)]),
-    # a lone null field: Spark writes no line for it
-    "one-column null": ("x long", [(1,), (None,), (2,)]),
     # names Spark quotes or trims in the header
     "name with comma": ("`a,b` long", [(1,)]),
     "name with space first": ("` a` long", [(1,)]),
@@ -138,11 +136,37 @@ REJECTED = {
 def test_rejected_values_take_spark_route(spark, tmp_path, spark_route, case):
     schema, rows = REJECTED[case]
     df = spark.createDataFrame([(7, "ok", *r) for r in rows], "k long, t string, " + schema)
-    if case == "one-column null":
-        df = df.select(df.columns[-1])
     fast, ref = _both_routes(df, tmp_path)
     assert spark_route == ["r.csv"]
     assert fast == ref
+
+
+def test_edge_whitespace_and_nul_round_trip(spark, tmp_path):
+    """Spark's writer trims characters up to U+0020 at value edges by
+    default; the sink writes them untrimmed, so values read back with
+    matching options are the values written."""
+    values = [" a", "a\t", "\x00a\x00", "  b  ", "plain"]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "k long, s string")
+    out = save_single_csv(df, str(tmp_path / "r"), "r.csv")
+    back = (
+        spark.read.option("header", "true")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .schema("k long, s string")
+        .csv(out)
+    )
+    assert [r.s for r in back.orderBy("k").collect()] == values
+
+
+@pytest.mark.parametrize("spark_writer", [False, True])
+def test_one_column_null_report_raises(spark, tmp_path, spark_writer):
+    """Spark's writer drops the empty line of a one-column null row;
+    both routes refuse the report and name the column instead."""
+    df = spark.createDataFrame([(1,), (None,), (2,)], "x long")
+    write = SPARK_CSV if spark_writer else save_single_csv
+    with pytest.raises(ValueError, match="'x'"):
+        write(df, str(tmp_path / "r"), "r.csv")
+    assert not os.path.exists(tmp_path / "r" / "r.csv")
 
 
 @pytest.mark.parametrize(
